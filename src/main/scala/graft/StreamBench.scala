@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Streaming throughput benchmark (SURVEY §6's missing number): replay a
   * deterministic sensor NDJSON log through the full streaming pipeline —
   * DSv2 [[graft.sources.LineStreamSource]] with admission control →
-  * strict parse → broadcast enrich → rename → idempotent PK-upsert store
+  * strict parse → map-probe enrich → rename → idempotent PK-upsert store
   * — and report end-to-end rows/s plus per-batch latency.
   *
   * The reference's hop-2 ceiling is one synchronous INSERT round-trip

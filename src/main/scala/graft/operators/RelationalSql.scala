@@ -225,11 +225,17 @@ object RelationalSql {
     * the caller registers: `sensor_lines(value STRING)` (NDJSON lines) and
     * `sensor_dim_raw(sensor_id INT, group_id STRING)` (untrimmed CSV).
     * Mirrors parseStrict (strict arity via json_object_keys + all-fields
-    * non-null), enrich (broadcast dim probe), renameToStorage, and
-    * dedupLastWins (max_by over the payload struct by seq). */
+    * non-null), quarantine's clean side (an `inline` generator, so each
+    * line is parsed once, where a WHERE would get the parse inlined into
+    * every predicate), enrich (a sensor_id → group map built once by a
+    * scalar subquery and probed per row, no join; map_from_entries rejects
+    * null and duplicate ids), renameToStorage, and dedupLastWins (max_by
+    * over the payload struct by seq). Unknown ids drop, as in enrich's
+    * drop mode. */
   val q20Sql: String =
     """WITH dim AS (
-      |  SELECT sensor_id, trim(group_id) AS group_id FROM sensor_dim_raw),
+      |  SELECT map_from_entries(collect_list(struct(sensor_id, trim(group_id)))) AS groups
+      |  FROM sensor_dim_raw),
       |parsed AS (
       |  SELECT json_object_keys(value) AS ks,
       |         from_json(value,
@@ -237,15 +243,16 @@ object RelationalSql {
       |           map('timestampFormat', "yyyy-MM-dd'T'HH:mm:ss")) AS r
       |  FROM sensor_lines),
       |clean AS (
-      |  SELECT r.* FROM parsed
-      |  WHERE ks IS NOT NULL AND size(ks) = 11
+      |  SELECT inline(CASE WHEN ks IS NOT NULL AND size(ks) = 11
       |    AND r.id IS NOT NULL AND r.uptime IS NOT NULL AND r.T IS NOT NULL
       |    AND r.P IS NOT NULL AND r.H IS NOT NULL AND r.Ix IS NOT NULL
       |    AND r.Iy IS NOT NULL AND r.Iz IS NOT NULL AND r.M IS NOT NULL
-      |    AND r.time_received IS NOT NULL AND r.seq IS NOT NULL),
+      |    AND r.time_received IS NOT NULL AND r.seq IS NOT NULL THEN array(r) END)
+      |  FROM parsed),
       |enriched AS (
-      |  SELECT /*+ BROADCAST(d) */ d.group_id AS sensor_group, c.*
-      |  FROM clean c JOIN dim d ON c.id = d.sensor_id),
+      |  SELECT * FROM (
+      |    SELECT (SELECT groups FROM dim)[c.id] AS sensor_group, c.* FROM clean c)
+      |  WHERE sensor_group IS NOT NULL),
       |renamed AS (
       |  SELECT sensor_group, time_received, id AS sensor_id, uptime,
       |         T AS temperature, P AS pressure, H AS humidity,

@@ -12,8 +12,9 @@ import org.apache.spark.sql.types._
   * Scale notes: every stage is narrow except the final keyed dedup, which
   * is a single hash aggregation with map-side partial combine (max_by) —
   * strictly cheaper than a window row_number (no per-partition sort, no
-  * full-row shuffle of losers). The dimension join is an explicit
-  * broadcast: the sensor→group table is tiny by contract.
+  * full-row shuffle of losers). Each line is parsed once, and the
+  * sensor→group dimension (tiny by contract) is a hash map built once per
+  * `enrich` call and shipped as a broadcast variable — there is no join.
   */
 object SensorPipeline {
 
@@ -91,25 +92,43 @@ object SensorPipeline {
       .select(wireSchema.fieldNames.map(f => col(s"_rec.$f").as(f)) :+ col("_violation"): _*)
   }
 
-  /** Split a parseStrict output into (clean, deadLetter). */
-  def quarantine(parsed: DataFrame): (DataFrame, DataFrame) =
-    (parsed.filter(col("_violation").isNull).drop("_violation"),
+  /** Split a parseStrict output into (clean, deadLetter). The clean side
+    * is a generator, not a filter: a filter on `_violation` is pushed below
+    * parseStrict's projection with the parse inlined into its condition
+    * (a dozen `from_json` calls per line), while a generator's input is
+    * never substituted, so each clean line is parsed once. `inline` of the
+    * null that the CASE yields for a violation emits no row. */
+  def quarantine(parsed: DataFrame): (DataFrame, DataFrame) = {
+    val fields = parsed.columns.toSeq.filterNot(_ == "_violation").map(col)
+    (parsed.select(inline(when(col("_violation").isNull, array(struct(fields: _*))))),
       parsed.filter(col("_violation").isNotNull))
+  }
 
   /** Dimension-lookup enrichment (reference: mqtt_kafka_producer.py:203-209
-    * — hash-map probe, KeyError on unknown id). Broadcast hash join; in
-    * fail-fast mode an unknown sensor_id raises at execution time, like
-    * the reference. */
+    * — hash-map probe, KeyError on unknown id). The dimension is collected
+    * once per call into a `sensor_id → group` map, validated (no null or
+    * duplicate sensor_id: a map would silently keep one of two groups),
+    * shipped once as a broadcast variable and probed per row, so the plan
+    * holds no join and no per-query broadcast exchange, and its size does
+    * not grow with the dimension. A streaming query therefore sees the
+    * dimension as it was when its plan was built, as the reference's
+    * start-up map does. In fail-fast mode an unknown sensor_id raises at
+    * execution time, like the reference; otherwise the row is dropped. */
   def enrich(readings: DataFrame, dim: DataFrame, failFast: Boolean = true): DataFrame = {
-    val joined = readings.join(broadcast(dim), readings("id") === dim("sensor_id"), "left")
-      .drop("sensor_id")
-      .withColumnRenamed("group_id", "sensor_group")
+    val rows = dim.select(col("sensor_id").cast(IntegerType), col("group_id").cast(StringType))
+      .collect()
+    require(!rows.exists(_.isNullAt(0)), "enrich: dimension contains a null sensor_id")
+    val groups = rows.map(r => r.getInt(0) -> r.getString(1)).toMap
+    require(groups.size == rows.length, "enrich: dimension contains duplicate sensor_id")
+    val shipped = readings.sparkSession.sparkContext.broadcast(groups)
+    val probe = udf((id: Int) => shipped.value.get(id).orNull)
+    val enriched = readings.withColumn("sensor_group", probe(col("id")))
     if (failFast)
-      joined.withColumn("sensor_group",
+      enriched.withColumn("sensor_group",
         when(col("sensor_group").isNull,
           raise_error(concat(lit("unknown sensor id: "), col("id").cast("string"))))
           .otherwise(col("sensor_group")))
-    else joined.filter(col("sensor_group").isNotNull)
+    else enriched.filter(col("sensor_group").isNotNull)
   }
 
   /** Key-rename projection in fixed storage column order (reference:

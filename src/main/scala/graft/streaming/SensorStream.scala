@@ -7,9 +7,11 @@ import graft.pipeline.SensorPipeline
 /** Structured Streaming face of the SIMPSS pipeline (SURVEY.md §7.1 step 4).
   *
   * The batch stages (parseStrict → enrich → renameToStorage) are reused
-  * verbatim on the streaming DataFrame — they are all narrow or
-  * stream-static-broadcast operations, so the incremental planner accepts
-  * them unchanged. The PK upsert (Cassandra's INSERT semantics in the
+  * verbatim on the streaming DataFrame — they are all narrow (the parse is
+  * a projection plus a generator, the dimension probe a per-row map lookup
+  * built once when the query is defined), so the incremental planner
+  * accepts them unchanged and no micro-batch plans a join or a broadcast
+  * exchange. The PK upsert (Cassandra's INSERT semantics in the
   * reference, cassandra_storage.py:88) becomes an idempotent foreachBatch
   * merge: batch-local last-write-wins, then last-write-wins against the
   * store. Re-running a batch (checkpoint replay) converges to the same

@@ -259,11 +259,65 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("q20: sensor pipeline broadcasts the dimension and avoids window sort") {
-    val p = plan("q20_sensor_pipeline")
-    assert(p.contains("BroadcastHashJoin"), s"dim join should broadcast:\n$p")
+  test("q20: sensor pipeline probes the dimension without a join and avoids window sort") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val exec = SparkEntry.queries("q20_sensor_pipeline")(spark, sf("sf0.001"))
+      .queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    val p = exec.toString
+    assert(exec.collect { case j: BaseJoinExec => j }.isEmpty, s"dim lookup should not join:\n$p")
+    assert(exec.collect { case b: BroadcastExchangeExec => b }.isEmpty,
+      s"dim lookup should not plan a broadcast exchange:\n$p")
+    // the dedup exchange hashes on the PK, and nothing beneath it moves
+    // the readings: parse, enrich and rename all run map-side
+    val dedupExchanges = exec.collect {
+      case e @ ShuffleExchangeExec(h: HashPartitioning, _, _, _)
+        if h.expressions.collect { case a: Attribute => a.name }.toSet ==
+          graft.pipeline.SensorPipeline.pkCols.toSet => e
+    }
+    assert(dedupExchanges.size == 1, s"expected one PK-hash dedup exchange:\n$p")
+    assert(dedupExchanges.head.child.collect { case e: Exchange => e }.isEmpty,
+      s"readings are shuffled before the dedup exchange:\n$p")
     assert(p.contains("max_by"), s"dedup should be max_by aggregation:\n$p")
     assert(!p.contains("Window"), s"dedup should not use a window sort:\n$p")
+  }
+
+  test("SensorStream.transform parses each line once and plans no join") {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val lines = MemoryStream[String]
+    val dim = graft.pipeline.SensorPipeline.loadDim(spark, Fixtures.sensorDim)
+    val q = graft.streaming.SensorStream.transform(lines.toDF(), dim)
+      .writeStream.format("noop").start()
+    // the plan of a micro-batch as the stream ran it
+    val optimized =
+      try {
+        lines.addData(scala.io.Source.fromFile(Fixtures.sensorNdjson).getLines().take(50).toSeq)
+        q.processAllAvailable()
+        q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.optimizedPlan
+      } finally q.stop()
+    val p = optimized.toString
+    def calls(matches: Expression => Boolean): Int =
+      optimized.flatMap(_.expressions.flatMap(_.collect { case e if matches(e) => e })).size
+    val fromJson = calls(_.prettyName == "from_json")
+    // json_object_keys is runtime-replaced by a static invoke during optimization
+    val objectKeys = calls {
+      case i: StaticInvoke => i.functionName == "jsonObjectKeys"
+      case e => e.prettyName == "json_object_keys"
+    }
+    assert(fromJson == 1, s"from_json evaluated $fromJson times:\n$p")
+    assert(objectKeys == 1, s"json_object_keys evaluated $objectKeys times:\n$p")
+    assert(optimized.collect { case j: Join => j }.isEmpty, s"transform should not join:\n$p")
   }
 
   test("x19/x20: sampling decisions never read the text column") {

@@ -45,6 +45,21 @@ class SensorPipelineSpec extends SparkSpec {
     assert(enrich(clean, dim, failFast = false).count() == 40)
   }
 
+  test("enrich rejects a dimension with a duplicate or null sensor_id") {
+    import spark.implicits._
+    // a join would fan a duplicate id out into extra rows and a map would
+    // keep one of its groups; enrich refuses both before planning anything
+    val (clean, _) = quarantine(parseStrict(spark.read.text(Fixtures.sensorNdjson)))
+    val dup = Seq((Option(100), "g1"), (Option(101), "g2"), (Option(100), "g3"))
+      .toDF("sensor_id", "group_id")
+    val nul = Seq((Option(100), "g1"), (Option.empty[Int], "g2")).toDF("sensor_id", "group_id")
+    for ((d, why) <- Seq(dup -> "duplicate sensor_id", nul -> "null sensor_id");
+         failFast <- Seq(true, false)) {
+      val e = intercept[IllegalArgumentException](enrich(clean, d, failFast))
+      assert(e.getMessage.contains(why), e.getMessage)
+    }
+  }
+
   test("dedup keeps the record with the highest seq per PK") {
     import spark.implicits._
     val df = Seq(
