@@ -12,9 +12,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * shuffle bytes — the per-query evidence OPTIMIZATION_rN.md cites.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> [q1,q2,...]
-  *        [confK=v;confK2=v2]  (runtime conf overrides, e.g. a feature
-  *        kill-switch, so a "before" plan can be dumped from the same
-  *        tree that carries the change)
+  *        [confK=v;confK2=v2]  (runtime conf overrides)
   * Writes <outDir>/<query>_<suffix>.txt (the formatted plan) and prints
   * one metrics line per query:
   *   [plandump] name=<q> sec=<warm> jobs=<n> stages=<n> tasks=<n>

@@ -30,7 +30,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Concurrency contract: publishes to one path are serialized by an
   * in-process lock (same single-writer discipline as the sensor store's
-  * upsert/compaction lock — all supported writers run on the one driver
+  * upsert lock — all supported writers run on the one driver
   * JVM that owns the artifact). Readers never mutate: an earlier design
   * had the read path call [[recover]], which races an in-flight publish
   * — between the writer's target→aside and staging→target renames a

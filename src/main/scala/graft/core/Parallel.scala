@@ -45,10 +45,6 @@ object Parallel {
     * unavailable). Round-robin (no key): uniform spread, deterministic
     * under task retry (sort-before-repartition, SPARK-23207). */
   def fanOut(df: DataFrame): DataFrame = {
-    // runtime kill-switch so a same-session A/B (graft.AB) and tests can
-    // compare shapes; production default is on
-    if (!df.sparkSession.conf.get("spark.graft.fanout", "true").toBoolean)
-      return df
     val bytes =
       try df.queryExecution.optimizedPlan.stats.sizeInBytes
       catch { case scala.util.control.NonFatal(_) => return df }

@@ -37,8 +37,6 @@ object VectorFunctions {
       lit(0.0),
       (acc, v) => acc + v)
 
-  def l2Norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Cosine similarity; 0.0 for zero-norm inputs (rather than NaN). */
   def cosine(a: Column, b: Column): Column =
     graft.functions.expressions.NativeExpressions.cosineSim(a, b)
@@ -48,14 +46,4 @@ object VectorFunctions {
     val denom = sqrt(dotHof(a, a)) * sqrt(dotHof(b, b))
     when(denom === 0.0, lit(0.0)).otherwise(dotHof(a, b) / denom)
   }
-
-  /** Squared L2 distance (monotone with L2 — cheaper for ranking). */
-  def l2Sq(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = x.cast("double") - y.cast("double")
-        d * d
-      }),
-      lit(0.0),
-      (acc, v) => acc + v)
 }

@@ -71,12 +71,6 @@ object Dedup {
           .otherwise(array().cast("array<string>")))
     }
 
-  /** Distinct character trigrams of a string (for language ID and
-    * character-level near-dup): single-pass via the native shingle
-    * expression over the character array. */
-  def charTrigrams(text: Column): Column =
-    graft.functions.expressions.NativeExpressions.charShingles(text, 3)
-
   // ------------------------------------------- n-gram inverted-index join
 
   /** Shuffle key for a gram: the raw string (cross-engine exact, the
@@ -2672,7 +2666,7 @@ object Dedup {
       .select(col("doc_id"), size(col("w")).cast("long").as("n_tokens"),
         coalesce(size(col("dp")), lit(0)).cast("long").as("n_dropped"),
         md5(concat_ws(" ",
-          filter(col("w"), (t, i) =>
+          filter(col("w"), (_, i) =>
             !graft.functions.expressions.NativeExpressions.sortedArrayContains(
               coalesce(col("dp"), lit(Array.empty[Int])), i)))).as("out_key"))
   }
@@ -2762,7 +2756,7 @@ object Dedup {
       .select(col("doc_id"), size(col("w")).cast("long").as("n_tokens"),
         coalesce(size(col("dp")), lit(0)).cast("long").as("n_dropped"),
         md5(concat_ws(" ",
-          filter(col("w"), (t, i) =>
+          filter(col("w"), (_, i) =>
             !graft.functions.expressions.NativeExpressions.sortedArrayContains(
               coalesce(col("dp"), lit(Array.empty[Int])), i)))).as("out_key"))
   }

@@ -1216,7 +1216,6 @@ object Similarity {
     * shuffle-free map over the corpus. One corpus scan for G, one for
     * the projection. */
   def pcaProjection(emb: DataFrame, iters: Int = PcaIters): DataFrame = {
-    import graft.core.Determinism.dec
     require(iters > 0, s"pcaProjection: iters=$iters")
     // G in FIXED-POINT LONGS: each component becomes its exact
     // DECIMAL(18,4) image scaled to an integer (×10^4, in-row, d ops

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Parallel, Tables}
+import graft.core.Tables
 
 /** Web-corpus preparation stages: URL canonicalization (the key under
   * which crawl dedup and host-level policy actually operate) and

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.pipeline.SensorPipeline
 
@@ -22,22 +22,22 @@ object SensorStream {
 
   /** Per-store writer locks enforcing the documented single-writer
     * contract at runtime: the recovery preamble sweeps EVERY sibling
-    * `<store>._staging_*` dir, so an upsert racing a compaction (or two
-    * compactions) would delete the other writer's live staging
-    * mid-publish. The lock BLOCKS rather than failing fast: both writers
-    * are idempotent and crash-safe, so serializing them is always
-    * correct, and a timer-driven compaction overlapping a micro-batch
-    * trigger must not turn into a StreamingQueryException that kills the
-    * query. Waiting is interruptible: a micro-batch thread parked here
-    * still honors `StreamingQuery.stop()`'s interrupt instead of hanging
-    * shutdown behind a long compaction and then running the upsert for a
+    * `<store>._staging_*` dir, so two upserts racing on one store would
+    * delete each other's live staging mid-publish, and whichever swaps
+    * last would drop the other's update, which its merge never read. The
+    * lock BLOCKS rather than failing fast: upserts are idempotent and
+    * crash-safe, so serializing them is always correct, and a second
+    * writer overlapping a micro-batch trigger must not turn into a
+    * StreamingQueryException that kills the query. Waiting is
+    * interruptible: a micro-batch thread parked here still honors
+    * `StreamingQuery.stop()`'s interrupt instead of hanging shutdown
+    * behind another writer's batch and then running the upsert for a
     * query that is already stopped. No deadlock is possible (one lock,
-    * never nested). All
-    * supported writers run on the one driver JVM that owns the store, so
-    * an in-process lock genuinely enforces the contract there; a second
-    * PROCESS writing the same store is outside the contract and
-    * undetectable offline (a connected deployment's MERGE sink brings
-    * its own transaction layer). */
+    * never nested). All supported writers run on the one driver JVM that
+    * owns the store, so an in-process lock genuinely enforces the
+    * contract there; a second PROCESS writing the same store is outside
+    * the contract and undetectable offline (a connected deployment's
+    * MERGE sink brings its own transaction layer). */
   private val storeLocks =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.locks.ReentrantLock]()
 
@@ -189,15 +189,14 @@ object SensorStream {
     } finally { if (!callerCached) incoming.unpersist() }
   }
 
-  /** Crash recovery for the swap-published store, run by every writer
-    * (upsert batches AND compaction) before touching it: a previous
-    * invocation may have died between a partition's two swap renames,
-    * leaving that partition only under the backup root — restore it
-    * BEFORE reading. Backups of completed swaps are stale and dropped.
-    * Stale staging dirs of ANY name under the `._staging_` prefix are
-    * swept too: a checkpoint reset restarts batch numbering, so a
-    * crashed run may have stranded staging under an id this query will
-    * never reuse. */
+  /** Crash recovery for the swap-published store, run by every upsert
+    * batch before touching it: a previous invocation may have died
+    * between a partition's two swap renames, leaving that partition only
+    * under the backup root — restore it BEFORE reading. Backups of
+    * completed swaps are stale and dropped. Stale staging dirs of ANY
+    * name under the `._staging_` prefix are swept too: a checkpoint reset
+    * restarts batch numbering, so a crashed run may have stranded staging
+    * under an id this query will never reuse. */
   private def recoverStore(storeRoot: java.io.File,
                            backupRoot: java.io.File): Unit = {
     if (backupRoot.exists()) {
@@ -234,148 +233,6 @@ object SensorStream {
       throw new java.io.IOException(s"store publish: cannot publish $staged to $live")
     }
     graft.core.Fs.deleteRecursively(bak)
-  }
-
-  /** Bin-packing compaction for the upsert store. A long-running stream
-    * leaves one file per batch per touched partition, so partition read
-    * cost eventually becomes file-count-bound rather than byte-bound —
-    * the classic small-files problem. A partition is rewritten into
-    * `packed = ceil(bytes/targetBytes)` files when that actually shrinks
-    * it: when it holds more than max(packed, maxFiles) files, or more
-    * than packed files that together still fit one target file. A
-    * partition already at its packed count is terminal even if packed >
-    * maxFiles — so repeated runs are no-ops, publishing through the same
-    * crash-safe stage-and-swap as upsertBatch (including its recovery
-    * preamble). Safe to run between batches of the single writer that
-    * owns the store; untouched partitions are never opened.
-    *
-    * Job shape: every partition that packs into ONE file (the common
-    * case — small fragmented groups) is rewritten by a single Spark job
-    * reading all of them at once (one task-set, not one job per
-    * partition, so 10k fragmented groups don't mean 10k sequential
-    * jobs); partitions needing multiple output files get an individual
-    * coalesce(n) job each. Partition-column type inference is disabled
-    * for the batched read so numeric-looking group names ("01") keep
-    * their directory names, same as the upsert's explicit-schema read.
-    *
-    * Returns the names of the partitions rewritten. */
-  def compactStore(spark: SparkSession, storePath: String,
-                   targetBytes: Long = 128L << 20,
-                   maxFiles: Int = 8): Seq[String] = withStoreLock(storePath) {
-    val storeRoot = new java.io.File(storePath)
-    val backupRoot = new java.io.File(storePath + "._old")
-    // same recovery preamble as the upsert: compaction may be the first
-    // writer to touch a store whose last writer crashed mid-swap, and it
-    // must restore backed-up partitions before listing what to compact
-    recoverStore(storeRoot, backupRoot)
-    val parts = graft.core.Fs.listOrEmpty(storeRoot)
-      .filter(f => f.isDirectory && f.getName.startsWith("sensor_group="))
-    val todo = parts.flatMap { p =>
-      val files = graft.core.Fs.listOrEmpty(p)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      val bytes = files.map(_.length).sum
-      val packed = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-      // rewrite only when packing actually reduces the file count below
-      // what's there now — `packed` files is the floor for this partition,
-      // so a partition already at its packed count is terminal (idempotent
-      // even when packed > maxFiles)
-      if (files.length > math.max(packed, maxFiles) ||
-        (bytes <= targetBytes && files.length > packed))
-        Some((p, packed)) else None
-    }
-    // staging under the upsert sweep's "._staging_" prefix, so a crashed
-    // compaction is cleaned up by the next writer's recovery preamble
-    def stagingFor(name: String) =
-      new java.io.File(storePath + s"._staging_compact_$name")
-    def publish(staging: java.io.File, name: String): Unit = {
-      graft.core.Fs.listOrEmpty(staging)
-        .filter(f => !f.getName.endsWith(".parquet"))
-        .foreach(graft.core.Fs.deleteRecursively)
-      swapIn(storeRoot, backupRoot, staging, name)
-      if (backupRoot.exists()) backupRoot.delete()
-    }
-
-    val (multiFile, singleFile) = todo.partition(_._2 > 1)
-    // one job for every pack-to-one-file partition: read them together
-    // (basePath keeps sensor_group as a column), force one shuffle
-    // partition per group, write one partitioned staging tree, swap each.
-    // The read schema is pinned explicitly — payload schema from one
-    // partition's files plus a STRING sensor_group — the same discipline
-    // as the upsert's read: no partition-type inference, so
-    // numeric-looking group names keep their directory names, and no
-    // session-global conf is touched while other queries may be planning.
-    var leftover = Seq.empty[(java.io.File, Int)]
-    if (singleFile.nonEmpty) {
-      val batchStaging = new java.io.File(storePath + "._staging_compact_batch")
-      graft.core.Fs.deleteRecursively(batchStaging)
-      // the batched read pins one payload schema for every partition it
-      // covers, which would silently null/drop columns in partitions
-      // whose files evolved past the sampled one — so a partition enters
-      // the batched arm only when EVERY ONE of its files carries the
-      // sampled footer schema (within-partition evolution from an
-      // append-ingested store must not slip through on a first-file
-      // sample); everything else routes to the per-partition mergeSchema
-      // arm below. Divergence detection reads raw parquet footers
-      // (MessageType equality, ~1 ms each) on a bounded thread pool
-      // instead of a DataFrameReader resolution per partition, so the
-      // driver pass stays cheap at the 10k-fragmented-partition scale
-      // this arm exists for.
-      val hadoopConf = spark.sessionState.newHadoopConf()
-      def footerSchema(file: java.io.File): org.apache.parquet.schema.MessageType = {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(file.getPath), hadoopConf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getFooter.getFileMetaData.getSchema finally r.close()
-      }
-      def parquets(dir: java.io.File): Seq[java.io.File] =
-        graft.core.Fs.listOrThrow(dir)
-          .filter(f => f.isFile && f.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
-      val sampleFile = parquets(singleFile.head._1).head
-      val sampleFooter = footerSchema(sampleFile)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, Runtime.getRuntime.availableProcessors()))
-      val (batchable, diverged) =
-        try {
-          val checks = singleFile.map { case entry @ (p, _) =>
-            entry -> pool.submit(new java.util.concurrent.Callable[Boolean] {
-              override def call(): Boolean =
-                parquets(p).forall(f => footerSchema(f) == sampleFooter)
-            })
-          }
-          checks.partition(_._2.get()) match {
-            case (ok, bad) => (ok.map(_._1), bad.map(_._1))
-          }
-        } finally pool.shutdown()
-      // pin the Spark schema from the exact file whose footer was
-      // sampled — reading the partition DIR could resolve from a
-      // different file than minBy when the sample partition is mixed
-      val schema = spark.read.parquet(sampleFile.getPath).schema
-        .add("sensor_group", org.apache.spark.sql.types.StringType)
-      spark.read.schema(schema).option("basePath", storePath)
-        .parquet(batchable.map(_._1.getPath): _*)
-        .repartition(org.apache.spark.sql.functions.col("sensor_group"))
-        .write.mode("overwrite").partitionBy("sensor_group")
-        .parquet(batchStaging.getPath)
-      // a group whose files hold zero rows produces no staged dir in a
-      // partitioned write — route it through the per-partition arm below
-      // (a 0-row parquet file is its terminal layout) instead of aborting
-      val (found, missing) = batchable.partition { case (p, _) =>
-        new java.io.File(batchStaging, p.getName).exists() }
-      found.foreach { case (p, _) =>
-        publish(new java.io.File(batchStaging, p.getName), p.getName) }
-      graft.core.Fs.deleteRecursively(batchStaging)
-      leftover = (missing ++ diverged).map { case (p, _) => (p, 1) }.toSeq
-    }
-    (multiFile ++ leftover).foreach { case (p, n) =>
-      val staging = stagingFor(p.getName)
-      graft.core.Fs.deleteRecursively(staging)
-      // mergeSchema: within-partition schema evolution (append-ingested
-      // stores) must union columns, not sample one file's schema
-      spark.read.option("mergeSchema", "true").parquet(p.getPath).coalesce(n)
-        .write.mode("overwrite").parquet(staging.getPath)
-      publish(staging, p.getName)
-    }
-    todo.map(_._1.getName).toSeq
   }
 
   /** Pub/sub fan-out (reference R14: one consumed message → every

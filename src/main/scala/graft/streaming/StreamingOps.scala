@@ -1,12 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StatefulProcessor, TimeMode, TTLConfig}
 
 /** Event-time streaming operators over the sensor stream (SURVEY.md §2.B
-  * streaming rows): watermarks, tumbling/sliding/session windows,
+  * streaming rows): watermarks, tumbling/session windows,
   * watermarked dedup, stream-stream joins, and arbitrary state
   * (flatMapGroupsWithState sessionization). All are standard Structured
   * Streaming constructs — state lives in the engine's state store,
@@ -22,14 +22,6 @@ object StreamingOps {
       .groupBy(window(col("time_received"), width), col("sensor_group"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("window_start"), col("sensor_group"), col("n"))
-
-  /** Sliding window stats. */
-  def slidingStats(records: DataFrame, width: String, slide: String): DataFrame =
-    records
-      .groupBy(window(col("time_received"), width, slide), col("sensor_group"))
-      .agg(count(lit(1)).as("n"), avg(col("temperature")).as("avg_temp"))
-      .select(col("window.start").as("window_start"), col("window.end").as("window_end"),
-        col("sensor_group"), col("n"), col("avg_temp"))
 
   /** Session windows (gap-based); works identically in batch and
     * streaming, which the spec exploits for equivalence. */
@@ -588,7 +580,6 @@ object StreamingOps {
     * face). */
   class QuantileProcessor(k: Int)
     extends StatefulProcessor[String, QuantileEvent, QuantileEstimate] {
-    import graft.functions.expressions.KllOps
     import org.apache.datasketches.kll.KllDoublesSketch
     import org.apache.datasketches.memory.Memory
     @transient private var img: org.apache.spark.sql.streaming.ValueState[Array[Byte]] = _

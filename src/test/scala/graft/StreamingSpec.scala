@@ -143,19 +143,55 @@ class StreamingSpec extends SparkSpec {
 
   test("upsert rewrites only the group partitions present in the batch") {
     val store = java.nio.file.Files.createTempDirectory("pruned").toString + "/store"
+    // start from a store the upsert did not write: four appends leave
+    // alpha fragmented into four files
+    (0 until 4).foreach { i =>
+      Seq(rec("alpha", i, "2024-01-01 00:00:00", 1, temp = 20 + i)).toDF(storageCols: _*)
+        .write.mode("append").partitionBy("sensor_group").parquet(store)
+    }
+    def parquets(group: String): Seq[String] =
+      new java.io.File(s"$store/sensor_group=$group").listFiles()
+        .filter(f => f.isFile && f.getName.endsWith(".parquet")).map(_.getName).toSeq
+    assert(parquets("alpha").size == 4, s"appends did not fragment: ${parquets("alpha")}")
+
     val up = SensorStream.upsertBatch(spark, store) _
     up(Seq(
-      rec("alpha", 1, "2024-01-01 00:00:00", 1),
+      rec("alpha", 1, "2024-01-01 00:00:00", 2, temp = 72),
+      rec("alpha", 1, "2024-01-01 00:00:00", 3, temp = 73), // batch-local winner
+      rec("alpha", 9, "2024-01-01 00:00:00", 1, temp = 29),
       rec("beta", 2, "2024-01-01 00:00:00", 1)).toDF(storageCols: _*), 0L)
     val betaBefore = snapshot(s"$store/sensor_group=beta")
 
     // second batch touches only alpha — beta's files must be untouched
     // (same names, sizes, mtimes, bytes: never rewritten, not just equal)
-    up(Seq(rec("alpha", 1, "2024-01-01 00:01:00", 2)).toDF(storageCols: _*), 1L)
+    up(Seq(
+      rec("alpha", 1, "2024-01-01 00:01:00", 2),
+      rec("alpha", 0, "2024-01-01 00:00:00", 99, temp = 77), // overwrites an appended row
+      rec("alpha", 2, "2024-01-01 00:00:00", 0, temp = 5)    // stale: lower seq than the store's
+    ).toDF(storageCols: _*), 1L)
     assert(snapshot(s"$store/sensor_group=beta") == betaBefore,
       "untouched partition was rewritten")
-    val alpha = spark.read.parquet(store).filter(col("sensor_group") === "alpha")
-    assert(alpha.count() == 2)
+
+    // the invariant that makes a compaction step unnecessary: every
+    // partition an upsert publishes holds exactly one data file
+    val groups = new java.io.File(store).listFiles()
+      .filter(_.getName.startsWith("sensor_group=")).map(_.getName).sorted.toSeq
+    assert(groups == Seq("sensor_group=alpha", "sensor_group=beta"), s"groups: $groups")
+    groups.foreach { g =>
+      val files = parquets(g.stripPrefix("sensor_group="))
+      assert(files.size == 1, s"$g holds ${files.size} parquet files: $files")
+    }
+
+    // content is last-write-wins per (sensor_group, sensor_id, time_received)
+    val got = spark.read.parquet(store)
+      .select("sensor_group", "sensor_id", "time_received", "temperature", "seq")
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getTimestamp(2).toString,
+        r.getInt(3), r.getLong(4))).sorted.toSeq
+    val t0 = "2024-01-01 00:00:00.0"; val t1 = "2024-01-01 00:01:00.0"
+    assert(got == Seq(
+      ("alpha", 0, t0, 77, 99L), ("alpha", 1, t0, 73, 3L), ("alpha", 1, t1, 20, 2L),
+      ("alpha", 2, t0, 22, 1L), ("alpha", 3, t0, 23, 1L), ("alpha", 9, t0, 29, 1L),
+      ("beta", 2, t0, 20, 1L)), s"store is not last-write-wins: $got")
   }
 
   test("numeric-looking group names keep their directory across merges") {
@@ -205,79 +241,6 @@ class StreamingSpec extends SparkSpec {
     assert(row.length == 1)
     assert(row(0).getInt(0) == 50, "stale lower-seq record overwrote the store")
     assert(row(0).getLong(1) == 5L, "store version column must carry the max seq")
-  }
-
-  test("compaction bin-packs fragmented partitions and preserves content") {
-    val store = java.nio.file.Files.createTempDirectory("compact").toString + "/store"
-    // fragmentation comes from the append-based batch-ingest path (the
-    // upsert swap rewrites whole partitions, so it never fragments):
-    // 10 appends leave >= 10 files in alpha and in the numeric-named "01"
-    // group (both pack-to-one, exercising the batched single-job path and
-    // dir-name preservation); beta written once stays whole
-    (0 until 10).foreach { i =>
-      Seq(rec("alpha", i, s"2024-01-01 00:0$i:00", i + 1),
-        rec("01", i, s"2024-01-01 00:0$i:00", i + 1)).toDF(storageCols: _*)
-        .write.mode("append").partitionBy("sensor_group").parquet(store)
-    }
-    Seq(rec("beta", 1, "2024-01-01 00:00:00", 1)).toDF(storageCols: _*)
-      .write.mode("append").partitionBy("sensor_group").parquet(store)
-    def files(p: String): Seq[String] =
-      new java.io.File(s"$store/$p").listFiles()
-        .filter(f => f.isFile && f.getName.endsWith(".parquet")).map(_.getName).toSeq
-    val betaBefore = snapshot(s"$store/sensor_group=beta")
-    val before = spark.read.parquet(store).collect().map(_.toString).sorted.toSeq
-
-    val rewritten = SensorStream.compactStore(spark, store, maxFiles = 2)
-    assert(rewritten.sorted == Seq("sensor_group=01", "sensor_group=alpha"),
-      s"rewrote: $rewritten")
-    assert(files("sensor_group=alpha").size == 1,
-      s"alpha not packed: ${files("sensor_group=alpha")}")
-    assert(files("sensor_group=01").size == 1,
-      "numeric-named group not packed under its original dir name")
-    assert(snapshot(s"$store/sensor_group=beta") == betaBefore,
-      "single-file partition was rewritten")
-    val after = spark.read.parquet(store).collect().map(_.toString).sorted.toSeq
-    assert(after == before, "compaction changed store content")
-    // idempotent: nothing left to do
-    assert(SensorStream.compactStore(spark, store, maxFiles = 2).isEmpty)
-    // the next upsert still merges correctly on the compacted store
-    SensorStream.upsertBatch(spark, store)(
-      Seq(rec("alpha", 0, "2024-01-01 00:00:00", 99, temp = 77)).toDF(storageCols: _*), 11L)
-    val r = spark.read.parquet(store)
-      .filter(col("sensor_group") === "alpha" && col("sensor_id") === 0)
-      .select("temperature").collect()
-    assert(r.map(_.getInt(0)).toSeq == Seq(77))
-  }
-
-  test("compaction packs an over-target partition into multiple files") {
-    val store = java.nio.file.Files.createTempDirectory("compactN").toString + "/store"
-    (0 until 12).foreach { i =>
-      Seq(rec("gamma", i, s"2024-01-01 00:0${i % 10}:0${i / 10}", i + 1))
-        .toDF(storageCols: _*)
-        .write.mode("append").partitionBy("sensor_group").parquet(store)
-    }
-    val dir = new java.io.File(s"$store/sensor_group=gamma")
-    def parquets = dir.listFiles()
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-    val bytes = parquets.map(_.length).sum
-    val before = spark.read.parquet(store).collect().map(_.toString).sorted.toSeq
-    // target half the bytes -> packed = 2 output files via the coalesce arm
-    val target = bytes / 2 + 1
-    val rewritten = SensorStream.compactStore(spark, store, targetBytes = target,
-      maxFiles = 3)
-    assert(rewritten == Seq("sensor_group=gamma"))
-    assert(parquets.length == 2, s"expected 2 packed files, got ${parquets.length}")
-    assert(spark.read.parquet(store).collect().map(_.toString).sorted.toSeq == before)
-    // repacking shrinks the bytes (12 tiny files carried footer overhead),
-    // so the packing floor can legitimately drop further — the contract is
-    // convergence: a bounded number of passes reaches a terminal layout
-    var passes = 0
-    while (SensorStream.compactStore(spark, store, targetBytes = target,
-      maxFiles = 3).nonEmpty) {
-      passes += 1
-      assert(passes <= 2, "compaction did not converge")
-    }
-    assert(spark.read.parquet(store).collect().map(_.toString).sorted.toSeq == before)
   }
 
   test("dynamic topic routing: per-topic dirs equal batch partitionBy across restart") {
@@ -370,9 +333,9 @@ class StreamingSpec extends SparkSpec {
   test("store writers serialize behind the per-store lock") {
     // the recovery preamble sweeps every sibling ._staging_* dir, so a
     // second concurrent writer would have its live staging deleted — the
-    // lock serializes writers instead (both are idempotent, so waiting is
-    // always correct, and a timer-driven compaction overlapping a trigger
-    // must not kill the streaming query with an exception)
+    // lock serializes writers instead (upserts are idempotent, so waiting
+    // is always correct, and a second writer overlapping a trigger must
+    // not kill the streaming query with an exception)
     val store = java.nio.file.Files.createTempDirectory("lock").toString + "/store"
     SensorStream.upsertBatch(spark, store)(
       Seq(rec("alpha", 1, "2024-01-01 00:00:00", 1)).toDF(storageCols: _*), 0L)
@@ -386,6 +349,9 @@ class StreamingSpec extends SparkSpec {
     })
     holder.start()
     held.await()
+    // stand-in staging dir of the "in-flight" writer holding the lock
+    val liveStaging = new java.io.File(store + "._staging_99")
+    assert(liveStaging.mkdirs())
     val done = new java.util.concurrent.atomic.AtomicBoolean(false)
     val writer = new Thread(() => {
       SensorStream.upsertBatch(spark, store)(
@@ -395,105 +361,14 @@ class StreamingSpec extends SparkSpec {
     writer.start()
     Thread.sleep(500)
     assert(!done.get(), "writer proceeded while another writer held the store lock")
+    assert(liveStaging.isDirectory, "blocked writer swept a live writer's staging")
     release.countDown(); holder.join(); writer.join(30000)
     assert(done.get(), "writer did not proceed after the lock was released")
     val rows = spark.read.parquet(store).select("sensor_id").collect().map(_.getInt(0)).sorted
     assert(rows.toSeq == Seq(1, 2), "serialized write lost data")
-    // compactStore must ALSO wait behind the lock: its recovery preamble
-    // sweeps every sibling ._staging_* dir, so running it while another
-    // writer is live would delete that writer's staging mid-publish —
-    // plant a stand-in staging dir for the "in-flight" writer and assert
-    // it survives for as long as the lock is held
-    val held2 = new java.util.concurrent.CountDownLatch(1)
-    val release2 = new java.util.concurrent.CountDownLatch(1)
-    val holder2 = new Thread(() => {
-      SensorStream.storeLock(store).lock()
-      held2.countDown()
-      release2.await()
-      SensorStream.storeLock(store).unlock()
-    })
-    holder2.start()
-    held2.await()
-    val liveStaging = new java.io.File(store + "._staging_99")
-    assert(liveStaging.mkdirs())
-    val compacted = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val compactor = new Thread(() => {
-      SensorStream.compactStore(spark, store, maxFiles = 1)
-      compacted.set(true)
-    })
-    compactor.start()
-    Thread.sleep(500)
-    assert(!compacted.get(), "compaction proceeded while another writer held the store lock")
-    assert(liveStaging.isDirectory, "compaction swept a live writer's staging while blocked")
-    release2.countDown(); holder2.join(); compactor.join(30000)
-    assert(compacted.get(), "compaction did not proceed after the lock was released")
     // once the lock is free the planted dir is orphaned staging, and the
     // recovery preamble is REQUIRED to reclaim it
     assert(!liveStaging.exists(), "orphaned staging was not reclaimed after the lock was released")
-    // and a follow-up writer with no contention proceeds normally
-    assert(SensorStream.compactStore(spark, store).isEmpty)
-  }
-
-  test("batched compaction routes schema-diverged partitions through their own read") {
-    // the single-job arm pins one payload schema for every partition it
-    // covers; a partition whose files evolved past the sampled schema must
-    // be rewritten with its OWN schema, not silently nulled to the sample
-    val store = java.nio.file.Files.createTempDirectory("evolve").toString + "/store"
-    (0 until 3).foreach { i =>
-      Seq(rec("alpha", i, s"2024-01-01 00:0$i:00", i + 1)).toDF(storageCols: _*)
-        .drop("sensor_group")
-        .write.mode("append").parquet(s"$store/sensor_group=alpha")
-      Seq(rec("delta", i, s"2024-01-01 00:0$i:00", i + 1)).toDF(storageCols: _*)
-        .drop("sensor_group").withColumn("extra", lit(i * 10))
-        .write.mode("append").parquet(s"$store/sensor_group=delta")
-    }
-    def read(p: String) = spark.read.parquet(s"$store/sensor_group=$p")
-    val alphaBefore = read("alpha").collect().map(_.toString).sorted.toSeq
-    val deltaBefore = read("delta").collect().map(_.toString).sorted.toSeq
-    val rewritten = SensorStream.compactStore(spark, store, maxFiles = 1)
-    assert(rewritten.sorted == Seq("sensor_group=alpha", "sensor_group=delta"))
-    def files(p: String) = new java.io.File(s"$store/sensor_group=$p").listFiles()
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-    assert(files("alpha").length == 1 && files("delta").length == 1)
-    assert(read("alpha").collect().map(_.toString).sorted.toSeq == alphaBefore)
-    // the evolved partition keeps its extra column and values intact
-    assert(read("delta").columns.contains("extra"))
-    assert(read("delta").collect().map(_.toString).sorted.toSeq == deltaBefore)
-  }
-
-  test("batched compaction detects schema evolution WITHIN one partition") {
-    // an append-ingested partition can hold files of DIFFERENT schemas;
-    // sampling only its first file would classify it batchable and the
-    // pinned-schema rewrite would permanently drop the later files' new
-    // column — the divergence check must inspect every file
-    val store = java.nio.file.Files.createTempDirectory("evolveIn").toString + "/store"
-    (0 until 3).foreach { i =>
-      Seq(rec("alpha", i, s"2024-01-01 00:0$i:00", i + 1)).toDF(storageCols: _*)
-        .drop("sensor_group")
-        .write.mode("append").parquet(s"$store/sensor_group=alpha")
-      val base = Seq(rec("mixed", i, s"2024-01-01 00:0$i:00", i + 1))
-        .toDF(storageCols: _*).drop("sensor_group")
-      // one file keeps the old schema; the others carry an added column
-      (if (i == 0) base else base.withColumn("extra", lit(i * 10)))
-        .write.mode("append").parquet(s"$store/sensor_group=mixed")
-    }
-    def readM(p: String) = spark.read.option("mergeSchema", "true")
-      .parquet(s"$store/sensor_group=$p")
-    def rowsOf(df: org.apache.spark.sql.DataFrame, cols: String*) =
-      df.select(cols.head, cols.tail: _*).collect().map(_.toString).sorted.toSeq
-    val keep = Seq("sensor_id", "seq", "temperature")
-    val alphaBefore = rowsOf(readM("alpha"), keep: _*)
-    val mixedBefore = rowsOf(readM("mixed"), keep :+ "extra": _*)
-    val rewritten = SensorStream.compactStore(spark, store, maxFiles = 1)
-    assert(rewritten.sorted == Seq("sensor_group=alpha", "sensor_group=mixed"))
-    def files(p: String) = new java.io.File(s"$store/sensor_group=$p").listFiles()
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-    assert(files("alpha").length == 1 && files("mixed").length == 1)
-    assert(rowsOf(readM("alpha"), keep: _*) == alphaBefore)
-    // the mixed partition keeps the evolved column: values intact, and
-    // null (not dropped) for the rows written before the column existed
-    assert(readM("mixed").columns.contains("extra"))
-    assert(rowsOf(readM("mixed"), keep :+ "extra": _*) == mixedBefore)
   }
 
   test("pub/sub fan-out delivers each batch to every sink; listener counts rows") {

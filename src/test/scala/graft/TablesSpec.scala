@@ -177,7 +177,7 @@ class TablesSpec extends SparkSpec {
       df.selectExpr("sum(id)", "count(*)").head)
   }
 
-  test("fanOut is identity past the size ceiling (scale no-op) and off-switch") {
+  test("fanOut is identity past the size ceiling (scale no-op)") {
     import graft.core.Parallel
     // Catalyst estimates range at 8 bytes/row: 2^30 rows ≈ 8 GB >> ceiling
     val big = spark.range(0, 1L << 30).toDF()
@@ -187,12 +187,5 @@ class TablesSpec extends SparkSpec {
     val tiny = spark.range(0, 10).toDF()
     assert(Parallel.fanOut(tiny).queryExecution.analyzed
       .sameResult(tiny.queryExecution.analyzed), "tiny input must be untouched")
-    // kill-switch
-    spark.conf.set("spark.graft.fanout", "false")
-    try {
-      val df = spark.range(0, 10000).selectExpr("id", "repeat('x', 64) as t")
-      assert(Parallel.fanOut(df).queryExecution.analyzed
-        .sameResult(df.queryExecution.analyzed), "disabled fanOut must be identity")
-    } finally spark.conf.unset("spark.graft.fanout")
   }
 }
