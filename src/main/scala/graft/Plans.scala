@@ -179,9 +179,9 @@ corpus size. The power iteration runs on the COLLECTED d×d matrix
 (bounded driver collect, the codebook discipline) and the axis returns
 as a 64-literal array, so the emitted projection plan is scan-and-map
 (PlanSpec-gated: one presentation-sort exchange, no Join, no
-HashAggregate). Both SQL twins run the same iteration UNROLLED
-in-engine — the cross-strategy identity is the strongest determinism
-gate on the board.
+HashAggregate). The DuckDB oracle runs the same iteration UNROLLED
+— the cross-strategy identity is the strongest determinism gate on
+the board.
 
 x159 (CCNet buckets): the x67 LM report executes ONCE through the
 bounded cache against its three references; the global (avg_logp,
@@ -190,8 +190,8 @@ no Window carries the rank; the LM body's vocabulary-grain context
 window is the one legitimate Window in the plan).
 
 x160 (data budget): everything after the shared x156 corpus scan is
-K-row arithmetic; both SQL twins reuse the x156 core text verbatim so
-the weight doubles cannot drift between the two faces.
+K-row arithmetic; the DuckDB oracle reuses its x156 core text verbatim
+so the weight doubles cannot drift between the two faces.
 
 ## x158 Gram in fixed-point longs (r15)
 
@@ -202,8 +202,8 @@ board's top cost. The components now scale to exact integers in-row
 vector instead of d²), the hot loop is long·long with a long sum over
 the j ≥ i upper triangle only, and the driver rebuilds
 gv = Σ(li·lj)/10^8 exactly (BigDecimal.valueOf(sum, 8)) before
-mirroring. Value-identical by construction — the SQL twins re-prove it
-by running the full unrolled iteration against the unchanged decimal
+mirroring. Value-identical by construction — the DuckDB oracle re-proves
+it by running the full unrolled iteration against the unchanged decimal
 arithmetic. Declared bound: n·(10^4·|v|max)² < 2^63 (a billion
 unit-normalized vectors clears it; the bound is in the Scaladoc).
 
@@ -230,10 +230,6 @@ trap was precision: λ₁ and every deflated cell re-round through their
 DOUBLE images (scale 6 / scale 8) before re-entering decimal, keeping
 each engine's decimals inside DECIMAL(38) — a direct
 decimal-times-decimal deflation would overflow DuckDB's multiply
-width. The Spark-SQL twin is intentionally absent: the doubled
-unrolled CTE chain re-expands past Spark's CTE analysis budget
-(observed: analyzer stack overflow at default -Xss, then heap
-exhaustion at -Xss64m), while DuckDB's MATERIALIZED stages evaluate
-once — the engine face and the DuckDB oracle remain the cross-check.
+width. The engine face and the DuckDB oracle are the cross-check.
 """
 }

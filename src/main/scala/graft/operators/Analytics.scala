@@ -282,7 +282,7 @@ object Analytics {
           .otherwise(least(greatest(v, col("p_lo")), col("p_hi"))))
   }
 
-  /** x58's clip points, shared with both SQL twins. */
+  /** x58's clip points, shared with the DuckDB oracle. */
   private[graft] val WinsorLo: Double = 0.05
   private[graft] val WinsorHi: Double = 0.95
 
@@ -431,8 +431,8 @@ object Analytics {
     sum(dec(col(valueCol))).over(w).cast("double") / count(dec(col(valueCol))).over(w)
   }
 
-  /** x32's trailing window: 7 days in microseconds — shared with both
-    * SQL twins so the three faces cannot drift. */
+  /** x32's trailing window: 7 days in microseconds — shared with the
+    * DuckDB oracle so the two faces cannot drift. */
   private[graft] val MovingAvgWindowUs: Long = 7L * 86400 * 1000000
 
   /** x32: trailing-7-day moving average of value per user. */
@@ -523,14 +523,14 @@ object Analytics {
     }.reduce(_ unionByName _).orderBy(col("stage"))
   }
 
-  /** Stage label shared by the DataFrame face and both SQL twins:
+  /** Stage label shared by the DataFrame face and the DuckDB oracle:
     * ZERO-PADDED index so the output's ORDER BY stage is the funnel
     * order even past 9 stages (lexicographic "10_" < "2_" otherwise). */
   private[graft] def stageLabel(i: Int, stage: String): String =
     f"${i + 1}%02d_$stage"
 
   /** x34's conversion window (24 h in micros) and stage sequence, shared
-    * with both SQL twins. */
+    * with the DuckDB oracle. */
   private[graft] val FunnelWindowUs: Long = 86400000000L
   private[graft] val FunnelStages: Seq[String] = Seq("view", "click", "purchase")
 
@@ -564,8 +564,8 @@ object Analytics {
     weeklyRetention(Tables.load(spark, dir, "events"), "user_id", "ts")
       .orderBy(col("cohort_week"), col("week_k"))
 
-  /** x33's threshold, shared with both SQL twins. An INTEGER-valued
-    * double: the twins interpolate it into SQL text, and "2.0" parses to
+  /** x33's threshold, shared with the DuckDB oracle. An INTEGER-valued
+    * double: the oracle interpolates it into SQL text, and "2.0" parses to
     * the identical double everywhere. */
   private[graft] val AnomalyK: Double = 2.0
 

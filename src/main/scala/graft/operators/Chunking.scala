@@ -48,7 +48,7 @@ object Chunking {
         array_join(col("_win"), " ").as("chunk"))
   }
 
-  /** x41's window geometry, shared with the SQL twin. */
+  /** x41's window geometry, shared with the DuckDB oracle. */
   private[graft] val ChunkSize: Int = 64
   private[graft] val ChunkStride: Int = 48
 
@@ -62,7 +62,7 @@ object Chunking {
 
   // ------------------------------------ content-defined chunking (x72)
 
-  /** x72's boundary divisor, shared with both SQL twins: a token closes
+  /** x72's boundary divisor, shared with the DuckDB oracle: a token closes
     * a chunk when its hash bucket ≡ 0 (mod 8), so chunks average ~8
     * tokens. */
   private[graft] val CdcDivisor: Int = 8

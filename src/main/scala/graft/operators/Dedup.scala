@@ -1822,7 +1822,7 @@ object Dedup {
     * sort); the neighborhood is an offset explode (j in 1..w-1) and an
     * equi-join on rank — uniform keys by construction; the verify is
     * candidate-pruned exactly like x46. */
-  /** x64's neighborhood width, shared with both SQL twins. */
+  /** x64's neighborhood width, shared with the DuckDB oracle. */
   private[graft] val SnmWindow: Int = 8
 
   def sortedNeighborhoodPairs(docs: DataFrame, w: Int = SnmWindow, n: Int = 3,

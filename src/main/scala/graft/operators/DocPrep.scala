@@ -250,7 +250,7 @@ object DocPrep {
 
   // ------------------------------------- encoding-damage audit (x164)
 
-  /** x164's detector constants, shared with both SQL twins (the x97
+  /** x164's detector constants, shared with the DuckDB oracle (the x97
     * single-source-of-truth discipline; every pattern means the same
     * thing to Java regex and RE2 — char classes only). */
   /** Unicode replacement character — the scar a lossy decode leaves. */
@@ -315,7 +315,7 @@ object DocPrep {
 
   // --------------------------- context-length provisioning (x165)
 
-  /** x165's candidate context lengths, shared with both SQL twins.
+  /** x165's candidate context lengths, shared with the DuckDB oracle.
     * Spans the sf0.01 length distribution (median ≈ 56) so every grid
     * point exercises both loss regimes. */
   private[graft] val ContextGrid: Seq[Long] = Seq(16L, 32L, 64L, 128L)
@@ -451,7 +451,7 @@ object DocPrep {
   // --------------------------- span-corruption audit (x166)
 
   /** x166's span length / corruption rate / hash salt, shared with
-    * both SQL twins. */
+    * the DuckDB oracle. */
   private[graft] val SpanLen: Int = 3
   private[graft] val SpanRate: Double = 0.15
   private[graft] val SpanSalt: String = "t5span"

@@ -37,7 +37,7 @@ object Graph {
     * Headroom: damping numerators stay < 100 * 10^15 < 2^63. */
   val RankUnits: Long = 1000000000000000L
 
-  /** x39's shared constants (Spark face + SQL twins). Damping is a
+  /** x39's shared constants (Spark face + DuckDB oracle). Damping is a
     * PERCENT so the blend stays in integer arithmetic. */
   private[graft] val PageRankIters: Int = 5
   private[graft] val PageRankDampingPct: Int = 85
@@ -164,7 +164,7 @@ object Graph {
       .select(col("id"), coalesce(col("_lr"), lit(isoRanks(iters))).as("rank"))
     // display image: rank units → fraction of total mass. Both factors
     // are < 2^53 so the long→double cast is exact and the single
-    // division correctly rounded — identical in the SQL twin.
+    // division correctly rounded — identical in the DuckDB oracle.
     out.select(col("id"),
       (col("rank").cast("double") / lit(RankUnits.toDouble)).as("rank"))
   }

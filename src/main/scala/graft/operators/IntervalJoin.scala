@@ -228,7 +228,7 @@ object IntervalJoin {
         col("score"))
   }
 
-  /** x59's point filter and bin width, shared with both SQL twins. The
+  /** x59's point filter and bin width, shared with the DuckDB oracle. The
     * synthetic windows span 0..28 days, so a 7-day bin keeps interval
     * replication <= 5 rows. */
   private[graft] val PointQuantityMin: Double = 48.0
@@ -253,7 +253,7 @@ object IntervalJoin {
       .orderBy(col("o_orderkey"))
   }
 
-  /** x61's cut, shared with both SQL twins. */
+  /** x61's cut, shared with the DuckDB oracle. */
   private[graft] val TopKPerInterval: Int = 3
 
   /** pt_key encoding for lineitem points: orderkey * 1000 + linenumber

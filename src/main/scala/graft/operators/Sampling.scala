@@ -548,7 +548,7 @@ object Sampling {
     Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
 
   /** The non-terminal splits with their cumulative upper bounds — the
-    * CASE-chain inputs shared by [[assignSplit]]'s SQL twins (x19 and
+    * CASE-chain inputs shared by [[assignSplit]]'s oracle SQL (x19 and
     * the x69 leakage audit) so the threshold arithmetic has exactly one
     * definition. */
   private[graft] val splitCums: Seq[(String, Double)] = {
@@ -571,8 +571,8 @@ object Sampling {
 
   /** Demo weights TABLE for [[mixWeightedQuery]] (x22): explicit varied
     * weights for the even-numbered sources only — odd sources exercise
-    * the [[weightedMixDefault]] fallback. Shared with both SQL twins so
-    * the three faces cannot drift. */
+    * the [[weightedMixDefault]] fallback. Shared with the DuckDB oracle so
+    * the two faces cannot drift. */
   private[graft] val weightedMixRates: Map[String, Double] =
     (0 until 20 by 2).map(i => s"src$i" -> (0.05 + i * 0.045)).toMap
   private[graft] val weightedMixDefault: Double = 0.6
@@ -608,7 +608,7 @@ object Sampling {
       .select(col("doc_id"), col("source"), col("copy"))
       .orderBy(col("doc_id"), col("copy"))
 
-  /** x26's per-stratum count, shared with both SQL twins. */
+  /** x26's per-stratum count, shared with the DuckDB oracle. */
   private[graft] val StratifiedN: Int = 12
 
   /** x26: exactly 12 docs per source, hash-deterministic. */
@@ -618,7 +618,7 @@ object Sampling {
       .select(col("doc_id"), col("source"))
       .orderBy(col("doc_id"))
 
-  /** x56's per-source token budget, shared with both SQL twins. Cuts
+  /** x56's per-source token budget, shared with the DuckDB oracle. Cuts
     * mid-corpus at sf0.01 (~1.5k tokens/source) and keeps the head slice
     * at sf0.1 (~13k tokens/source). */
   private[graft] val TokenBudgetPerSource: Long = 800L
@@ -716,10 +716,10 @@ object Sampling {
       .select(col("doc_id"), col("source"))
       .orderBy(col("doc_id"))
 
-  /** x40's sample size, shared with the SQL twins. */
+  /** x40's sample size, shared with the DuckDB oracle. */
   private[graft] val WeightedN: Int = 64
 
-  /** x42's per-group sample size, shared with the SQL twins. */
+  /** x42's per-group sample size, shared with the DuckDB oracle. */
   private[graft] val WeightedPerGroupN: Int = 8
 
   /** x42: 8 docs per source, drawn with probability proportional to
@@ -1415,7 +1415,7 @@ object Sampling {
 
   // ------------------------------- DSIR importance weights (x153)
 
-  /** x153's bucket count and hash salt, shared with both SQL twins. 256
+  /** x153's bucket count and hash salt, shared with the DuckDB oracle. 256
     * buckets is the demo setting; real deployments use 10^4..10^5 (the
     * published method hashes n-grams into 10^4 buckets). */
   private[graft] val DsirBuckets: Int = 256
@@ -1575,7 +1575,7 @@ object Sampling {
   // ----------------------------- DoReMi domain reweighting (x156)
 
   /** x156's bucket count, hash salt, step size and smoothing mix,
-    * shared with both SQL twins. */
+    * shared with the DuckDB oracle. */
   private[graft] val DoremiBuckets: Int = 256
   private[graft] val DoremiSalt: String = "doremi"
   private[graft] val DoremiEta: Double = 1.0
@@ -1670,7 +1670,7 @@ object Sampling {
 
   // ------------------------------ data-budget planner (x160)
 
-  /** x160's defaults, shared with both SQL twins: repeat a source at
+  /** x160's defaults, shared with the DuckDB oracle: repeat a source at
     * most [[BudgetEpochCap]] times (the Muennighoff et al. 2023
     * "Scaling Data-Constrained Language Models" finding — value decays
     * past ~4 epochs), and the query face plans for a budget of
@@ -1723,7 +1723,7 @@ object Sampling {
 
   // ---------------------------- CCNet perplexity buckets (x159)
 
-  /** x159's band count, shared with both SQL twins. */
+  /** x159's band count, shared with the DuckDB oracle. */
   private[graft] val CcnetBuckets: Int = 3
 
   /** x159: CCNET PERPLEXITY BUCKETS (Wenzek et al. 2020, "CCNet:

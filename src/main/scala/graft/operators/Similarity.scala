@@ -190,7 +190,7 @@ object Similarity {
     top1(Tables.load(spark, dir, "embeddings"), ColumnBlocking("label"))
       .orderBy(col("vec_id"))
 
-  /** x45's cosine threshold, shared with both SQL twins. Sits just above
+  /** x45's cosine threshold, shared with the DuckDB oracle. Sits just above
     * the corpus's within-label p99 (~0.28), so the pair set is the real
     * near-dup tail, not noise. */
   private[graft] val NearDupThreshold: Double = 0.3
@@ -1136,7 +1136,7 @@ object Similarity {
 
   // --------------------------------------- class-centroid outliers (x73)
 
-  /** x73's per-label cut, shared with the SQL twins. */
+  /** x73's per-label cut, shared with the DuckDB oracle. */
   private[graft] val CentroidOutlierK: Int = 5
 
   /** x73: the bottom-k vectors per label by cosine to their LABEL
@@ -1179,7 +1179,7 @@ object Similarity {
 
   // --------------------------- embedding principal axis (x158)
 
-  /** x158's power-iteration count, shared with both SQL twins. Eight
+  /** x158's power-iteration count, shared with the DuckDB oracle. Eight
     * steps from the uniform start separate PC1 on any spectrum with a
     * non-trivial eigengap; the CONTRACT is "exactly [[PcaIters]] steps",
     * so both engines land on the identical axis whether or not the
@@ -1332,7 +1332,7 @@ object Similarity {
     * deflated cell re-rounds at 8 through the double image
     * (G(24,8) − λ₆·round6(v_i·v_j) is exact at scale 12 and re-enters
     * the iteration as DECIMAL(24,8)) — every inexact step lands where
-    * both SQL twins land it. Deflation is driver-side d×d arithmetic
+    * the DuckDB oracle lands it. Deflation is driver-side d×d arithmetic
     * on the already-collected matrix; the corpus pays nothing beyond
     * x158's one Gram scan plus the one projection map. */
   def pcaProjection2(emb: DataFrame, iters: Int = PcaIters): DataFrame = {

@@ -371,7 +371,7 @@ object TextAnalysis {
       .select(col("_grp"), col("_t.term").as("token"), col("_t.score").as("df"))
   }
 
-  /** x43's k, shared with the SQL twin. */
+  /** x43's k, shared with the DuckDB oracle. */
   private[graft] val TopTermsK: Int = 10
 
   /** x43: the 10 highest-document-frequency tokens per language. Oracle:
@@ -474,7 +474,7 @@ object TextAnalysis {
   }
 
   /** x47's heaviness denominator: bigrams covering >= 1/800 of all
-    * bigram occurrences (shared with the SQL twin and DuckDB oracle). */
+    * bigram occurrences (shared with the DuckDB oracle). */
   private[graft] val HeavyShare: Int = 800
 
   /** x47: exact heavy-hitter word bigrams via the Misra-Gries two-pass
@@ -491,7 +491,7 @@ object TextAnalysis {
 
   // ------------------------------------------------------------- TF-IDF
 
-  /** x48's k, shared with the SQL twin. */
+  /** x48's k, shared with the DuckDB oracle. */
   private[graft] val TfIdfK: Int = 5
 
   /** Per-document top-k TF-IDF terms: the keyword / distinctive-term
@@ -588,7 +588,7 @@ object TextAnalysis {
 
   // ------------------------------------------------- n-gram LM counts
 
-  /** x57's cut, shared with both SQL twins. */
+  /** x57's cut, shared with the DuckDB oracle. */
   private[graft] val NgramLmTopN: Int = 100
 
   /** Bigram language-model count table with Kneser-Ney continuation
@@ -629,7 +629,7 @@ object TextAnalysis {
 
   // --------------------------------------------- vocabulary coverage
 
-  /** x63's vocabulary size, shared with both SQL twins. */
+  /** x63's vocabulary size, shared with the DuckDB oracle. */
   private[graft] val OovVocabN: Int = 50
 
   /** Vocabulary-coverage report: per document, how many tokens fall
@@ -853,7 +853,7 @@ object TextAnalysis {
 
   // --------------------------------------------- PMI collocations
 
-  /** x70's cut and noise floor, shared with both SQL twins. */
+  /** x70's cut and noise floor, shared with the DuckDB oracle. */
   private[graft] val PmiMinCount: Long = 5L
   private[graft] val PmiTopN: Int = 100
 

@@ -182,7 +182,7 @@ object SensorStream {
         storeRoot.mkdirs()
         val staged = graft.core.Fs.listOrThrow(stagingRoot)
           .filter(f => f.isDirectory && f.getName.startsWith("sensor_group="))
-        staged.foreach(sp => swapIn(storeRoot, backupRoot, sp, sp.getName))
+        staged.foreach(swapIn(storeRoot, backupRoot, _))
         graft.core.Fs.deleteRecursively(stagingRoot)
         if (backupRoot.exists()) backupRoot.delete()
       }
@@ -221,9 +221,9 @@ object SensorStream {
     * the partition recoverable (live or backup), which the recovery
     * preamble restores. */
   private def swapIn(storeRoot: java.io.File, backupRoot: java.io.File,
-                     staged: java.io.File, name: String): Unit = {
-    val live = new java.io.File(storeRoot, name)
-    val bak = new java.io.File(backupRoot, name)
+                     staged: java.io.File): Unit = {
+    val live = new java.io.File(storeRoot, staged.getName)
+    val bak = new java.io.File(backupRoot, staged.getName)
     backupRoot.mkdirs()
     graft.core.Fs.deleteRecursively(bak)
     if (live.exists() && !live.renameTo(bak))

@@ -419,8 +419,9 @@ class AnalyticsSpec extends SparkSpec {
       (4L, 2L, "a", t("2024-01-01 10:00:00")),
       (5L, 2L, "a", t("2024-01-01 11:00:00")))
       .toDF("event_id", "user_id", "event_type", "ts")
-    events.createOrReplaceTempView("events")
-    val out = spark.sql(graft.operators.RelationalSql.extrasSql("x75_transitions"))
+    val dir = java.nio.file.Files.createTempDirectory("x75-sf").toString
+    events.write.parquet(s"$dir/events.parquet")
+    val out = Analytics.transitionQuery(spark, dir)
       .as[(String, String, Long, Long)].collect().toSeq
     assert(out == Seq(("a", "a", 1L, 2L), ("a", "b", 1L, 2L), ("b", "a", 1L, 1L)))
     // on the real table: per-from marginal equals the sum of its row

@@ -2262,8 +2262,9 @@ class ExtrasSpec extends SparkSpec {
       (2L, Array(0.9f, 0.1f), 0),
       (3L, Array(0.0f, 1.0f), 0),
       (4L, Array(0.5f, 0.5f), 1)).toDF("vec_id", "embedding", "label")
-    emb.createOrReplaceTempView("embeddings")
-    val out = spark.sql(graft.operators.RelationalSql.extrasSql("x73_centroid_outliers"))
+    val dir = java.nio.file.Files.createTempDirectory("x73-sf").toString
+    emb.write.parquet(s"$dir/embeddings.parquet")
+    val out = graft.operators.Similarity.centroidOutlierQuery(spark, dir)
       .as[(Int, Long, Double, Int)].collect().toSeq
     // centroid(0) = decimal sums (1.9, 1.1); farthest by cosine is vec 3,
     // then 1, then 2; the singleton's cosine to its own direction is 1
@@ -2278,8 +2279,8 @@ class ExtrasSpec extends SparkSpec {
     assert(math.abs(cos(3L) - BigDecimal(c(Array(0.0, 1.0)))
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble) < 1e-9)
     assert(cos(4L) == 1.0)
-    // the DataFrame face agrees on the real table (full twin equality is
-    // SqlSurfaceSpec's job; here: the outlier cut is non-degenerate)
+    // on the real table (exact values are the DuckDB oracle's job; here:
+    // the outlier cut is non-degenerate)
     val real = graft.operators.Similarity.centroidOutlierQuery(spark, sf("sf0.001"))
       .as[(Int, Long, Double, Int)].collect()
     assert(real.nonEmpty && real.forall(_._3 < 1.0))

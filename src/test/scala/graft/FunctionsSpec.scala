@@ -353,6 +353,52 @@ class FunctionsSpec extends SparkSpec {
     // empty set: never contains
     assert(!spark.sql("SELECT sorted_array_contains(array_remove(array(1), 1), 1) AS x")
       .head().getBoolean(0))
+
+    // the vector/shingle/simhash functions by SQL name over a view (not
+    // literals, so the generated code runs rather than constant folding),
+    // each equal to its Column form on the same rows
+    import graft.functions.expressions.{FreqFunctions, NativeExpressions => N}
+    val inputs = Seq(
+      (1L, Array(1.5f, -2.0f, 3.0f), Array(4.0f, 0.5f, -1.0f), Seq("a", "b", "a", "b"), "abcab"),
+      (2L, Array(0.0f, 1.0f, 0.0f), Array(2.0f, 2.0f, 2.0f), Seq("x", "y", "z"), "zz"))
+      .toDF("id", "a", "b", "toks", "text")
+    inputs.createOrReplaceTempView("fn_sql_inputs")
+    val viaSql = spark.sql(
+      """SELECT id, dot_product(a, b), word_shingles_all(toks, 2),
+        |  char_shingles(text, 2), simhash_chunks(toks)
+        |FROM fn_sql_inputs ORDER BY id""".stripMargin).collect().toSeq
+    val viaCol = inputs.select($"id", N.dotProduct($"a", $"b"), N.wordShinglesAll($"toks", 2),
+      N.charShingles($"text", 2), N.simhashChunks($"toks")).orderBy($"id").collect().toSeq
+    assert(viaSql == viaCol)
+    assert(viaSql.head.getDouble(1) == 1.5 * 4.0 - 2.0 * 0.5 - 3.0 * 1.0)
+    assert(viaSql.head.getSeq[String](2) == Seq("a b", "b a", "a b"))
+    assert(viaSql.head.getSeq[String](3).toSet == Set("ab", "bc", "ca"))
+    assert(viaSql(1).getSeq[String](3) == Seq("zz"))
+
+    // frequent-items round trip: per-group sketch -> union -> top items
+    // and stream weight, exact at this size (fewer items than counters)
+    val items = (Seq.fill(5)(("g1", "a")) ++ Seq.fill(3)(("g1", "b")) ++ Seq(("g1", "c")) ++
+      Seq.fill(2)(("g2", "a")) ++ Seq.fill(4)(("g2", "d"))).toDF("g", "item")
+    items.createOrReplaceTempView("fn_sql_items")
+    def topAndWeight(r: org.apache.spark.sql.Row): (Map[String, (Long, Long, Long)], Long) =
+      (r.getSeq[org.apache.spark.sql.Row](0).map(t =>
+        t.getString(0) -> ((t.getLong(1), t.getLong(2), t.getLong(3)))).toMap, r.getLong(1))
+    val freqSql = topAndWeight(spark.sql(
+      """WITH per AS (SELECT g, freq_sketch_agg(item) AS sk FROM fn_sql_items GROUP BY g),
+        |u AS (SELECT freq_union_agg(sk) AS sk FROM per)
+        |SELECT freq_top_items(sk, 0), freq_stream_weight(sk) FROM u""".stripMargin).head())
+    val freqCol = topAndWeight(items.groupBy($"g")
+      .agg(FreqFunctions.freqSketchAgg($"item").as("sk"))
+      .agg(FreqFunctions.freqUnionAgg($"sk").as("sk"))
+      .select(FreqFunctions.freqTopItems($"sk", lit(0L)), FreqFunctions.freqStreamWeight($"sk"))
+      .head())
+    assert(freqSql == freqCol)
+    val exact = Map("a" -> 7L, "b" -> 3L, "c" -> 1L, "d" -> 4L)
+    assert(freqSql._1.map { case (k, (est, _, _)) => k -> est } == exact)
+    freqSql._1.foreach { case (k, (_, lo, hi)) =>
+      assert(lo <= exact(k) && exact(k) <= hi, s"$k: bounds [$lo, $hi] miss ${exact(k)}")
+    }
+    assert(freqSql._2 == exact.values.sum)
   }
 
   test("injected functions report usable arity errors, not raw index failures") {

@@ -9,7 +9,9 @@ import graft.operators.RelationalSql
   * EXACTLY the DataFrame form's result — same column names, same rows,
   * same order. This is the surface a SQL-first user types; equality here
   * proves the two faces share one semantics (both compile to the same
-  * Catalyst plans). */
+  * Catalyst plans). SQL texts exist only for the q-series and Q20; the
+  * x-series extras faces have none, and their values are checked
+  * against the DuckDB oracle SQL (`ExtrasOracle`) instead. */
 class SqlSurfaceSpec extends SparkSpec {
 
   private lazy val dir = sf("sf0.001")
@@ -37,64 +39,6 @@ class SqlSurfaceSpec extends SparkSpec {
     // texts (the as-of twins are correlated lookups — Spark SQL has no
     // ASOF)
     assert(RelationalSql.sql.size == 26, "every relational query needs a SQL twin")
-  }
-
-  test("LLM-pipeline extras: SQL texts (incl. injected shingle fns) equal DataFrame forms") {
-    Tables.registerAll(spark, dir)
-    RelationalSql.extrasSql.toSeq.sortBy(_._1).foreach { case (name, text) =>
-      withClue(name)(assertSame(name, text))
-    }
-    // 28 through x35, plus x36-x48, x50, x52-x53, and x55-x70's
-    // thirty-two twins (x37/x44/x55 sharing x26/x01/x16 texts — one
-    // selection, two physical strategies each; x49's sketch twin is the
-    // dedicated tolerant test below; x51's media decode has no SQL
-    // image; x54's estimates are merge-order-dependent), plus sixteen
-    // r12 texts (x109-x113, x115, x117-x118, x121-x122, x125-x128,
-    // x131-x132 — the URL/markup plants embed page-sized literal
-    // expressions and stay DataFrame-first; x129 has no SQL image),
-    // plus the r11 SQL-friendly trio x84/x93/x108, plus the
-    // twenty-two r13 texts (the plain aggregates x79-x82, x85-x86,
-    // x88-x90, x95-x99, x134-x136, the x137 hybrid-RRF fusion, the
-    // x139 line-dedup rewrite, the x141-x143 training-prep trio, and
-    // the x144 threshold sweep (sharing x46's vpairs CTE), and the
-    // x146 SFT pair extraction —
-    // x141's SQL face is the window form of the engine's distributed
-    // rank; x140's JL floats have no portable SQL image beyond the
-    // registered jl_project function itself), plus the twelve r14
-    // web-prep texts (x102-x104 URL/markup ladders, x107 waterfall,
-    // x114/x116/x123 link-graph family, x119 host reputation, x124
-    // robots gate, x130 snapshot PSI, x138 label propagation, x145
-    // triangles — the planted pages are CTE stages over one shared
-    // canonicalization generator)
-    // plus the r14 quality/curriculum quartet x147-x150, the x151
-    // contamination excision, and the second-wave five (x87/x94/x100/
-    // x105/x120 — previously DataFrame-first, but their DuckDB oracles
-    // proved the semantics portable)
-    // plus x77's zone map, the unrolled deterministic k-means chain
-    // (x78/x83/x92), and x101's closed-form Dawid-Skene round,
-    // plus the r15 trio: x152 per-doc leakage probe, x153 DSIR weights,
-    // x154 within-doc line repetition,
-    // plus the r15 second wave: x155 NB quality classifier, x156
-    // DoReMi reweighting, x157 exact-substring self-excision, and
-    // x158's in-engine unrolled power iteration (the engine face
-    // iterates the collected d×d Gram driver-side — two strategies,
-    // one arithmetic), x159's window-form CCNet bucket rank (the
-    // engine face rides the distributed prefix scan), x160's budget
-    // planner over the shared x156 core, and x161's run-parity window
-    // rewrite (a THIRD strategy beside the engine fold and the DuckDB
-    // windows — all value-identical); x162's deflation chain exceeds
-    // Spark's CTE analysis budget and stays DuckDB-oracle-only,
-    // plus the r16 batch: x163 fused quality panel, x164 encoding
-    // damage, x165 context sweep, x166 span corruption, x168 source
-    // scorecard over the shared panel body, x169 bipartite cross probe (x167's Bradley-Terry
-    // chain re-references each round twice, the x162 doubling class —
-    // DuckDB-oracle-only),
-    // plus the r17 four: x171 sharing x169's text (frozen-index probe
-    // vs union re-mine — two strategies, one selection), x173's
-    // sweep-winner packing, and x177's calibration audit (x170/x174/
-    // x176 join the k-means chain class, x172 the x167 doubling class
-    // — DuckDB-oracle-only)
-    assert(RelationalSql.extrasSql.size == 156)
   }
 
   test("x49: registered kll_* SQL functions answer the sketch rollup") {
