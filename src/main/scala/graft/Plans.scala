@@ -183,8 +183,8 @@ HashAggregate). The DuckDB oracle runs the same iteration UNROLLED
 — the cross-strategy identity is the strongest determinism gate on
 the board.
 
-x159 (CCNet buckets): the x67 LM report executes ONCE through the
-bounded cache against its three references; the global (avg_logp,
+x159 (CCNet buckets): the x67 LM report is read ONCE, by the prefix
+scan (unscored docs ride it in their own group); the global (avg_logp,
 doc_id) rank rides the x150 distributed prefix scan (PlanSpec-gated:
 no Window carries the rank; the LM body's vocabulary-grain context
 window is the one legitimate Window in the plan).
@@ -212,8 +212,8 @@ unit-normalized vectors clears it; the bound is in the Scaladoc).
 Each merge round is one explode→count aggregate (pair keys collapse
 map-side — the key space is alphabet²-ish, independent of corpus
 size), a ONE-ROW TakeOrdered collect (the codebook discipline), and a
-narrow in-row fold rewrite; the rewritten corpus is cut through the
-bounded cache per round so round k never replays rounds 1..k−1. The
+narrow in-row fold rewrite; the rewritten corpus is lineage-cut per
+round so round k never replays rounds 1..k−1. The
 DuckDB oracle runs the SAME leftmost-greedy non-overlapping rewrite as
 run-parity window SQL — equivalence holds because a merged symbol
 a||b can never equal a (b nonempty), so the fold's greedy consume

@@ -32,9 +32,9 @@ object GraftSession {
       // cached edge frame per iteration. Iterative operators (pageRank,
       // connectedComponents) pin their loop-state partitioning
       // explicitly and rely on it being visible across the cache
-      // boundary; the cost is losing AQE re-optimization inside cached
-      // subplans, which the engine's caches (small, explicitly
-      // repartitioned frames) never needed.
+      // boundary (IterUtil.pin); the cost is losing AQE re-optimization
+      // inside cached subplans, which those pinned frames (small,
+      // explicitly repartitioned, released by their loop) never needed.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

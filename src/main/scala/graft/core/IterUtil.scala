@@ -5,7 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Shared machinery for iterative fixpoint operators (connected
   * components, PageRank): per-round lineage cuts so the plan stays
   * constant-size across iterations, prompt freeing of the previous
-  * round's blocks, and idempotent reliable-checkpoint-dir setup for
+  * round's blocks, pinned static frames released by their loop, and
+  * idempotent reliable-checkpoint-dir setup for
   * multi-executor durability (see the durability discussion on
   * [[graft.operators.Dedup.connectedComponents]]).
   */
@@ -71,9 +72,26 @@ object IterUtil {
   /** Free a cut round's blocks. Both checkpoint flavors are eager, so
     * once the NEXT round is cut it no longer reads its predecessor's
     * blocks — safe to unpersist. Must be handed the checkpointed handle
-    * itself (a projection over it would not expose the LogicalRDD). */
+    * itself: anything else (a projection over it, a persisted Dataset)
+    * does not expose the LogicalRDD, and is rejected rather than
+    * silently left alive. */
   def free(df: DataFrame): Unit = df.queryExecution.analyzed match {
     case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-    case _ => ()
+    case other => throw new IllegalArgumentException(
+      s"IterUtil.free: not a checkpoint handle (${other.nodeName})")
   }
+
+  /** Pin a static frame that an iterative loop reads every round: a
+    * plain persist, whose InMemoryRelation keeps the frame's explicit
+    * partitioning visible to the planner (a lineage cut's ExistingRDD
+    * reports Unknown partitioning under AQE, so every round would
+    * re-shuffle it), or a reliable [[cut]] when durability was asked
+    * for. The caller releases it with [[unpin]] in a `finally` once its
+    * last action has run. */
+  def pin(df: DataFrame, reliable: Boolean): DataFrame =
+    if (reliable) cut(df, reliable = true) else df.persist()
+
+  /** Release a frame [[pin]] returned. */
+  def unpin(df: DataFrame, reliable: Boolean): Unit =
+    if (reliable) free(df) else df.unpersist()
 }

@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 
 /** Session extension registering the engine's native expressions under SQL
   * names (usable from spark.sql and via functions.call_function), plus the
-  * whole-operator as-of join (planner strategy + optimizer rules). Wired
+  * whole-operator as-of join (planner strategy + optimizer rules) and the
+  * planner strategy of plan-local subplan sharing. Wired
   * by GraftSession.builder; also usable standalone via
   * spark.sql.extensions=graft.functions.expressions.GraftExtensions. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -121,6 +122,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // whole-operator extension: plans AsOfJoinNode to the merge-scan exec,
     // with optimizer rules so pushdown/pruning don't stop at the node
     e.injectPlannerStrategy(_ => new graft.plans.AsOfJoinStrategy)
+    // plan-local subplan sharing: plans the marker that keeps a shared
+    // CTE from being inlined (graft.plans.Shared)
+    e.injectPlannerStrategy(_ => new graft.plans.SharedDefStrategy)
     e.injectOptimizerRule(_ => new graft.plans.AsOfJoinOptimizations)
   }
 }

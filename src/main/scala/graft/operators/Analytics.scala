@@ -709,18 +709,18 @@ object Analytics {
   def dawidSkeneStep(votes: DataFrame): DataFrame = {
     // first is referenced four ways (vote counts, majority, weights,
     // revote) and majority twice (weights reference + the report join) —
-    // uncached, the vote-dedup pipeline re-executed per reference
+    // unshared, the vote-dedup pipeline re-executed per reference
     // (17 jobs for one EM step; the x79/x95 discipline). Both frames are
-    // item-grain — KBs.
-    val first = graft.core.Caches.bounded(firstVotes(votes))
-    val majority = graft.core.Caches.bounded(majorityOf(first))
+    // item-grain and shared within the returned plan.
+    val first = firstVotes(votes)
+    val majority = majorityOf(first)
     val revote = revoteWith(first,
       weightsAgainst(first, majority.withColumnRenamed("maj_label", "ref_label")))
-    first.groupBy(col("item")).agg(count(lit(1)).as("n_votes"))
+    graft.plans.Shared(first.groupBy(col("item")).agg(count(lit(1)).as("n_votes"))
       .join(majority, Seq("item")).join(revote, Seq("item"))
       .select(col("item"), col("n_votes"), col("maj_label"), col("ds_label"),
         when(col("maj_label") =!= col("ds_label"), 1L).otherwise(0L)
-          .as("flipped"))
+          .as("flipped")), first, majority)
   }
 
   /** First vote per (item, annotator) — min vote_id wins (the shared
@@ -844,14 +844,15 @@ object Analytics {
       .groupBy(col("item"), col("annotator"))
       .agg(min_by(col("label"), col("vote_id")).as("label"))
     // byIl ((item, label) grain) feeds byI AND the il join; il feeds the
-    // Do sum AND the De marginals — uncached, the vote pipeline
+    // Do sum AND the De marginals — unshared, the vote pipeline
     // re-executed once per reference (16 jobs for a 3-aggregate
-    // coefficient). Both are bounded-cached (the x79/x95 discipline).
-    val byIl = graft.core.Caches.bounded(first.groupBy(col("item"), col("label"))
-      .agg(count(lit(1)).as("n_il")))
+    // coefficient). Both are shared within the returned plan (the
+    // x79/x95 discipline).
+    val byIl = first.groupBy(col("item"), col("label"))
+      .agg(count(lit(1)).as("n_il"))
     val byI = byIl.groupBy(col("item")).agg(sum(col("n_il")).as("n_i"))
       .filter(col("n_i") >= 2)
-    val il = graft.core.Caches.bounded(byIl.join(byI, Seq("item")))
+    val il = byIl.join(byI, Seq("item"))
     val doSum = il.select(
         round((col("n_il") * (col("n_i") - col("n_il"))).cast("double")
           / (col("n_i") - 1).cast("double"), 6)
@@ -862,12 +863,13 @@ object Analytics {
         count(lit(1)).as("n_items"))))
       .groupBy(col("n"), col("n_items"))
       .agg(sum(col("n_l") * (col("n") - col("n_l"))).as("de_num"))
-    totals.crossJoin(broadcast(doSum))
+    graft.plans.Shared(totals.crossJoin(broadcast(doSum))
       .select(col("n"), col("n_items"),
         round(lit(1.0d) -
           (col("do_sum").cast("double") / col("n").cast("double")) /
             (col("de_num").cast("double") /
-              (col("n") * (col("n") - 1)).cast("double")), 6).as("alpha"))
+              (col("n") * (col("n") - 1)).cast("double")), 6).as("alpha")),
+      byIl, il)
   }
 
   /** x105's queries() face over x99's synthetic vote frame. */

@@ -172,18 +172,16 @@ object Dedup {
                            hashGrams: Boolean = false,
                            candidateFilter: DataFrame => DataFrame = identity)
       : DataFrame = {
-    // Persist the mined pairs: the frame is referenced twice (the
-    // id-prune semi-join AND the verify join), Catalyst does not dedupe
-    // a multiply-referenced aggregate subtree, and AQE stage reuse only
-    // recovers the shuffled stages — the corpus scan + shingle explode
-    // feeding the first exchange would still run once per reference.
-    // The pair set is small by construction (df-pruned candidates), so
-    // the blocks are KBs; the bounded registry (core.Caches) evicts the
-    // oldest such cache once 16 are alive, so repeated calls in a
-    // long-lived driver never accumulate storage pressure.
-    val cand = graft.core.Caches.bounded(candidateFilter(
+    // Share the mined pairs within the returned plan: the frame is
+    // referenced twice (the id-prune semi-join AND the verify join),
+    // Catalyst does not dedupe a multiply-referenced aggregate subtree,
+    // and AQE stage reuse only recovers the shuffled stages — the corpus
+    // scan + shingle explode feeding the first exchange would still run
+    // once per reference. The pair set is small by construction
+    // (df-pruned candidates), so the shared exchange carries KBs.
+    val cand = candidateFilter(
       ngramCandidatePairs(docs, n, maxDf, minInter, hashGrams)
-        .select(col("d1"), col("d2"))))
+        .select(col("d1"), col("d2")))
     // ONE reference to the candidate aggregate, not two union branches:
     // Catalyst does not dedupe a multiply-referenced aggregate subtree,
     // so cand.select(d1) UNION cand.select(d2) would re-run the whole
@@ -191,7 +189,7 @@ object Dedup {
     val candIds = cand
       .select(explode(array(col("d1"), col("d2"))).as("doc_id")).distinct()
     val sh = shingled(docs.join(candIds, Seq("doc_id"), "left_semi"), n)
-    jaccardVerify(cand, sh, jaccardThreshold)
+    graft.plans.Shared(jaccardVerify(cand, sh, jaccardThreshold), cand)
   }
 
   def verifiedPairsQuery(spark: SparkSession, dir: String): DataFrame =
@@ -272,12 +270,12 @@ object Dedup {
     def plang(k: Column) = concat(lit("zz"), k)
     // The planted projection is referenced once per tier leg downstream
     // (x169's union + its three refIds joins, x174's exact tier, the
-    // verdict assembly, the embeddings split — the before-plan carried
-    // the rewrite 16 times); build it ONCE through the bounded cache so
-    // every leg is a cache read + filter. The registry dedupes by plan,
-    // so the whole acceptance family (x169/x171/x174/x176/x179/x181/
-    // x182) shares one entry.
-    val planted = graft.core.Caches.bounded(docs
+    // verdict assembly, the embeddings split). It is a scan plus a
+    // projection, so each leg re-reads it with its own pruned columns
+    // and pushed filters; sharing it would shuffle the whole documents
+    // table instead. The expensive gram legs built from it are shared
+    // where they are read twice.
+    val planted = docs
       .withColumn("text",
         when(!isRef && col("doc_id") % 23 === 0, ptext(key(23)))
           .when(isRef && col("doc_id") % 11 === 0, ptext(key(11)))
@@ -285,7 +283,7 @@ object Dedup {
       .withColumn("lang",
         when(!isRef && col("doc_id") % 23 === 0, plang(key(23)))
           .when(isRef && col("doc_id") % 11 === 0, plang(key(11)))
-          .otherwise(col("lang"))))
+          .otherwise(col("lang")))
     (planted.filter(!isRef), planted.filter(isRef))
   }
 
@@ -534,10 +532,9 @@ object Dedup {
                         jaccardThreshold: Double = 0.5,
                         hashGrams: Boolean = false): DataFrame = {
     // referenced by the df prune, the pair miner AND the verify recount
-    // — cache once (bounded registry), never three gram explosions
-    val candGrams = graft.core.Caches.bounded(
-      probeGrams(candidates, n, hashGrams)
-        .select(col("doc_id").as("cand_id"), col("lang"), col("gram")))
+    // — shared within the returned plan, never three gram explosions
+    val candGrams = probeGrams(candidates, n, hashGrams)
+      .select(col("doc_id").as("cand_id"), col("lang"), col("gram"))
     val rare = candGrams.groupBy(col("gram")).agg(count(lit(1)).as("_dfc"))
       .join(indexDf.select(col("gram"), col("df").as("_dfr")),
         Seq("gram"), "left")
@@ -551,8 +548,8 @@ object Dedup {
       .agg(count(lit(1)).as("_shared"))
       .filter(col("_shared") >= minInter)
       .select(col("cand_id"), col("ref_id"))
-    verifyAgainstIndex(pairs, candGrams, refGrams, indexSizes,
-      jaccardThreshold)
+    graft.plans.Shared(verifyAgainstIndex(pairs, candGrams, refGrams, indexSizes,
+      jaccardThreshold), candGrams)
   }
 
   /** The exact-Jaccard verify both index probes (x171's delivery-df
@@ -613,12 +610,13 @@ object Dedup {
     * coincide. */
   def crossProbeIncrQuery(spark: SparkSession, dir: String): DataFrame = {
     val (cand, ref) = plantedCrossCorpus(Tables.load(spark, dir, "documents"))
-    val refGrams = graft.core.Caches.bounded(probeGrams(ref, 3, hashGrams = false))
-    crossProbeAgainst(cand, refGrams,
+    // the in-memory index: grams, df and sizes all read one gram frame
+    val refGrams = probeGrams(ref, 3, hashGrams = false)
+    graft.plans.Shared(crossProbeAgainst(cand, refGrams,
         refGrams.groupBy(col("gram")).agg(count(lit(1)).as("df")),
         refGrams.groupBy(col("doc_id")).agg(count(lit(1)).as("n")),
         maxDf = 100)
-      .orderBy(col("cand_id"), col("ref_id"))
+      .orderBy(col("cand_id"), col("ref_id")), refGrams)
   }
 
   // ------------------- delivery acceptance report (x174) --------------
@@ -833,9 +831,10 @@ object Dedup {
     val exact = cands.select(col("doc_id").as("cand_id"), col("text"))
       .join(refTexts, Seq("text"))
       .select(col("cand_id"), col("exact_ref"))
-    val candGrams = graft.core.Caches.bounded(
-      probeGrams(cands, n, hashGrams)
-        .select(col("doc_id").as("cand_id"), col("lang"), col("gram")))
+    // read by the pair miner and the verify recount — shared within the
+    // returned plan
+    val candGrams = probeGrams(cands, n, hashGrams)
+      .select(col("doc_id").as("cand_id"), col("lang"), col("gram"))
     val refGrams = indexGrams
       .select(col("doc_id").as("ref_id"), col("lang"), col("gram"))
     // per-doc rarity: frozen reference df + this doc's own occurrence;
@@ -851,8 +850,8 @@ object Dedup {
         jaccardThreshold)
       .groupBy(col("cand_id"))
       .agg(count(lit(1)).as("n_surface"))
-    acceptanceAssemble(cands.select(col("doc_id").as("cand_id")),
-      exact, surface, sem)
+    graft.plans.Shared(acceptanceAssemble(cands.select(col("doc_id").as("cand_id")),
+      exact, surface, sem), candGrams)
   }
 
   /** [[acceptanceGateAgainst]] over a [[saveAcceptanceIndex]] artifact
@@ -903,16 +902,17 @@ object Dedup {
       .select(col("doc_id").as("vec_id"))
     val refVecs = emb.join(refIds, Seq("vec_id"), "left_semi")
     val candVecs = emb.join(refIds, Seq("vec_id"), "left_anti")
-    val refGrams = graft.core.Caches.bounded(probeGrams(ref, 3, hashGrams = false))
+    // the in-memory index: grams, df and sizes all read one gram frame
+    val refGrams = probeGrams(ref, 3, hashGrams = false)
     val sem = Similarity.crossSemProbe(candVecs, refVecs)
       .select(col("cand_id"), col("n_dups").as("n_sem"))
-    acceptanceGateAgainst(cand,
+    graft.plans.Shared(acceptanceGateAgainst(cand,
         ref.groupBy(col("text")).agg(min(col("doc_id")).as("exact_ref")),
         refGrams,
         refGrams.groupBy(col("gram")).agg(count(lit(1)).as("df")),
         refGrams.groupBy(col("doc_id")).agg(count(lit(1)).as("n")),
         sem, maxDf = 100)
-      .orderBy(col("cand_id"))
+      .orderBy(col("cand_id")), refGrams)
   }
 
   // ------------------ the delivery loop, composed ---------------------
@@ -1071,17 +1071,23 @@ object Dedup {
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), driftRows.schema)
     val shifted =
       rows.headOption.exists(r => r.getLong(r.fieldIndex("rebuild")) == 1L)
-    val report = graft.core.Caches.bounded(
-      acceptanceGateIndexed(delivery, indexPath, n, maxDf, minInter,
-        jaccardThreshold, hashGrams, tau))
-    val admittedIds = report.filter(col("verdict") === "admit")
-      .select(col("cand_id").as("doc_id"))
-    val admitted = delivery.join(admittedIds, Seq("doc_id"), "left_semi")
-    val nAdmitted = admitted.count()
-    // the report lands on disk before any root-swapping maintenance
-    val ledgerGen = appendAcceptanceLedger(report, ledgerPath)
+    // the report is read by the admit count and the ledger write, both
+    // run here; everything after reads the copy the ledger holds, so the
+    // persist is released as soon as the write has landed
+    val report = acceptanceGateIndexed(delivery, indexPath, n, maxDf, minInter,
+        jaccardThreshold, hashGrams, tau).persist()
+    val (nAdmitted, ledgerGen) = try {
+      val admittedIds = report.filter(col("verdict") === "admit")
+        .select(col("cand_id").as("doc_id"))
+      (delivery.join(admittedIds, Seq("doc_id"), "left_semi").count(),
+        // the report lands on disk before any root-swapping maintenance
+        appendAcceptanceLedger(report, ledgerPath))
+    } finally report.unpersist()
     val reportStored = spark.read.parquet(
       s"$ledgerPath/${DeltaIndex.latest(spark, ledgerPath).dirs("reports").last}")
+    val admitted = delivery.join(
+      reportStored.filter(col("verdict") === "admit").select(col("cand_id").as("doc_id")),
+      Seq("doc_id"), "left_semi")
     // an all-rejected delivery must not churn an (empty) battery
     // generation — the report still went to the ledger for the audit
     if (nAdmitted > 0L)
@@ -1142,10 +1148,9 @@ object Dedup {
   }
 
   /** The x181 queries() face: attribution over the planted x174 report
-    * (shared through the bounded cache with x174/x179's faces). */
+    * (read once — one report computation per query). */
   def acceptanceTierQuery(spark: SparkSession, dir: String): DataFrame =
-    acceptanceTierBreakdown(
-        graft.core.Caches.bounded(plantedAcceptanceReport(spark, dir)))
+    acceptanceTierBreakdown(plantedAcceptanceReport(spark, dir))
       .orderBy(col("exact"), col("surface"), col("sem"))
 
   // ------------- ledger x tier attribution (x182) ---------------------
@@ -1249,15 +1254,14 @@ object Dedup {
   }
 
   /** The x182 queries() face: the x179 even/odd split of the planted
-    * x174 report, attributed per tier combination (one report
-    * computation feeds x174/x179/x181/x182 through the bounded-cache
-    * registry). */
+    * x174 report, attributed per tier combination (both halves read one
+    * report computation, shared within the plan). */
   def acceptanceTierShiftQuery(spark: SparkSession, dir: String): DataFrame = {
-    val rep = graft.core.Caches.bounded(plantedAcceptanceReport(spark, dir))
-    acceptanceLedgerTierDiff(
+    val rep = plantedAcceptanceReport(spark, dir)
+    graft.plans.Shared(acceptanceLedgerTierDiff(
         rep.filter(col("cand_id") % 2 === 0),
         rep.filter(col("cand_id") % 2 =!= 0))
-      .orderBy(col("exact"), col("surface"), col("sem"))
+      .orderBy(col("exact"), col("surface"), col("sem")), rep)
   }
 
   // ---------------------- acceptance ledger (x179) --------------------
@@ -1385,15 +1389,15 @@ object Dedup {
 
   /** The x179 queries() face: the planted x174 report split into two
     * deterministic "deliveries" (even vs odd cand_ids — the x106 split
-    * discipline), diffed. One report computation feeds both sides (the
-    * bounded-cache registry), so the face costs one x174 plus 3-row
+    * discipline), diffed. One report computation feeds both sides
+    * (shared within the plan), so the face costs one x174 plus 3-row
     * arithmetic. */
   def acceptanceLedgerQuery(spark: SparkSession, dir: String): DataFrame = {
-    val rep = graft.core.Caches.bounded(plantedAcceptanceReport(spark, dir))
-    acceptanceLedgerDiff(
+    val rep = plantedAcceptanceReport(spark, dir)
+    graft.plans.Shared(acceptanceLedgerDiff(
         rep.filter(col("cand_id") % 2 === 0),
         rep.filter(col("cand_id") % 2 =!= 0))
-      .orderBy(col("verdict"))
+      .orderBy(col("verdict")), rep)
   }
 
   /** x87 acceptance: max-direction containment ≥ ContainNum/ContainDen
@@ -1419,23 +1423,22 @@ object Dedup {
     * counts ride along so a consumer can re-derive either direction. */
   def containmentPairs(docs: DataFrame, n: Int = 3, maxDf: Int = 20,
                        minInter: Int = 2): DataFrame = {
-    // Persisted for the same two-reference reason as
-    // [[verifiedNearDupPairs]], through the same bounded registry.
-    val cand = graft.core.Caches.bounded(
-      ngramCandidatePairs(docs, n, maxDf, minInter)
-        .select(col("d1"), col("d2")))
+    // Shared within the returned plan for the same two-reference reason
+    // as [[verifiedNearDupPairs]].
+    val cand = ngramCandidatePairs(docs, n, maxDf, minInter)
+      .select(col("d1"), col("d2"))
     val candIds = cand
       .select(explode(array(col("d1"), col("d2"))).as("doc_id")).distinct()
     val sh = shingled(docs.join(candIds, Seq("doc_id"), "left_semi"), n)
     val sh1 = sh.select(col("doc_id").as("d1"), col("sh").as("sh1"))
     val sh2 = sh.select(col("doc_id").as("d2"), col("sh").as("sh2"))
-    cand.join(sh1, "d1").join(sh2, "d2")
+    graft.plans.Shared(cand.join(sh1, "d1").join(sh2, "d2")
       .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))))
       .withColumn("n1", size(col("sh1")))
       .withColumn("n2", size(col("sh2")))
       .filter(col("inter") * ContainDen >= least(col("n1"), col("n2")) * ContainNum)
       .select(col("d1"), col("d2"), col("inter").cast("long").as("inter"),
-        col("n1").cast("long").as("n1"), col("n2").cast("long").as("n2"))
+        col("n1").cast("long").as("n1"), col("n2").cast("long").as("n2")), cand)
   }
 
   def containmentQuery(spark: SparkSession, dir: String): DataFrame =
@@ -1582,16 +1585,15 @@ object Dedup {
       .filter((lit(1) + least(col("_na") - col("_pa"), col("_nb") - col("_pb")))
         * lit(1 + t) >= lit(t) * (col("_na") + col("_nb")))
       .select(col("d1"), col("d2"))
-    // the verify must not re-shingle the whole corpus twice: cache the
-    // (pair-bounded) candidate set once and semi-join the corpus down to
-    // candidate ids before the double-referenced shingle subtree runs
-    // (the verifiedNearDupPairs discipline; semantics-free — the verify
-    // joins are inner on candidate ids)
-    val candC = graft.core.Caches.bounded(cand)
-    val candIds = candC
+    // the verify must not re-shingle the whole corpus twice: share the
+    // (pair-bounded) candidate set within the plan and semi-join the
+    // corpus down to candidate ids before the double-referenced shingle
+    // subtree runs (the verifiedNearDupPairs discipline; semantics-free
+    // — the verify joins are inner on candidate ids)
+    val candIds = cand
       .select(explode(array(col("d1"), col("d2"))).as("doc_id")).distinct()
-    jaccardVerify(candC,
-      shingled(docs.join(candIds, Seq("doc_id"), "left_semi"), n), t)
+    graft.plans.Shared(jaccardVerify(cand,
+      shingled(docs.join(candIds, Seq("doc_id"), "left_semi"), n), t), cand)
   }
 
   /** x76: the complete Jaccard-0.5 similarity join over 3-gram shingle
@@ -1828,17 +1830,17 @@ object Dedup {
   def sortedNeighborhoodPairs(docs: DataFrame, w: Int = SnmWindow, n: Int = 3,
                               jaccardThreshold: Double = 0.5): DataFrame = {
     require(w >= 2, s"sortedNeighborhoodPairs: w=$w (need >= 2)")
-    // bounded-cached: the rank frame anchors BOTH sides of the
-    // neighborhood equi-join, and the global range sort behind it is the
-    // operator's expensive leg — recomputing it per reference doubled
-    // the x64 cost (the verifiedNearDupPairs discipline; the cached rows
-    // are (doc_id, rank), 16 bytes each).
-    val ranked = graft.core.Caches.bounded(Sampling.denseIds(
+    // shared within the returned plan: the rank frame anchors BOTH sides
+    // of the neighborhood equi-join, and the global range sort behind it
+    // is the operator's expensive leg — recomputing it per reference
+    // doubled the x64 cost (the verifiedNearDupPairs discipline; the
+    // shared rows are (doc_id, rank), 16 bytes each).
+    val ranked = Sampling.denseIds(
         docs.select(col("doc_id"),
           graft.functions.expressions.NativeExpressions
             .normalizeText(col("text")).as("_sk")),
         Seq(col("_sk"), col("doc_id")), "_rk")
-      .select(col("doc_id"), col("_rk")))
+      .select(col("doc_id"), col("_rk"))
     val cand = ranked.select(col("doc_id").as("_ida"), col("_rk").as("_ra"))
       .withColumn("_j", explode(sequence(lit(1), lit(w - 1))))
       .withColumn("_rb", col("_ra") + col("_j"))
@@ -1849,7 +1851,7 @@ object Dedup {
     // every doc with its rank neighbors, so the candidate id set IS the
     // corpus whenever N >= 2 — the prune was the identity, at the price
     // of computing the whole candidate subtree a second time.
-    jaccardVerify(cand, shingled(docs, n), jaccardThreshold)
+    graft.plans.Shared(jaccardVerify(cand, shingled(docs, n), jaccardThreshold), ranked)
   }
 
   /** x64: SNM-blocked verified near-dup pairs (x46's accept test over
@@ -1983,11 +1985,12 @@ object Dedup {
     // on rank delivers both operands directly — no join back to the
     // text afterwards (the prefix is a bounded 80-char payload, cheaper
     // to shuffle once alongside the rank than to re-attach with two
-    // more doc_id-keyed joins); bounded-cached because both join sides
-    // read it — recomputing the global range sort per reference doubled
-    // the x100 cost (the x64 discipline, rows ≤ 96 bytes each)
-    val ranked = graft.core.Caches.bounded(Sampling.denseIds(keyed,
-      Seq(col("_pfx"), col("doc_id")), "_rk"))
+    // more doc_id-keyed joins); shared within the returned plan because
+    // both join sides read it — recomputing the global range sort per
+    // reference doubled the x100 cost (the x64 discipline, rows ≤ 96
+    // bytes each)
+    val ranked = Sampling.denseIds(keyed,
+      Seq(col("_pfx"), col("doc_id")), "_rk")
     val cand = ranked.select(col("doc_id").as("_ida"),
         col("_pfx").as("_pa"), col("_rk").as("_ra"))
       .withColumn("_j", explode(sequence(lit(1), lit(w - 1))))
@@ -1996,12 +1999,12 @@ object Dedup {
         col("_pfx").as("_pb"), col("_rk").as("_rb")), Seq("_rb"))
     // dist and the accept test are symmetric in (_pa, _pb), so the
     // least/greatest id normalization never has to swap the operands
-    cand.select(least(col("_ida"), col("_idb")).as("d1"),
+    graft.plans.Shared(cand.select(least(col("_ida"), col("_idb")).as("d1"),
         greatest(col("_ida"), col("_idb")).as("d2"),
         levenshtein(col("_pa"), col("_pb")).cast("long").as("dist"),
         when(levenshtein(col("_pa"), col("_pb")) * 10
           <= greatest(length(col("_pa")), length(col("_pb"))), 1L)
-          .otherwise(0L).as("near"))
+          .otherwise(0L).as("near")), ranked)
   }
 
   /** x100: the queries() face — SNM candidates scored with exact
@@ -2059,78 +2062,80 @@ object Dedup {
       graft.core.IterUtil.cut(df, checkpointDir.isDefined)
     def free(df: DataFrame): Unit = graft.core.IterUtil.free(df)
     val p = nodes.sparkSession.sessionState.conf.numShufflePartitions
-    // The edge frame is PINNED to hash(src, p) and persisted through the
-    // bounded registry (local mode) so every round's message join reads
-    // it exchange-free: a lineage cut's ExistingRDD reports Unknown
-    // partitioning under AQE (measured on x39 — each round then
-    // re-shuffles the edges, the LARGEST frame in the loop), while an
-    // InMemoryRelation preserves the pinned partitioning. The reliable
-    // path keeps the durable cut (its per-round edge exchange is the
-    // price of surviving executor loss).
-    def pinStatic(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) cut(df) else graft.core.Caches.bounded(df)
-    val bidir = pinStatic(edges.select(col("src"), col("dst"))
+    // The edge frame is PINNED to hash(src, p) and persisted (local
+    // mode) so every round's message join reads it exchange-free: a
+    // lineage cut's ExistingRDD reports Unknown partitioning under AQE
+    // (measured on x39 — each round then re-shuffles the edges, the
+    // LARGEST frame in the loop), while an InMemoryRelation preserves
+    // the pinned partitioning. The reliable path keeps the durable cut
+    // (its per-round edge exchange is the price of surviving executor
+    // loss). Only the loop's own actions read it; it is released when
+    // the loop ends, converged or not.
+    val reliable = checkpointDir.isDefined
+    val bidir = graft.core.IterUtil.pin(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(p, col("src")))
+      .repartition(p, col("src")), reliable)
     // `cp` is the checkpointed handle of the current round (what free()
     // unpersists — a projection over it would not expose the LogicalRDD);
     // `labels` is the two-column view the joins consume.
-    var cp = cut(bidir.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label")))
-    var labels = cp
     var converged = false
     var iter = 0
-    // ONE hash-min + path-halving round over a label frame: returns
-    // (id, label, changed-this-round). The labels exchange (hash(id)) is
-    // planned once and REUSED by the m-join (identical subtree); the
-    // message aggregation keeps its map-side partial agg below its own
-    // exchange, whose hash(dst, p) output already satisfies `m`'s join
-    // distribution.
-    def round(lbl: DataFrame): DataFrame = {
-      val msgs = bidir.join(lbl, bidir("src") === lbl("id"))
-        .groupBy(col("dst")).agg(min(col("label")).as("nbr"))
-        .withColumnRenamed("dst", "id")
-      val m = lbl.join(msgs, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nbr"), col("label"))).as("label"),
-          (coalesce(col("nbr"), col("label")) < col("label")).as("ch"))
-      m.as("a")
-        .join(m.select(col("id").as("lid"), col("label").as("llabel")).as("b"),
-          col("a.label") === col("b.lid"), "left")
-        .select(col("a.id").as("id"),
-          coalesce(col("b.llabel"), col("a.label")).as("label"),
-          (col("a.ch") ||
-            coalesce(col("b.llabel"), col("a.label")) < col("a.label")).as("changed"))
-    }
-    // Round-20 REJECTED experiment, kept for the record: fusing TWO
-    // rounds into one materialized step (convergence on the second
-    // round's changed flag — sound, a round is a no-op exactly on
-    // fixpoints) was measured at sf0.1 as 73→124 jobs, 2.3→6.2 shuffle
-    // MB, 3.2→7.0 s on x14: round 2 references round 1's output four
-    // ways (two message-join sides, two pointer-jump sides), Catalyst
-    // does not dedupe the multiply-referenced join subtree, and AQE
-    // exchange reuse only recovers the exchanges themselves — the
-    // un-exchanged m-join work above them re-executed per reference.
-    // One materialization per round keeps every round computed once.
-    while (!converged && iter < maxIter) {
-      // LAZY cut + in-round convergence: the max(changed) aggregate is
-      // the action that materializes (and persists) the round, so each
-      // round is ONE computation — one job on the localCheckpoint path;
-      // on the reliable path cutLazy persists before the checkpoint
-      // write so the extra write job reads cache, never recomputes
-      // (VERDICT r5 item 6, ADVICE r6 item 5).
-      val step = graft.core.IterUtil.cutLazy(round(labels), checkpointDir.isDefined)
-      val anyChanged = step.agg(max(col("changed"))).head()
-      converged = anyChanged.isNullAt(0) || !anyChanged.getBoolean(0)
-      free(cp)
-      cp = step
-      labels = step.select(col("id"), col("label"))
-      iter += 1
-    }
+    var labels: DataFrame = null
+    try {
+      var cp = cut(bidir.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("label")))
+      labels = cp
+      // ONE hash-min + path-halving round over a label frame: returns
+      // (id, label, changed-this-round). The labels exchange (hash(id)) is
+      // planned once and REUSED by the m-join (identical subtree); the
+      // message aggregation keeps its map-side partial agg below its own
+      // exchange, whose hash(dst, p) output already satisfies `m`'s join
+      // distribution.
+      def round(lbl: DataFrame): DataFrame = {
+        val msgs = bidir.join(lbl, bidir("src") === lbl("id"))
+          .groupBy(col("dst")).agg(min(col("label")).as("nbr"))
+          .withColumnRenamed("dst", "id")
+        val m = lbl.join(msgs, Seq("id"), "left")
+          .select(col("id"),
+            least(col("label"), coalesce(col("nbr"), col("label"))).as("label"),
+            (coalesce(col("nbr"), col("label")) < col("label")).as("ch"))
+        m.as("a")
+          .join(m.select(col("id").as("lid"), col("label").as("llabel")).as("b"),
+            col("a.label") === col("b.lid"), "left")
+          .select(col("a.id").as("id"),
+            coalesce(col("b.llabel"), col("a.label")).as("label"),
+            (col("a.ch") ||
+              coalesce(col("b.llabel"), col("a.label")) < col("a.label")).as("changed"))
+      }
+      // Round-20 REJECTED experiment, kept for the record: fusing TWO
+      // rounds into one materialized step (convergence on the second
+      // round's changed flag — sound, a round is a no-op exactly on
+      // fixpoints) was measured at sf0.1 as 73→124 jobs, 2.3→6.2 shuffle
+      // MB, 3.2→7.0 s on x14: round 2 references round 1's output four
+      // ways (two message-join sides, two pointer-jump sides), Catalyst
+      // does not dedupe the multiply-referenced join subtree, and AQE
+      // exchange reuse only recovers the exchanges themselves — the
+      // un-exchanged m-join work above them re-executed per reference.
+      // One materialization per round keeps every round computed once.
+      while (!converged && iter < maxIter) {
+        // LAZY cut + in-round convergence: the max(changed) aggregate is
+        // the action that materializes (and persists) the round, so each
+        // round is ONE computation — one job on the localCheckpoint path;
+        // on the reliable path cutLazy persists before the checkpoint
+        // write so the extra write job reads cache, never recomputes
+        // (VERDICT r5 item 6, ADVICE r6 item 5).
+        val step = graft.core.IterUtil.cutLazy(round(labels), checkpointDir.isDefined)
+        val anyChanged = step.agg(max(col("changed"))).head()
+        converged = anyChanged.isNullAt(0) || !anyChanged.getBoolean(0)
+        free(cp)
+        cp = step
+        labels = step.select(col("id"), col("label"))
+        iter += 1
+      }
+    } finally graft.core.IterUtil.unpin(bidir, reliable) // the result reads only the final labels
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds")
-    free(bidir) // the result only reads the final labels, not the edges
     val out = nodes.select(col("id"))
       .join(labels.withColumnRenamed("label", "edge_label"), Seq("id"), "left")
       .select(col("id"), coalesce(col("edge_label"), col("id")).as("label"))
@@ -2256,12 +2261,13 @@ object Dedup {
     // at every scale (at 100 TB the planner picks SMJ anyway; the hint
     // only removes the local-mode double build).
     val buckets = minhashBuckets(docs, n, bands, rowsPerBand).hint("merge")
-    val cand = graft.core.Caches.bounded(
-      buckets.as("a").join(buckets.as("b"),
+    // the candidate pairs feed the id prune AND the verify join — shared
+    // within the returned plan
+    val cand = buckets.as("a").join(buckets.as("b"),
           col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig") &&
             col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-        .distinct())
+        .distinct()
     // prune the corpus to candidate ids BEFORE the verify re-shingles it
     // (the verifiedNearDupPairs discipline): the exact-Jaccard join only
     // ever keeps candidate ids, so the semi-join is semantics-free and
@@ -2269,9 +2275,9 @@ object Dedup {
     // O(corpus)
     val candIds = cand
       .select(explode(array(col("d1"), col("d2"))).as("doc_id")).distinct()
-    jaccardVerify(cand,
+    graft.plans.Shared(jaccardVerify(cand,
       shingled(docs.join(candIds, Seq("doc_id"), "left_semi"), n),
-      jaccardThreshold)
+      jaccardThreshold), cand)
   }
 
   /** Incremental near-dup: pairs of a NEW batch against an already-
@@ -2716,13 +2722,13 @@ object Dedup {
     // plan (the occurrence explode feeds both the dup aggregate's build
     // side and the join-back probe side, and the final reassembly joins
     // it again) and Catalyst does not dedupe multiply-referenced
-    // subtrees — without the bounded cache the corpus scan + tokenize
-    // ran three times per action (plan-verified: 3 parquet scans). At
-    // 100 TB this projection is materialized once per release (the
-    // saveRepeatedSpanSet artifact discipline), not recomputed per leg.
-    val cand = graft.core.Caches.bounded(
-      docs.filter(col("text").isNotNull)
-        .select(col("doc_id"), TextAnalysis.wsTokens(col("text")).as("w")))
+    // subtrees — unshared, the corpus scan + tokenize ran three times
+    // per action (plan-verified: 3 parquet scans); it is shared within
+    // the returned plan. At 100 TB this projection is materialized once
+    // per release (the saveRepeatedSpanSet artifact discipline), not
+    // recomputed per leg.
+    val cand = docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), TextAnalysis.wsTokens(col("text")).as("w"))
     val occ = cand
       .select(col("doc_id"), posexplode(
         graft.functions.expressions.NativeExpressions
@@ -2752,13 +2758,14 @@ object Dedup {
         explode(sequence(col("g"), col("g") + (k - 1))).as("p"))
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_set(col("p"))).as("dp"))
-    cand.join(dropped, Seq("doc_id"), "left")
+    graft.plans.Shared(cand.join(dropped, Seq("doc_id"), "left")
       .select(col("doc_id"), size(col("w")).cast("long").as("n_tokens"),
         coalesce(size(col("dp")), lit(0)).cast("long").as("n_dropped"),
         md5(concat_ws(" ",
           filter(col("w"), (_, i) =>
             !graft.functions.expressions.NativeExpressions.sortedArrayContains(
-              coalesce(col("dp"), lit(Array.empty[Int])), i)))).as("out_key"))
+              coalesce(col("dp"), lit(Array.empty[Int])), i)))).as("out_key")),
+      cand)
   }
 
   def selfExciseQuery(spark: SparkSession, dir: String): DataFrame =

@@ -95,67 +95,81 @@ object Graph {
     // so its output co-partitions with the rank state for the next
     // round); the dangling mass is a driver-side Long recurrence instead
     // of a per-round aggregate + broadcast cross join. The whole
-    // fixed-iteration loop is ONE dataflow plan — no per-round
-    // checkpoint materialization jobs (a cut every [[UnrollCutEvery]]
-    // rounds bounds plan depth for long runs; the default 5 stays
-    // uncut).
-    // The static frames persist through the bounded registry, NOT a
-    // lineage cut: a checkpoint's ExistingRDD scan reports
-    // UnknownPartitioning under AQE (measured — every loop reference
-    // then re-exchanges), while InMemoryRelation preserves the cached
-    // plan's pinned partitioning, which is the whole point here. On the
-    // reliable-checkpoint path durability wins and the cut stays.
-    def pinStatic(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) cut(df) else graft.core.Caches.bounded(df)
-    // the (possibly expensive) edge plan is computed exactly ONCE: deg
-    // and bidirDeg both derive from this cache, exchange-free (their
-    // grouping/join keys match the pinned partitioning)
-    val bidir = pinStatic(edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(p, col("src")))
-    val deg = bidir.groupBy(col("src").as("vid"))
-      .agg(count(lit(1)).as("deg"))
-    val bidirDeg = pinStatic(bidir.join(deg, col("src") === col("vid"))
-      .select(col("src"), col("dst"), col("deg")))
-    // non-isolated vertex list, co-partitioned with bidirDeg (hash(vid,p))
-    val nonIso = pinStatic(deg.select(col("vid").as("id")))
-
-    val n = vertices.count()
-    require(n > 0, "pageRank: empty vertex set")
-    val nNonIso = nonIso.count()
-    val nIso = n - nNonIso
-    val unit = RankUnits / n
-    val base = ((100L - dampingPct) * unit) / 100L
-
-    // Driver-side recurrence for the isolated ranks: every isolated
-    // vertex starts at `unit` and receives no messages, so all stay
-    // EQUAL and the dangling mass each round is exactly nIso * isoRank —
-    // the same Long arithmetic the in-plan aggregate performed, now two
-    // scalars per round. isoRank(t+1) = base + (d * (ds div n)) div 100.
-    val isoRanks = new Array[Long](iters + 1)
-    isoRanks(0) = unit
-    for (t <- 0 until iters)
-      isoRanks(t + 1) =
-        base + (dampingPct * ((nIso * isoRanks(t)) / n)) / 100L
-
-    var ranks = nonIso.select(col("id"), lit(unit).as("rank"))
-    for (t <- 0 until iters) {
-      val dsOverN = (nIso * isoRanks(t)) / n
-      // the aggregation keeps its map-side partial sum below its own
-      // exchange; the exchange's hash(mid, p) output already satisfies
-      // the rank join's distribution, so each iteration's ONLY shuffle
-      // carries per-(partition, dst) partial sums
-      val msgs = bidirDeg.join(ranks, col("src") === col("id"))
-        .select(col("dst").as("mid"), expr("rank div deg").as("c"))
-        .groupBy(col("mid")).agg(sum(col("c")).as("msg"))
-      ranks = nonIso
-        .join(msgs, col("id") === col("mid"), "left")
-        .select(col("id"), expr(
-          s"$base + (($dampingPct * ($dsOverN + coalesce(msg, 0L))) div 100)")
-          .as("rank"))
-      if ((t + 1) % UnrollCutEvery == 0 && t + 1 < iters)
-        ranks = cut(ranks)
+    // fixed-iteration loop is ONE dataflow plan (a cut every
+    // [[UnrollCutEvery]] rounds bounds plan depth for long runs; the
+    // default 5 stays uncut), materialized by one final cut while the
+    // static frames are still pinned.
+    // The static frames are pinned (IterUtil.pin), NOT lineage-cut: a
+    // checkpoint's ExistingRDD scan reports UnknownPartitioning under
+    // AQE (measured — every loop reference then re-exchanges), while
+    // InMemoryRelation preserves the cached plan's pinned partitioning,
+    // which is the whole point here. On the reliable-checkpoint path
+    // durability wins and the cut stays. Only this method's actions
+    // read them, and they are released before it returns.
+    val reliable = checkpointDir.isDefined
+    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def pinStatic(df: DataFrame): DataFrame = {
+      val p = IterUtil.pin(df, reliable)
+      pinned += p
+      p
     }
+    val isoRanks = new Array[Long](iters + 1)
+    val ranks = try {
+      // the (possibly expensive) edge plan is computed exactly ONCE: deg
+      // and bidirDeg both derive from this pin, exchange-free (their
+      // grouping/join keys match the pinned partitioning)
+      val bidir = pinStatic(edges.select(col("src"), col("dst"))
+        .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+        .repartition(p, col("src")))
+      val deg = bidir.groupBy(col("src").as("vid"))
+        .agg(count(lit(1)).as("deg"))
+      val bidirDeg = pinStatic(bidir.join(deg, col("src") === col("vid"))
+        .select(col("src"), col("dst"), col("deg")))
+      // non-isolated vertex list, co-partitioned with bidirDeg (hash(vid,p))
+      val nonIso = pinStatic(deg.select(col("vid").as("id")))
+
+      val n = vertices.count()
+      require(n > 0, "pageRank: empty vertex set")
+      val nNonIso = nonIso.count()
+      val nIso = n - nNonIso
+      val unit = RankUnits / n
+      val base = ((100L - dampingPct) * unit) / 100L
+
+      // Driver-side recurrence for the isolated ranks: every isolated
+      // vertex starts at `unit` and receives no messages, so all stay
+      // EQUAL and the dangling mass each round is exactly nIso * isoRank —
+      // the same Long arithmetic the in-plan aggregate performed, now two
+      // scalars per round. isoRank(t+1) = base + (d * (ds div n)) div 100.
+      isoRanks(0) = unit
+      for (t <- 0 until iters)
+        isoRanks(t + 1) =
+          base + (dampingPct * ((nIso * isoRanks(t)) / n)) / 100L
+
+      var ranks = nonIso.select(col("id"), lit(unit).as("rank"))
+      val cuts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      for (t <- 0 until iters) {
+        val dsOverN = (nIso * isoRanks(t)) / n
+        // the aggregation keeps its map-side partial sum below its own
+        // exchange; the exchange's hash(mid, p) output already satisfies
+        // the rank join's distribution, so each iteration's ONLY shuffle
+        // carries per-(partition, dst) partial sums
+        val msgs = bidirDeg.join(ranks, col("src") === col("id"))
+          .select(col("dst").as("mid"), expr("rank div deg").as("c"))
+          .groupBy(col("mid")).agg(sum(col("c")).as("msg"))
+        ranks = nonIso
+          .join(msgs, col("id") === col("mid"), "left")
+          .select(col("id"), expr(
+            s"$base + (($dampingPct * ($dsOverN + coalesce(msg, 0L))) div 100)")
+            .as("rank"))
+        if ((t + 1) % UnrollCutEvery == 0 && t + 1 < iters) {
+          ranks = cut(ranks)
+          cuts += ranks
+        }
+      }
+      val last = cut(ranks)
+      cuts.foreach(IterUtil.free)
+      last
+    } finally pinned.foreach(IterUtil.unpin(_, reliable))
     // isolated vertices re-enter with the closed-form final rank; the
     // left join keeps every vertex exactly once (loop ranks cover the
     // non-isolated set by construction).

@@ -235,13 +235,8 @@ object Sampling {
     *
     * Cost honesty: the shuffle WRITE happens once, but the post-shuffle
     * in-partition sort runs in BOTH jobs (the count job must drain the
-    * sorted iterator; nothing caches between jobs by default). Pass
-    * `persist = true` to cache the sorted rows (memory-and-disk) across
-    * the two passes — trades a corpus-sized spill for the second sort;
-    * the caller owns unpersisting via the returned frame's lineage being
-    * consumed (`spark.sharedState.cacheManager` or just letting the
-    * executors evict). At 100 TB prefer persist=false (re-sort is CPU
-    * only) unless the order keys are expensive to compare.
+    * sorted iterator; nothing is cached between the jobs — re-sorting is
+    * CPU only, where caching would hold a corpus-sized copy).
     *
     * Contract: `order` must be a TOTAL order (unique tie-breaker last) —
     * with ties the ids within a tie group fall back to partition order,
@@ -254,15 +249,13 @@ object Sampling {
     * sort". Cost at 100 TB: one range shuffle + one O(partitions) count
     * job — vs. the window form's one-partition sort of the entire corpus. */
   def denseIds(df: DataFrame, order: Seq[Column], idCol: String = "dense_id",
-               numPartitions: Int = 0, persist: Boolean = false): DataFrame = {
+               numPartitions: Int = 0): DataFrame = {
     require(order.nonEmpty, "denseIds: at least one order column required")
     val spark = df.sparkSession
     val p = if (numPartitions > 0) numPartitions
             else spark.sessionState.conf.numShufflePartitions
     val sorted = df.repartitionByRange(p, order: _*).sortWithinPartitions(order: _*)
-    val base = if (persist)
-      sorted.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    else sorted.rdd
+    val base = sorted.rdd
     val schema = org.apache.spark.sql.types.StructType(sorted.schema.fields :+
       org.apache.spark.sql.types.StructField(idCol,
         org.apache.spark.sql.types.LongType, nullable = false))
@@ -293,7 +286,16 @@ object Sampling {
     * Result is spec-asserted identical to the window form. */
   def prefixSum(df: DataFrame, group: Seq[String], order: Seq[Column],
                 valueCol: String, outCol: String = "cum",
-                numPartitions: Int = 0): DataFrame = {
+                numPartitions: Int = 0): DataFrame =
+    prefixScan(df, group, order, valueCol, outCol, numPartitions)._1
+
+  /** [[prefixSum]] plus each group's total (keyed by the group values in
+    * `group` order) — the driver already holds them after job 1, so a
+    * caller that needs per-group sizes next to the running sums reads
+    * them here instead of aggregating its input a second time. */
+  private[graft] def prefixScan(df: DataFrame, group: Seq[String], order: Seq[Column],
+                                valueCol: String, outCol: String,
+                                numPartitions: Int): (DataFrame, Map[List[Any], Long]) = {
     require(order.nonEmpty, "prefixSum: at least one order column required")
     val spark = df.sparkSession
     val p = if (numPartitions > 0) numPartitions
@@ -338,7 +340,8 @@ object Sampling {
         org.apache.spark.sql.Row.fromSeq(r.toSeq :+ cum)
       }
     }
-    spark.createDataFrame(rdd, outSchema)
+    val groupTotals = totals.groupMapReduce(_._2)(_._3)(_ + _)
+    (spark.createDataFrame(rdd, outSchema), groupTotals)
   }
 
   /** Per-group 1-based row_number over a total (`group`, `order`) order —
@@ -1248,18 +1251,18 @@ object Sampling {
   def splitGramLeakage(docs: DataFrame, n: Int = LeakGramN): DataFrame = {
     // The distinct (split, gram) set is referenced THREE times (the
     // per-split sizes plus both self-join legs) and Catalyst does not
-    // dedupe a multiply-referenced aggregate subtree — cache it once
-    // through the bounded registry so the scan+explode+distinct
+    // dedupe a multiply-referenced aggregate subtree — shared within the
+    // returned plan (graft.plans.Shared) so the scan+explode+distinct
     // pipeline runs once, not three times. Grams are carried as
     // xxhash64 keys exactly like the persisted [[saveLeakageIndex]]
     // face (count-identical up to 2^-64 collisions, round-trip
-    // spec-asserted): the cache holds 8-byte keys instead of gram text
-    // and the self-join shuffles keys, never text. At 100 TB this set
-    // is the persisted parquet artifact, not an in-memory cache.
-    leakageGrid(graft.core.Caches.bounded(
-      distinctSplitGrams(docs, n)
-        .select(col("split"), xxhash64(col("gram")).as("gram"))
-        .distinct()))
+    // spec-asserted): the shared exchange carries 8-byte keys instead
+    // of gram text and the self-join shuffles keys, never text. At
+    // 100 TB this set is the persisted parquet artifact.
+    val g = distinctSplitGrams(docs, n)
+      .select(col("split"), xxhash64(col("gram")).as("gram"))
+      .distinct()
+    graft.plans.Shared(leakageGrid(g), g)
   }
 
   /** The (split, gram) grain both x149 faces share: every document's
@@ -1388,7 +1391,7 @@ object Sampling {
     *
     * Shape: the probe grams and the split gram index are BOTH views of
     * one exploded (doc_id, own_split, gram-hash) frame — built once
-    * through the bounded cache instead of running the corpus scan +
+    * and shared within the plan instead of running the corpus scan +
     * shingle explode twice (plan-verified: 2 parquet scans before, and
     * the probe leg's whole explode was the broadcast build side). The
     * doc's own split rides along as a column, so the exclusion filter
@@ -1399,18 +1402,17 @@ object Sampling {
     * both sides come from the same corpus read. */
   def leakProbeQuery(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val base = graft.core.Caches.bounded(
-      docs.select(col("doc_id"),
+    val base = docs.select(col("doc_id"),
           assignSplit(col("doc_id"), "graft", splitFractions).as("own_split"),
           explode(Dedup.wordShingles(col("text"), LeakGramN)).as("gram"))
-        .select(col("doc_id"), col("own_split"), xxhash64(col("gram")).as("gram")))
+        .select(col("doc_id"), col("own_split"), xxhash64(col("gram")).as("gram"))
     val index = base.select(col("own_split").as("split"), col("gram")).distinct()
-    base.select(col("doc_id"), col("own_split"), col("gram"))
+    graft.plans.Shared(base.select(col("doc_id"), col("own_split"), col("gram"))
       .join(index, Seq("gram"))
       .filter(col("split") =!= col("own_split"))
       .groupBy(col("doc_id"), col("split"))
       .agg(count(lit(1)).as("shared_grams"))
-      .orderBy(col("doc_id"), col("split"))
+      .orderBy(col("doc_id"), col("split")), base)
   }
 
   // ------------------------------- DSIR importance weights (x153)
@@ -1483,24 +1485,22 @@ object Sampling {
                          buckets: Int): DataFrame = {
     val b = lit(buckets.toLong)
     // both ≤ B-row marginals are referenced twice (their total aggregate
-    // AND the λ join) — bounded-cached so the corpus explode pipelines
-    // behind them run once per invocation, not once per reference (the
-    // x79/x95 discipline; Catalyst does not dedupe a multiply-referenced
-    // aggregate subtree)
-    val rcC = graft.core.Caches.bounded(rc)
-    val tc = graft.core.Caches.bounded(
-      tokenBuckets(target, buckets).groupBy(col("b"))
-        .agg(count(lit(1)).as("tc")))
+    // AND the λ join) — shared within the returned plan so the corpus
+    // explode pipelines behind them run once per action, not once per
+    // reference (the x79/x95 discipline; Catalyst does not dedupe a
+    // multiply-referenced aggregate subtree)
+    val tc = tokenBuckets(target, buckets).groupBy(col("b"))
+      .agg(count(lit(1)).as("tc"))
     val totals = tc.agg(coalesce(sum(col("tc")), lit(0L)).as("tt"))
-      .crossJoin(rcC.agg(coalesce(sum(col("rc")), lit(0L)).as("rt")))
-    rcC.join(tc, Seq("b"), "left")
+      .crossJoin(rc.agg(coalesce(sum(col("rc")), lit(0L)).as("rt")))
+    graft.plans.Shared(rc.join(tc, Seq("b"), "left")
       .crossJoin(broadcast(totals))
       .select(col("b"),
         (round(log((coalesce(col("tc"), lit(0L)) + lit(1L)).cast("double") /
             (col("tt") + b).cast("double")), 6).cast("decimal(18,6)")
           - round(log((col("rc") + lit(1L)).cast("double") /
             (col("rt") + b).cast("double")), 6).cast("decimal(18,6)"))
-          .as("lam"))
+          .as("lam")), rc, tc)
   }
 
   /** Persist the x153 DSIR model: the B-row λ table (bucket →
@@ -1738,26 +1738,25 @@ object Sampling {
     * grain, and the x40/x19 samplers consume the band. Docs with no
     * bigrams carry a null rank/bucket (a report, not a filter).
     *
-    * Shape: the LM report is built ONCE (the bounded-cache discipline —
-    * three references would otherwise re-run the x67 pipeline three
-    * times); the global rank is the x150 distributed prefix scan, never
-    * a single-task Window sort; the band arithmetic is exact integers. */
+    * Shape: the LM report is read ONCE, by the global rank — the x150
+    * distributed prefix scan, never a single-task Window sort. Docs
+    * without a score ride through the same scan in their own group and
+    * come out with a null rank, and the band denominator is the scored
+    * group's size, which the scan already collected; no second read of
+    * the x67 pipeline. The band arithmetic is exact integers. */
   def ccnetBuckets(docs: DataFrame, buckets: Int = CcnetBuckets,
                    numPartitions: Int = 0): DataFrame = {
     require(buckets > 0, s"ccnetBuckets: buckets=$buckets")
-    val scored = graft.core.Caches.bounded(
-      graft.operators.TextAnalysis.lmDocScore(docs))
-    val s = scored.filter(col("avg_logp").isNotNull)
-    val ranked = groupedRanks(s.withColumn("_g", lit(1)), Seq("_g"),
-        Seq(col("avg_logp"), col("doc_id")), "rank", numPartitions)
-      .drop("_g")
-    val banded = ranked
-      .crossJoin(broadcast(s.groupBy().agg(count(lit(1)).as("_n"))))
-      .select(col("doc_id"), col("rank"),
-        expr(s"($buckets * (rank - 1)) div _n").as("bucket"))
-    scored.join(banded, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_bigrams"), col("avg_logp"),
-        col("rank"), col("bucket"))
+    val scored = graft.operators.TextAnalysis.lmDocScore(docs)
+      .withColumn("_unscored", col("avg_logp").isNull)
+      .withColumn("_one", lit(1L))
+    val (ranked, sizes) = prefixScan(scored, Seq("_unscored"),
+      Seq(col("avg_logp"), col("doc_id")), "_one", "_rk", numPartitions)
+    val n = math.max(sizes.getOrElse(List(false), 0L), 1L)
+    ranked.select(col("doc_id"), col("n_bigrams"), col("avg_logp"),
+      when(!col("_unscored"), col("_rk")).as("rank"),
+      when(!col("_unscored"), expr(s"($buckets * (_rk - 1)) div ${n}L"))
+        .as("bucket"))
   }
 
   def ccnetBucketsQuery(spark: SparkSession, dir: String): DataFrame =

@@ -1237,8 +1237,8 @@ object Similarity {
   }
 
   /** The ≤d²-row Gram aggregate plan (see [[pcaProjection]]'s
-    * fixed-point build) — exposed so PlanSpec can assert the
-    * cross-query cache share below. */
+    * fixed-point build) — exposed so PlanSpec can assert that one
+    * query scans it once. */
   private[graft] def gramFrame(emb: DataFrame): DataFrame = {
     import graft.core.Determinism.dec
     val le = emb.select(transform(col("embedding"),
@@ -1253,15 +1253,11 @@ object Similarity {
   }
 
   /** The collected exact-decimal Gram matrix (see [[pcaProjection]]'s
-    * fixed-point build) and its dimensionality. Routed through the
-    * bounded cache (the x149 gram-set discipline): x158, x162, and the
-    * frozen-axis artifact build all collect the SAME ≤d²-row aggregate,
-    * and Spark's CacheManager dedupes by plan — so a query set that
-    * runs several of them pays ONE corpus Gram scan, not one each
+    * fixed-point build) and its dimensionality: one collect, so one
+    * corpus Gram scan per call and nothing cached past it
     * (PlanSpec-gated). */
   private def gramOf(emb: DataFrame): (Array[Array[java.math.BigDecimal]], Int) = {
-    val gram = graft.core.Caches.bounded(gramFrame(emb))
-    val rows = gram.collect()
+    val rows = gramFrame(emb).collect()
     require(rows.nonEmpty, "pcaProjection: empty embedding table")
     val d = rows.iterator.map(_.getInt(0)).max + 1
     val g = Array.ofDim[java.math.BigDecimal](d, d)

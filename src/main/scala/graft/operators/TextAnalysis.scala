@@ -153,19 +153,19 @@ object TextAnalysis {
     val firstFail = FunnelStages.zipWithIndex.foldLeft(lit(null).cast("int")) {
       case (acc, ((_, pred), i)) => coalesce(acc, when(expr(pred), lit(i + 1)))
     }
-    // bounded-cached: counts (≤ |stages|+1 rows) is referenced by the
-    // total aggregate AND the stage join — uncached, the whole corpus
-    // pipeline (two explode branches + doc-grain joins) re-executed per
-    // reference (Catalyst does not dedupe a multiply-referenced
-    // aggregate subtree; the x179/x95 discipline)
-    val counts = graft.core.Caches.bounded(sig.select(firstFail.as("stage"))
-      .groupBy(col("stage")).agg(count(lit(1)).as("c")))
+    // shared within the returned plan: counts (≤ |stages|+1 rows) is
+    // referenced by the total aggregate AND the stage join — unshared,
+    // the whole corpus pipeline (two explode branches + doc-grain joins)
+    // re-executed per reference (Catalyst does not dedupe a
+    // multiply-referenced aggregate subtree; the x95 discipline)
+    val counts = sig.select(firstFail.as("stage"))
+      .groupBy(col("stage")).agg(count(lit(1)).as("c"))
     val total = counts.agg(sum(col("c")).as("n_total"))
     val stages = FunnelStages.zipWithIndex
       .map { case ((name, _), i) => (i + 1, name) }.toDF("stage", "rule")
     val prior = Window.orderBy(col("stage"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    stages.join(counts, Seq("stage"), "left")
+    graft.plans.Shared(stages.join(counts, Seq("stage"), "left")
       .crossJoin(broadcast(total))
       .select(col("stage").cast("long"), col("rule"),
         coalesce(col("c"), lit(0L)).as("n_dropped"), col("n_total"))
@@ -173,7 +173,7 @@ object TextAnalysis {
         col("n_total") - coalesce(sum(col("n_dropped")).over(prior), lit(0L)))
       .select(col("stage"), col("rule"), col("n_in"), col("n_dropped"),
         (col("n_in") - col("n_dropped")).as("n_out"))
-      .orderBy(col("stage"))
+      .orderBy(col("stage")), counts)
   }
 
   def funnelQuery(spark: SparkSession, dir: String): DataFrame =
@@ -1225,14 +1225,14 @@ object TextAnalysis {
     * back fills absent intersections with 0 deterministically. The
     * sketch swap-in at 10⁵+ sources is x15's HLL union per pair. */
   def sourceOverlap(docs: DataFrame, n: Int = 3): DataFrame = {
-    // bounded-cached: the distinct (source, gram) frame is referenced by
-    // the sizes aggregate AND the pair miner, and Catalyst does not
-    // dedupe a multiply-referenced aggregate subtree — uncached, the
-    // scan→shingle→explode→distinct pipeline ran once per reference
-    // (x46's discipline)
-    val sg = graft.core.Caches.bounded(docs.select(col("source"),
+    // shared within the returned plan: the distinct (source, gram) frame
+    // is referenced by the sizes aggregate AND the pair miner, and
+    // Catalyst does not dedupe a multiply-referenced aggregate subtree —
+    // unshared, the scan→shingle→explode→distinct pipeline ran once per
+    // reference (x46's discipline)
+    val sg = docs.select(col("source"),
         explode(Dedup.wordShingles(col("text"), n)).as("gram"))
-      .distinct())
+      .distinct()
     val sizes = sg.groupBy(col("source")).agg(count(lit(1)).as("n"))
     // pairs from WITHIN each gram's source group, not a gram-keyed
     // self-join (the x03 shape): the join shuffled the gram TEXT twice
@@ -1249,12 +1249,12 @@ object TextAnalysis {
     val grid = sizes.select(col("source").as("source_a"), col("n").as("n_a"))
       .crossJoin(sizes.select(col("source").as("source_b"), col("n").as("n_b")))
       .filter(col("source_a") < col("source_b"))
-    grid.join(inter, Seq("source_a", "source_b"), "left")
+    graft.plans.Shared(grid.join(inter, Seq("source_a", "source_b"), "left")
       .select(col("source_a"), col("source_b"), col("n_a"), col("n_b"),
         coalesce(col("n_inter"), lit(0L)).as("n_inter"))
       .withColumn("n_union", col("n_a") + col("n_b") - col("n_inter"))
       .withColumn("jaccard",
-        col("n_inter").cast("double") / col("n_union"))
+        col("n_inter").cast("double") / col("n_union")), sg)
   }
 
   def sourceOverlapQuery(spark: SparkSession, dir: String): DataFrame =
@@ -1430,9 +1430,11 @@ object TextAnalysis {
     import graft.core.IterUtil
     IterUtil.ensureCheckpointDir(spark, checkpointDir)
     val reliable = checkpointDir.isDefined
-    // the one corpus scan; cached so round 1's count and round 1's
-    // rewrite share a single build
-    var words = graft.core.Caches.bounded(bpeWordTable(docs))
+    // the one corpus scan; persisted so round 1's count and round 1's
+    // rewrite (materialized by round 2's collect) share a single build,
+    // and released when the loop is done
+    val table = bpeWordTable(docs).persist()
+    var words = table
     // lineage-cut handles: `last` backs the CURRENT words (must stay
     // alive until the next round materializes), `beforeLast` is freed
     // as soon as that happens
@@ -1441,7 +1443,7 @@ object TextAnalysis {
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
     var step = 1
     var exhausted = false
-    while (step <= steps && !exhausted) {
+    try while (step <= steps && !exhausted) {
       val pairCounts = words.select(explode(symbolPairs(col("s"))).as("p"), col("n"))
         .groupBy(col("p")).agg(sum(col("n")).as("n"))
         .orderBy(col("n").desc, col("p")).limit(1)
@@ -1460,7 +1462,7 @@ object TextAnalysis {
         words = cut
       }
       step += 1
-    }
+    } finally table.unpersist()
     last.foreach(IterUtil.free)
     beforeLast.foreach(IterUtil.free)
     out.toSeq.toDF("step", "lhs", "rhs", "merged", "n_pair")

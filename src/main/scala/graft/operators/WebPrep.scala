@@ -342,13 +342,14 @@ object WebPrep {
 
   /** The x123 queries() face: degrees of the SAME planted graph x114
     * aggregates, so the two reports cross-check. */
-  def linkDegreesQuery(spark: SparkSession, dir: String): DataFrame =
-    // bounded-cached: linkDegrees references the edge aggregate four
-    // ways (out/in marginals + both reciprocal semi-join sides), and the
-    // regex link-extract pipeline behind it re-executed per reference
-    // (the x145 edge-frame discipline; host-pair grain, KBs)
-    linkDegrees(graft.core.Caches.bounded(linkGraphQuery(spark, dir)))
-      .orderBy(col("host"))
+  def linkDegreesQuery(spark: SparkSession, dir: String): DataFrame = {
+    // shared within the returned plan: linkDegrees references the edge
+    // aggregate four ways (out/in marginals + both reciprocal semi-join
+    // sides), and the regex link-extract pipeline behind it re-executed
+    // per reference (the x145 edge-frame discipline; host-pair grain)
+    val graph = linkGraphQuery(spark, dir)
+    graft.plans.Shared(linkDegrees(graph).orderBy(col("host")), graph)
+  }
 
   // ------------------------------------ label propagation (x138)
 
@@ -526,15 +527,16 @@ object WebPrep {
     // and o three times (the wedge join's two legs + the closing
     // semi-join); uncached, every reference re-ran the upstream edge
     // pipeline — for the x145 face that is the full corpus link-extract
-    // regex explode per leg. Both frames are edge-list-sized.
-    val und = graft.core.Caches.bounded(keyed
+    // regex explode per leg. Both frames are edge-list-sized and shared
+    // within the returned plan.
+    val und = keyed
       .select(least(col("src_host"), col("dst_host")).as("a"),
         greatest(col("src_host"), col("dst_host")).as("b"))
-      .distinct())
+      .distinct()
     val deg = und.select(col("a").as("host"), col("b").as("nbr"))
       .unionByName(und.select(col("b").as("host"), col("a").as("nbr")))
       .groupBy(col("host")).agg(count(lit(1)).as("degree"))
-    val o = graft.core.Caches.bounded(orientByDegree(und, deg))
+    val o = orientByDegree(und, deg)
     // wedges = pairs of out-edges of one source, the pair ordered by
     // rank so each wedge enumerates once; closed iff the (v → w)
     // oriented edge exists (rank(v) < rank(w) makes that the only
@@ -549,13 +551,13 @@ object WebPrep {
       .select(explode(array(col("e1.src"), col("e1.dst"), col("e2.dst")))
         .as("host"))
       .groupBy(col("host")).agg(count(lit(1)).as("n_triangles"))
-    deg.join(tri, Seq("host"), "left")
+    graft.plans.Shared(deg.join(tri, Seq("host"), "left")
       .select(col("host"), col("degree"),
         coalesce(col("n_triangles"), lit(0L)).as("n_triangles"),
         when(col("degree") >= 2,
           round(lit(2.0) * coalesce(col("n_triangles"), lit(0L)) /
             (col("degree") * (col("degree") - 1)).cast("double"), 6))
-          .as("clustering"))
+          .as("clustering")), und, o)
   }
 
   def triangleQuery(spark: SparkSession, dir: String): DataFrame =

@@ -363,32 +363,67 @@ class PlanSpec extends SparkSpec {
       s"verify must stay equi-join-shaped:\n$p")
   }
 
-  test("x87/x46: candidate pairs are mined ONCE (one shared cache); no live gram pipeline") {
+  /** LIVE nodes of an executed plan, structurally (the liveFileScans
+    * traversal): descends AQE boundaries and subqueries, and stops at a
+    * ReusedExchange (its subtree is the original exchange's, computed
+    * once) and at a cache hit. */
+  private def liveNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    p match {
+      case a: AdaptiveSparkPlanExec => liveNodes(a.executedPlan)
+      case q: QueryStageExec        => liveNodes(q.plan)
+      case _: ReusedExchangeExec | _: InMemoryTableScanExec => Seq(p)
+      case other => other +: (other.children ++ other.subqueries).flatMap(liveNodes)
+    }
+  }
+
+  test("x87/x46: candidate pairs are mined ONCE (one shared CTE); one live gram pipeline") {
+    import org.apache.spark.sql.catalyst.plans.logical.{CTERelationDef, CTERelationRef}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, ProjectExec}
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ReusedExchangeExec, ShuffleExchangeExec}
     for (name <- Seq("x87_containment", "x46_jaccard_pairs")) {
-      val opt = SparkEntry.queries(name)(spark, sf("sf0.001"))
-        .queryExecution.optimizedPlan
+      val df = SparkEntry.queries(name)(spark, sf("sf0.001"))
       // every reference to the mined pair set (the verify probe plus the
-      // id-prune semi-joins under sh1/sh2) must read ONE shared cache —
-      // the gram pipeline executes once, not once per reference
-      val caches = opt.collect {
-        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+      // id-prune semi-join) reads ONE shared CTE definition
+      val analyzed = df.queryExecution.analyzed
+      val defs = analyzed.collectWithSubqueries { case d: CTERelationDef => d }
+      assert(defs.size == 1 && defs.head.child.exists(_.isInstanceOf[graft.plans.SharedDef]),
+        s"$name: expected one shared candidate definition:\n$analyzed")
+      val refs = analyzed.collectWithSubqueries { case r: CTERelationRef => r }
+      assert(refs.size == 3 && refs.forall(_.cteId == defs.head.id),
+        s"$name: expected the candidate definition read 3x, got ${refs.size}:\n$analyzed")
+      df.collect()
+      val live = liveNodes(df.queryExecution.executedPlan)
+      // the definition executes once: one live exchange carries the
+      // (d1, d2) pairs, and the other references reuse it (directly, or
+      // inside a reused stage above it)
+      def isPairs(e: org.apache.spark.sql.execution.SparkPlan) = e match {
+        case x: ShuffleExchangeExec =>
+          x.shuffleOrigin == REPARTITION_BY_NUM && x.output.map(_.name) == Seq("d1", "d2")
+        case _ => false
       }
-      assert(caches.size == 3,
-        s"$name: expected the candidate cache read 3x, got ${caches.size}:\n$opt")
-      assert(caches.map(_.cacheBuilder).distinct.size == 1,
-        s"$name: all candidate reads must share one cached relation")
-      // outside the cache only the verify-side shingle projection remains,
-      // duplicated across the sh1/sh2 legs — the miner's three full-corpus
-      // shingle passes are behind the cache boundary (was 5 live, now 2).
-      // Count Projects only: the pushed size(shingles)>0 filter repeats
-      // the expression in its Filter node by design.
-      val liveShingles = opt.collect {
-        case p: org.apache.spark.sql.catalyst.plans.logical.Project => p
-      }.count(_.expressions
+      val pairExchanges = live.filter(isPairs)
+      assert(pairExchanges.size == 1,
+        s"$name: expected one live candidate exchange, got ${pairExchanges.size}")
+      val reused = live.collect { case r: ReusedExchangeExec if isPairs(r.child) => r }
+      assert(reused.nonEmpty && reused.forall(_.child.canonicalized == pairExchanges.head.canonicalized),
+        s"$name: the other candidate reads must reuse the exchange:\n${df.queryExecution.executedPlan}")
+      // one live gram pipeline: the miner's corpus scan runs once, and
+      // besides it only the two verify legs scan (was 3 miner scans
+      // unshared); outside the miner only the verify-side shingle
+      // projection remains, duplicated across the two legs. Count
+      // Projects only: the pushed size(shingles)>0 filter repeats the
+      // expression in its Filter node by design.
+      assert(live.count(_.isInstanceOf[FileSourceScanExec]) == 3,
+        s"$name: expected one miner scan plus the two verify-leg scans")
+      val liveShingles = live.collect { case p: ProjectExec => p }.count(_.expressions
         .exists(_.exists(_.isInstanceOf[graft.functions.expressions.WordShingles])))
       assert(liveShingles == 2,
         s"$name: expected the two verify-leg shingle projections only, " +
-          s"got $liveShingles:\n$opt")
+          s"got $liveShingles:\n${df.queryExecution.executedPlan}")
     }
   }
 
@@ -612,21 +647,15 @@ class PlanSpec extends SparkSpec {
     // and the pruned doc_id report frame — 4 static FileScans, and the
     // context marginal must NOT add a fifth (it is a window over the
     // corpus aggregate, not a third aggregate)
+    // Nothing caches the LM report across queries, so the plan never
+    // depends on which sibling (x159) ran first: it always computes the
+    // report itself, live, within the same 4-scan budget
     val e67 = SparkEntry.queries("x67_lm_score")(spark, sf("sf0.001"))
       .queryExecution.executedPlan
     val p67 = e67.toString
-    if (p67.contains("InMemoryTableScan")) {
-      // a sibling query (x159 shares the whole LM report through the
-      // bounded cache, and Spark's CacheManager dedupes BY PLAN) already
-      // materialized the report — x67 must then read the cache and scan
-      // NOTHING live; the FileScans rendered under InMemoryRelation are
-      // the cached build plan, not live work (counted STRUCTURALLY, so
-      // a live scan beside a cached subtree is caught regardless of
-      // where the renderer puts it — cache-order-free strength)
-      assert(liveFileScans(e67) == 0,
-        s"corpus scanned live beside the cached LM report:\n$p67")
-    } else
-      assert("FileScan".r.findAllIn(p67).size <= 4, s"corpus rescanned:\n$p67")
+    assert(!p67.contains("InMemoryTableScan"), s"x67 read a cached report:\n$p67")
+    assert("FileScan".r.findAllIn(p67).size <= 4, s"corpus rescanned:\n$p67")
+    assert(liveFileScans(e67) <= 4, s"corpus rescanned live:\n$p67")
     // x70: the grand-total scalar roots in the same count aggregate as
     // the marginals (2 static FileScans whose shared partial-agg
     // exchange is reused at runtime); both marginals are windows, so no
@@ -812,22 +841,47 @@ class PlanSpec extends SparkSpec {
       s"source must ride the panel scan, not a join back:\n$p")
   }
 
-  test("x158/x162: the PCA Gram aggregate is shared through the bounded cache — one corpus scan for the query set") {
-    import graft.core.Tables
-    import graft.operators.Similarity
-    val emb = Tables.load(spark, sf("sf0.001"), "embeddings")
-    // x158 builds, caches, and collects the Gram...
-    Similarity.pcaProjection(emb)
-    // ...so the Gram read x162 (or the frozen-axis artifact build)
-    // would issue — a FRESH plan over a FRESH load — must resolve to
-    // the cached relation and scan nothing live
-    val again = Similarity.gramFrame(
-      Tables.load(spark, sf("sf0.001"), "embeddings"))
-      .queryExecution.executedPlan
-    assert(again.toString.contains("InMemoryTableScan"),
-      s"second Gram read missed the shared cache:\n$again")
-    assert(liveFileScans(again) == 0,
-      s"second Gram read rescans the corpus:\n$again")
+  test("x158/x162: one Gram scan per query, and nothing stays cached") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    // one Gram collect per query: count the SQL executions started from
+    // gramOf on this thread (tagged by a job description, so no other
+    // query can be counted)
+    val tag = s"gram-gate-${java.util.UUID.randomUUID}"
+    val gramExecs = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.description == tag && s.details.contains("gramOf") =>
+          gramExecs.add(s.executionId)
+        case _ => ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for (name <- Seq("x158_pca_proj", "x162_pca_two")) {
+        gramExecs.clear()
+        spark.sparkContext.setJobDescription(tag)
+        val df = try SparkEntry.queries(name)(spark, sf("sf0.001"))
+          finally spark.sparkContext.setJobDescription(null)
+        val deadline = System.currentTimeMillis + 10000
+        while (gramExecs.isEmpty && System.currentTimeMillis < deadline) Thread.sleep(50)
+        Thread.sleep(500) // a second Gram collect would have posted by now
+        assert(gramExecs.size == 1,
+          s"$name: expected one Gram collect, saw ${gramExecs.size}")
+        // the returned plan only projects: the Gram is driver-side data,
+        // and the one corpus read left is the projection's own scan
+        val e = df.queryExecution.executedPlan
+        assert(!e.toString.contains("InMemoryTableScan"), s"$name reads a cache:\n$e")
+        assert(liveFileScans(e) == 1, s"$name: the projection rescans the corpus:\n$e")
+      }
+      // the Gram plan itself is one live corpus scan, not a cache read
+      val gram = graft.operators.Similarity.gramFrame(
+        graft.core.Tables.load(spark, sf("sf0.001"), "embeddings"))
+        .queryExecution.executedPlan
+      assert(liveFileScans(gram) == 1 && !gram.toString.contains("InMemoryTableScan"),
+        s"the Gram aggregate must scan the corpus once, live:\n$gram")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("x109: BPE pair counting partial-aggregates before the shuffle; top-N never global-sorts") {
