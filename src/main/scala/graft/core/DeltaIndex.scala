@@ -3,55 +3,55 @@ package graft.core
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Manifest-generation layout for APPENDABLE multi-part index artifacts
-  * (the cross-probe gram index, the semantic reference index, the
-  * acceptance battery).
+/** The one commit protocol for index artifacts: numbered generation
+  * manifests over immutable data directories.
   *
-  * The problem this solves (VERDICT r17's one `weak`): the first
+  * The problem this first solved (VERDICT r17's one `weak`): the first
   * maintenance design folded a delivery in by REWRITING every part —
   * `oldGrams.unionByName(delta)` written back out in full — so each
   * "append" cost O(index), not O(delta). At 100 TB that is a full
   * index rewrite per vendor delivery.
   *
   * Layout (the public Delta-Lake/Iceberg log idea, reduced to what an
-  * append-only index needs):
+  * index needs):
   *
   * {{{
   * <root>/
-  *   manifest_0000000000000000000.txt   generation descriptors
+  *   manifest_0000000000000000000.txt       generation descriptors
   *   manifest_0000000000000000001.txt
-  *   grams/g0000000000000000000/        immutable data directories;
-  *   grams/g0000000000000000001/        a part is the UNION of the
-  *   sizes/g.../  df/g.../              dirs its manifest lists
+  *   grams/g0000000000000000000-1a2b3c4d/   immutable data directories;
+  *   grams/g0000000000000000001-5e6f7a8b/   a part is the UNION of the
+  *   sizes/g.../  df/g.../                  dirs its manifest lists
   * }}}
   *
   * - Data directories are IMMUTABLE once written and INVISIBLE until a
   *   manifest names them. An append writes only its delta dirs plus one
   *   manifest file; old data files are never read (plan-gated) and
-  *   never rewritten.
+  *   never rewritten. A build, compaction or rebuild writes fresh dirs
+  *   and commits the NEXT generation too, so numbers never restart and
+  *   nothing is ever written beside the root.
   * - A manifest names, for EVERY part, the exact directories that
   *   comprise that generation — so a reader that resolves one manifest
   *   gets a consistent whole-artifact snapshot even while later
-  *   generations land (appends never delete; readers racing an append
-  *   are genuinely snapshot-isolated, unlike the old whole-root swap).
+  *   generations land.
   * - The commit is ONE file rename (`manifest_<gen>.txt.tmp.<uuid>` →
   *   `manifest_<gen>.txt`) — atomic on HDFS/POSIX; rename-to-fresh-name
   *   also detects a lost writer race (the target already existing fails
   *   the rename). A crash before the rename leaves orphan data dirs and
-  *   a tmp file no reader ever looks at.
+  *   a tmp file no reader ever looks at; [[vacuum]] reaps them.
   * - Manifests carry the BUILD PARAMETERS (shingle n, hashGrams, k…):
   *   probes and appends `require()` a match, closing the silent
   *   mixed-gram-key-space corruption an argument mismatch used to cause
   *   (ADVICE r17).
+  * - Whole-artifact saves (BM25 postings+stats, decontamination
+  *   grams+bloom, IVF codebook+lists, frozen models) go through
+  *   [[publish]]: the writer fills one fresh generation dir, the
+  *   manifest names it, and readers load from [[current]]. A crash at
+  *   any step leaves the previous generation complete and current.
   *
-  * Full REBUILDS still go through [[Artifacts.publishAtomic]] — the
-  * whole root (data dirs + manifest_0) swaps as one unit and the
-  * crash-window heal / readablePath discipline is unchanged. Only the
-  * per-delivery APPEND path moves to manifest commits.
-  *
-  * Single-writer contract per root (same as [[Artifacts]]): concurrent
-  * appends to one index are serialized by the caller; a lost race is
-  * detected (commit throws), never silent.
+  * Single-writer contract per root: appends to one index are
+  * serialized by the caller; a lost race is detected (commit throws),
+  * never silent.
   */
 object DeltaIndex {
 
@@ -68,12 +68,8 @@ object DeltaIndex {
 
   private def manifestName(gen: Long): String = f"manifest_$gen%019d.txt"
 
-  /** Root-relative data directory for `part` written at `gen` — the
-    * zero-padded form keeps listings lexically ordered for humans. */
-  def partDir(part: String, gen: Long): String = f"$part/g$gen%019d"
-
-  /** Root-relative data directory for one APPEND ATTEMPT: the
-    * generation dir plus a random suffix, so an attempt's writes can
+  /** Root-relative data directory for one WRITE ATTEMPT: the
+    * generation number plus a random suffix, so an attempt's writes can
     * never land in a directory any OTHER attempt's manifest references.
     * With deterministic names, two racing appenders resolved the same
     * base manifest, computed the same `gen+1`, and wrote (mode
@@ -155,16 +151,6 @@ object DeltaIndex {
     readManifest(f, p)
   }
 
-  /** [[at]] without the failure: None when `gen` was never committed
-    * (or no longer exists — e.g. the nested index was REBUILT from
-    * scratch and its generation numbering restarted). The probe a
-    * composite artifact's crash-heal uses to detect a dangling pin. */
-  def atOpt(spark: SparkSession, root: String, gen: Long): Option[Manifest] = {
-    val f = fs(spark, root)
-    val p = new Path(root, manifestName(gen))
-    if (f.exists(p)) Some(readManifest(f, p)) else None
-  }
-
   def latest(spark: SparkSession, root: String): Manifest =
     latestOpt(spark, root).getOrElse(
       throw new IllegalArgumentException(
@@ -193,6 +179,53 @@ object DeltaIndex {
           "(concurrent writer committed this generation first?)")
     }
   }
+
+  /** The one part a [[publish]]ed artifact's manifest lists. */
+  private val PublishPart = "data"
+
+  /** Per-root publish locks. In-process only: a second JVM publishing
+    * the same root is outside the single-writer contract, and its lost
+    * commit race re-commits instead of corrupting anything. */
+  private val publishLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** Publish a whole-artifact save: `write` fills a fresh per-attempt
+    * generation dir under `root` (sub-paths such as `<dir>/grams` are the
+    * writer's own), then manifest `latest+1` names it. A commit that
+    * loses a race commits again at the new `latest+1`, so the last
+    * committer wins. Superseded generations are then reclaimed by
+    * [[vacuum]], which keeps only the new one. Publishes to one root
+    * are serialized in-process, so a publish's vacuum can never reap
+    * another publish's not-yet-committed dir. A failure inside `write`
+    * leaves the current generation untouched and current. */
+  def publish(spark: SparkSession, root: String)(write: String => Unit): Unit = {
+    val f = fs(spark, root)
+    publishLocks.computeIfAbsent(f.makeQualified(new Path(root)).toString,
+        _ => new Object()).synchronized {
+      val first = latestOpt(spark, root).fold(0L)(_.gen + 1)
+      val dir = deltaDir(PublishPart, first)
+      write(s"$root/$dir")
+      if (!f.exists(new Path(root, dir)))
+        throw new java.io.IOException(
+          s"DeltaIndex.publish: the write left nothing at $root/$dir")
+      def commitAt(gen: Long): Unit =
+        try commit(spark, root, Manifest(gen, Map.empty, Map(PublishPart -> Vector(dir))))
+        catch {
+          case _: java.io.IOException if f.exists(new Path(root, manifestName(gen))) =>
+            commitAt(latest(spark, root).gen + 1)
+        }
+      commitAt(first)
+      vacuum(spark, root, keepGenerations = 1)
+    }
+  }
+
+  /** The generation dir a reader loads a [[publish]]ed artifact from.
+    * Resolve it ONCE per logical read, so every piece of a multi-part
+    * artifact (codebook + lists, postings + stats) comes from the same
+    * generation. The dir is unique per publish, so it also serves as a
+    * cache key for driver-side pieces of the artifact. */
+  def current(spark: SparkSession, root: String): String =
+    s"$root/${latest(spark, root).dirs(PublishPart).head}"
 
   /** Read `part` of generation `m`: ONE multi-path scan over the
     * generation dirs — one file listing and one schema resolve per
@@ -233,8 +266,8 @@ object DeltaIndex {
     * WRITER-side operation under the single-writer contract: do not run
     * concurrently with an append to the same root (an in-flight append's
     * not-yet-committed delta dir is indistinguishable from a crashed
-    * one). `keepGenerations >= 2` keeps the crash-heal window intact for
-    * composite artifacts that pin a nested generation.
+    * one). `keepGenerations >= 2` keeps the generation a composite
+    * artifact still pins while its re-pin commit has not landed.
     *
     * `pinnedGens`: nested-artifact generations the CALLER requires kept
     * regardless of recency. The recursion supplies it automatically: a

@@ -1421,9 +1421,9 @@ object Analytics {
   def saveBtStrengths(prefs: DataFrame, path: String,
                       iters: Int = BtIters): Unit = {
     val spark = prefs.sparkSession
-    graft.core.Artifacts.publishAtomic(spark, path) { tmp =>
+    graft.core.DeltaIndex.publish(spark, path) { dir =>
       bradleyTerry(prefs, iters).coalesce(1)
-        .write.mode("overwrite").parquet(s"$tmp/strengths")
+        .write.mode("overwrite").parquet(s"$dir/strengths")
     }
   }
 

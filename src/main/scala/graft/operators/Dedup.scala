@@ -304,35 +304,34 @@ object Dedup {
   private def crossParams(n: Int, hashGrams: Boolean): Map[String, String] =
     Map("n" -> n.toString, "hashGrams" -> hashGrams.toString)
 
-  /** Write the generation-0 gram/df/sizes data dirs of a cross-probe
-    * index under `root` and commit manifest_0 — shared by the
-    * standalone index build and the acceptance battery (which folds
-    * `extraParams`/`extraParts` — its texts tier and pinned semantic
-    * generation — into the SAME manifest so the whole battery commits
-    * as one snapshot). df and sizes derive from re-reading the
-    * just-written narrow gram files, so the reference corpus is
-    * scanned ONCE at build. */
-  private def writeCrossBase(reference: DataFrame, root: String, n: Int,
-                             hashGrams: Boolean,
-                             extraParams: Map[String, String] = Map.empty,
-                             extraParts: Map[String, Vector[String]] = Map.empty)
-      : Unit = {
+  /** Write one generation's gram, df and sizes dirs of a cross-probe
+    * index under `root` and return part -> new dir. Shared by the
+    * build, the standalone append, and the acceptance battery's build
+    * and append. df and sizes derive from re-reading the just-written
+    * narrow gram files, so the input is scanned ONCE. df is an
+    * APPENDABLE part like grams/sizes: a generation writes only its own
+    * per-gram counts and readers merge generations with a sum
+    * ([[readMergedDf]]), so an append never rewrites the df table.
+    * Appended doc sets are disjoint (requireNoDoubleIngest), so
+    * per-generation counts sum to exactly the merged value. Dirs carry a unique per-attempt suffix
+    * ([[graft.core.DeltaIndex.deltaDir]]) so a writer that loses the
+    * commit race can never have touched a dir the winning manifest
+    * references. */
+  private def writeCrossGen(docs: DataFrame, root: String, gen: Long,
+                            n: Int, hashGrams: Boolean): Map[String, String] = {
     import graft.core.DeltaIndex
-    val spark = reference.sparkSession
-    val gramsDir = DeltaIndex.partDir("grams", 0L)
-    probeGrams(reference, n, hashGrams)
+    val spark = docs.sparkSession
+    val gramsDir = DeltaIndex.deltaDir("grams", gen)
+    probeGrams(docs, n, hashGrams)
       .write.mode("overwrite").parquet(s"$root/$gramsDir")
     val g = spark.read.parquet(s"$root/$gramsDir")
-    val dfDir = DeltaIndex.partDir("df", 0L)
+    val dfDir = DeltaIndex.deltaDir("df", gen)
     g.groupBy(col("gram")).agg(count(lit(1)).as("df"))
       .write.mode("overwrite").parquet(s"$root/$dfDir")
-    val sizesDir = DeltaIndex.partDir("sizes", 0L)
+    val sizesDir = DeltaIndex.deltaDir("sizes", gen)
     g.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
       .write.mode("overwrite").parquet(s"$root/$sizesDir")
-    DeltaIndex.commit(spark, root, DeltaIndex.Manifest(0L,
-      crossParams(n, hashGrams) ++ extraParams,
-      Map("grams" -> Vector(gramsDir), "df" -> Vector(dfDir),
-        "sizes" -> Vector(sizesDir)) ++ extraParts))
+    Map("grams" -> gramsDir, "df" -> dfDir, "sizes" -> sizesDir)
   }
 
   /** Persist the frozen reference side of [[crossNearDupProbe]] so
@@ -344,52 +343,29 @@ object Dedup {
     * exact-Jaccard union). Parts live in [[graft.core.DeltaIndex]]
     * generation-manifest layout (so maintenance appends are O(delta),
     * never a rewrite) with the build parameters pinned in the
-    * manifest; the build itself publishes the whole root atomically
-    * ([[graft.core.Artifacts.publishAtomic]]). */
+    * manifest. A build over an existing index commits the next
+    * generation and vacuums the superseded ones. */
   def saveCrossProbeIndex(reference: DataFrame, path: String, n: Int = 3,
-                          hashGrams: Boolean = false): Unit =
-    graft.core.Artifacts.publishAtomic(reference.sparkSession, path) { tmp =>
-      writeCrossBase(reference, tmp, n, hashGrams)
-    }
+                          hashGrams: Boolean = false): Unit = {
+    import graft.core.DeltaIndex
+    val spark = reference.sparkSession
+    val gen = DeltaIndex.latestOpt(spark, path).fold(0L)(_.gen + 1)
+    DeltaIndex.commit(spark, path, DeltaIndex.Manifest(gen, crossParams(n, hashGrams),
+      writeCrossGen(reference, path, gen, n, hashGrams).map { case (p, d) => p -> Vector(d) }))
+    DeltaIndex.vacuum(spark, path, keepGenerations = 1)
+  }
 
   /** The delta-write body shared by [[appendToCrossProbeIndex]] and
-    * [[appendToAcceptanceIndex]]: write the delivery's gram and size
-    * DELTA dirs plus the one merged df generation, and return the
-    * updated part map. Reads ONLY the delivery, the just-written delta
-    * gram files, and the old df (the one O(index-df) aggregate a
-    * correct merged-df probe needs) — never an old gram file
-    * (spec-gated by corrupting them first). Delta dirs carry a unique
-    * per-attempt suffix ([[graft.core.DeltaIndex.deltaDir]]) so a
-    * writer that loses the commit race can never have touched a dir
-    * the winning manifest references. */
+    * [[appendToAcceptanceIndex]]: write the delivery's gram, size and
+    * df DELTA dirs and return the updated part map. Reads ONLY the
+    * delivery and the just-written delta gram files — never an old
+    * gram file (spec-gated by corrupting them first). */
   private[graft] def writeCrossDelta(admitted: DataFrame, root: String,
                               m: graft.core.DeltaIndex.Manifest, gen: Long,
                               n: Int, hashGrams: Boolean)
-      : Map[String, Vector[String]] = {
-    import graft.core.DeltaIndex
-    val spark = admitted.sparkSession
-    val gramsDir = DeltaIndex.deltaDir("grams", gen)
-    probeGrams(admitted, n, hashGrams)
-      .write.mode("overwrite").parquet(s"$root/$gramsDir")
-    val g = spark.read.parquet(s"$root/$gramsDir")
-    val dfDir = DeltaIndex.deltaDir("df", gen)
-    // df is an APPENDABLE part like grams/sizes: the delta writes only
-    // its own per-gram counts and readers merge generations with a sum
-    // ([[readMergedDf]]) — the former full-outer merge re-READ and
-    // re-WROTE the whole df table per delivery, the one O(index) step
-    // left in the append path. Appended doc sets are disjoint
-    // (requireNoDoubleIngest), so per-generation counts sum to exactly
-    // the old merged value; a single-generation artifact (fresh build,
-    // or any pre-existing merged df) reads identically through the sum.
-    g.groupBy(col("gram")).agg(count(lit(1)).as("df"))
-      .write.mode("overwrite").parquet(s"$root/$dfDir")
-    val sizesDir = DeltaIndex.deltaDir("sizes", gen)
-    g.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$root/$sizesDir")
-    Map("grams" -> (m.dirs("grams") :+ gramsDir),
-      "sizes" -> (m.dirs("sizes") :+ sizesDir),
-      "df" -> (m.dirs("df") :+ dfDir))
-  }
+      : Map[String, Vector[String]] =
+    writeCrossGen(admitted, root, gen, n, hashGrams)
+      .map { case (p, d) => p -> (m.dirs(p) :+ d) }
 
   /** The read face of the appendable df part: per-generation counts sum
     * to the total (disjoint appended doc sets); the aggregate's gram
@@ -428,16 +404,11 @@ object Dedup {
     * (spec-gated) and never rewritten. Readers racing an append are
     * snapshot-isolated: a resolved manifest's data dirs are immutable
     * and never deleted by an append, so an in-flight probe keeps its
-    * complete generation. (A full REBUILD still swaps the whole root —
-    * a probe racing THAT may need a retry after the fail-stop
-    * crash-window read.) */
+    * complete generation. */
   def appendToCrossProbeIndex(admitted: DataFrame, indexPath: String,
                               n: Int = 3, hashGrams: Boolean = false): Unit = {
     import graft.core.DeltaIndex
     val spark = admitted.sparkSession
-    // a WRITER heals the publish crash window up front (the
-    // publishAtomic contract: healing is the next publisher's job)
-    graft.core.Artifacts.recover(spark, indexPath)
     val m = DeltaIndex.latest(spark, indexPath)
     DeltaIndex.requireParams(m, crossParams(n, hashGrams),
       "appendToCrossProbeIndex")
@@ -455,14 +426,17 @@ object Dedup {
     * deliveries the grams/sizes parts are unions of many small
     * generation dirs (one per append), and every probe's scan plans
     * over all of them. This rewrites the CURRENT generation's parts as
-    * single fresh gen-0 dirs and republishes atomically — one declared
-    * full-index read, no corpus needed (the grams ARE the data), params
-    * preserved, probe results identical (spec-asserted). The semantic
-    * sibling is [[Similarity.rebuildSemRefIndex]], whose refit compacts
-    * the lists as a side effect. */
+    * single fresh dirs, commits them as the next generation and
+    * vacuums the superseded ones — one declared full-index read, no
+    * corpus needed (the grams ARE the data), params preserved, probe
+    * results identical (spec-asserted). The old dirs stay until the
+    * commit has landed, so the lazy reads feeding the rewrite never
+    * lose their files; a battery's nested `sem/` sub-index is not a
+    * part and stays where it is. The semantic sibling is
+    * [[Similarity.rebuildSemRefIndex]], whose refit compacts the lists
+    * as a side effect. */
   def compactCrossProbeIndex(spark: SparkSession, indexPath: String): Unit = {
-    import graft.core.{Artifacts, DeltaIndex}
-    Artifacts.recover(spark, indexPath)
+    import graft.core.DeltaIndex
     val m = DeltaIndex.latest(spark, indexPath)
     // EVERY manifest-listed part compacts (dropping one — the battery's
     // texts tier — would orphan it for the next vacuum to delete); the
@@ -472,37 +446,15 @@ object Dedup {
     require(!m.parts.contains("lists"),
       s"compactCrossProbeIndex: $indexPath holds cluster-partitioned lists — " +
         "compact semantic indexes with rebuildSemRefIndex instead")
-    val partNames = m.parts.keys.toSeq.sorted
-    // stage the unioned parts OUTSIDE the root first: the publish swap
-    // renames the live root out from under any lazy plan reading it
-    val stage = s"$indexPath.compact"
-    for (part <- partNames)
+    val gen = m.gen + 1
+    val parts = m.parts.keys.map { part =>
+      val dir = DeltaIndex.deltaDir(part, gen)
       DeltaIndex.read(spark, indexPath, m, part)
-        .write.mode("overwrite").parquet(s"$stage/$part")
-    try Artifacts.publishAtomic(spark, indexPath) { tmp =>
-      val parts = partNames.map { part =>
-        val dir = DeltaIndex.partDir(part, 0L)
-        spark.read.parquet(s"$stage/$part")
-          .write.mode("overwrite").parquet(s"$tmp/$dir")
-        part -> Vector(dir)
-      }.toMap
-      // a battery root nests its sem sub-index as a sibling dir, OUTSIDE
-      // the manifest parts — carry it into the new generation untouched
-      val fs = new org.apache.hadoop.fs.Path(indexPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val sem = new org.apache.hadoop.fs.Path(indexPath, "sem")
-      if (fs.exists(sem)) {
-        val dst = new org.apache.hadoop.fs.Path(tmp, "sem")
-        if (!org.apache.hadoop.fs.FileUtil.copy(fs, sem, fs, dst, false,
-            spark.sparkContext.hadoopConfiguration))
-          throw new java.io.IOException(
-            s"compactCrossProbeIndex: copying nested $sem failed")
-      }
-      DeltaIndex.commit(spark, tmp, DeltaIndex.Manifest(0L, m.params, parts))
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(stage)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
+        .write.mode("overwrite").parquet(s"$indexPath/$dir")
+      part -> Vector(dir)
+    }.toMap
+    DeltaIndex.commit(spark, indexPath, DeltaIndex.Manifest(gen, m.params, parts))
+    DeltaIndex.vacuum(spark, indexPath, keepGenerations = 1)
   }
 
   /** x171: the INCREMENTAL form of x169 — probe a delivery against the
@@ -589,17 +541,16 @@ object Dedup {
                         hashGrams: Boolean = false): DataFrame = {
     import graft.core.DeltaIndex
     val spark = candidates.sparkSession
-    val root = graft.core.Artifacts.readablePath(spark, indexPath)
     // ONE manifest resolve per probe: the generation's data dirs are
     // immutable and survive any concurrent append, so the three parts
     // below are a consistent snapshot by construction
-    val m = DeltaIndex.latest(spark, root)
+    val m = DeltaIndex.latest(spark, indexPath)
     DeltaIndex.requireParams(m, crossParams(n, hashGrams),
       "crossProbeIndexed")
     crossProbeAgainst(candidates,
-      DeltaIndex.read(spark, root, m, "grams"),
-      readMergedDf(spark, root, m),
-      DeltaIndex.read(spark, root, m, "sizes"),
+      DeltaIndex.read(spark, indexPath, m, "grams"),
+      readMergedDf(spark, indexPath, m),
+      DeltaIndex.read(spark, indexPath, m, "sizes"),
       n, maxDf, minInter, jaccardThreshold, hashGrams)
   }
 
@@ -719,9 +670,11 @@ object Dedup {
     * [[graft.core.DeltaIndex]] artifact: codebook + centroid-
     * partitioned lists + ids). The battery's OWN manifest pins the
     * semantic GENERATION (`semGen`), so a gate resolves every tier
-    * from one snapshot even while maintenance appends land; the build
-    * publishes the whole root atomically. Reference docs and vectors
-    * pair by doc_id == vec_id (the corpus-table contract). */
+    * from one snapshot even while maintenance appends land. A build
+    * over an existing battery commits the next generation of both
+    * manifests (sem first, then the battery that pins it) and vacuums
+    * the superseded ones. Reference docs and vectors pair by
+    * doc_id == vec_id (the corpus-table contract). */
   def saveAcceptanceIndex(refDocs: DataFrame, refVecs: DataFrame,
                           path: String, n: Int = 3,
                           hashGrams: Boolean = false,
@@ -729,15 +682,16 @@ object Dedup {
                           iters: Int = Similarity.KmeansIters): Unit = {
     import graft.core.DeltaIndex
     val spark = refDocs.sparkSession
-    graft.core.Artifacts.publishAtomic(spark, path) { tmp =>
-      val textsDir = DeltaIndex.partDir("texts", 0L)
-      refDocs.groupBy(col("text")).agg(min(col("doc_id")).as("exact_ref"))
-        .write.mode("overwrite").parquet(s"$tmp/$textsDir")
-      Similarity.saveSemRefIndex(refVecs, s"$tmp/sem", k, iters)
-      writeCrossBase(refDocs, tmp, n, hashGrams,
-        extraParams = Map("semGen" -> "0"),
-        extraParts = Map("texts" -> Vector(textsDir)))
-    }
+    val gen = DeltaIndex.latestOpt(spark, path).fold(0L)(_.gen + 1)
+    val textsDir = DeltaIndex.deltaDir("texts", gen)
+    refDocs.groupBy(col("text")).agg(min(col("doc_id")).as("exact_ref"))
+      .write.mode("overwrite").parquet(s"$path/$textsDir")
+    val semGen = Similarity.saveSemRefIndex(refVecs, s"$path/sem", k, iters)
+    val parts = writeCrossGen(refDocs, path, gen, n, hashGrams) + ("texts" -> textsDir)
+    DeltaIndex.commit(spark, path, DeltaIndex.Manifest(gen,
+      crossParams(n, hashGrams) + ("semGen" -> semGen.toString),
+      parts.map { case (p, d) => p -> Vector(d) }))
+    DeltaIndex.vacuum(spark, path, keepGenerations = 1)
   }
 
   /** INDEX MAINTENANCE for the full battery (x175 at x176's grain):
@@ -759,7 +713,6 @@ object Dedup {
                               n: Int = 3, hashGrams: Boolean = false): Unit = {
     import graft.core.DeltaIndex
     val spark = admittedDocs.sparkSession
-    graft.core.Artifacts.recover(spark, indexPath)
     val m = DeltaIndex.latest(spark, indexPath)
     DeltaIndex.requireParams(m, crossParams(n, hashGrams),
       "appendToAcceptanceIndex")
@@ -864,14 +817,13 @@ object Dedup {
                             tau: Double = Similarity.SemDedupTau): DataFrame = {
     import graft.core.DeltaIndex
     val spark = cands.sparkSession
-    val root = graft.core.Artifacts.readablePath(spark, indexPath)
     // ONE battery manifest resolve: the semantic tier is pinned to the
     // generation THIS manifest names (semGen), so every tier scores
     // against the same snapshot even while maintenance appends land
-    val m = DeltaIndex.latest(spark, root)
+    val m = DeltaIndex.latest(spark, indexPath)
     DeltaIndex.requireParams(m, crossParams(n, hashGrams),
       "acceptanceGateIndexed")
-    val semRoot = s"$root/sem"
+    val semRoot = s"$indexPath/sem"
     val sem = Similarity.semProbePinned(
         cands.select(col("doc_id").as("vec_id"), col("embedding")),
         semRoot, DeltaIndex.at(spark, semRoot, m.params("semGen").toLong), tau)
@@ -880,13 +832,13 @@ object Dedup {
     // gate contract an admitted text is never re-admitted, but a misuse
     // must degrade to the smallest-id row, not silently duplicate the
     // per-candidate output grain
-    val texts = DeltaIndex.read(spark, root, m, "texts")
+    val texts = DeltaIndex.read(spark, indexPath, m, "texts")
       .groupBy(col("text")).agg(min(col("exact_ref")).as("exact_ref"))
     acceptanceGateAgainst(cands,
       texts,
-      DeltaIndex.read(spark, root, m, "grams"),
-      readMergedDf(spark, root, m),
-      DeltaIndex.read(spark, root, m, "sizes"),
+      DeltaIndex.read(spark, indexPath, m, "grams"),
+      readMergedDf(spark, indexPath, m),
+      DeltaIndex.read(spark, indexPath, m, "sizes"),
       sem, n, maxDf, minInter, jaccardThreshold, hashGrams)
   }
 
@@ -919,14 +871,13 @@ object Dedup {
 
   /** What one vendor delivery leaves behind: the per-candidate report
     * (re-read from the ledger generation it was persisted to — so it
-    * stays readable even after a drift rebuild swaps the semantic
-    * sub-index out from under the gate's lazy plan), how many docs
-    * were admitted, the battery generation the admits landed in (None
-    * when nothing was admitted; 0 after a compaction, which restarts
-    * the numbering), the ledger generation holding this report, the
-    * pre-append drift check over the delivery's vectors (k rows,
-    * localized — its source plan dies with a rebuild), and which
-    * maintenance policies fired. */
+    * stays readable even after a drift rebuild vacuums the semantic
+    * generation the gate's lazy plan read), how many docs were
+    * admitted, the battery's latest generation after the admits and
+    * any maintenance (None when nothing was admitted), the ledger
+    * generation holding this report, the pre-append drift check over
+    * the delivery's vectors (k rows, localized — its source plan reads
+    * files a rebuild reclaims), and which maintenance policies fired. */
   final case class DeliveryOutcome(report: DataFrame, admitted: Long,
                                    batteryGen: Option[Long], ledgerGen: Long,
                                    drift: DataFrame,
@@ -951,8 +902,7 @@ object Dedup {
       : Boolean = {
     require(maxGenerations >= 2,
       s"maybeCompactCrossProbeIndex: maxGenerations=$maxGenerations")
-    val root = graft.core.Artifacts.readablePath(spark, indexPath)
-    val m = graft.core.DeltaIndex.latest(spark, root)
+    val m = graft.core.DeltaIndex.latest(spark, indexPath)
     val fire = m.parts.valuesIterator.exists(_.length >= maxGenerations)
     if (fire) compactCrossProbeIndex(spark, indexPath)
     fire
@@ -961,47 +911,53 @@ object Dedup {
   /** DRIFT-TRIGGERED SEMANTIC REBUILD at the battery grain — what an
     * x178 `rebuild` verdict fires inside the delivery loop: refit the
     * nested sem sub-index over everything it holds
-    * ([[Similarity.rebuildSemRefIndex]] — generation numbering
-    * restarts at 0), then commit a battery manifest that re-pins
-    * `semGen` to the fresh generation, with every other tier's parts
-    * unchanged. `k` defaults to the sub-index's current codebook size;
-    * raise it when the drift means new mass needs its own cluster(s).
+    * ([[Similarity.rebuildSemRefIndex]] — it commits the sub-index's
+    * next generation and keeps the one the battery pins), then commit
+    * a battery manifest that re-pins `semGen` to the refit, with every
+    * other tier's parts unchanged, and vacuum the superseded
+    * generations of both. `k` defaults to the sub-index's current
+    * codebook size; raise it when the drift means new mass needs its
+    * own cluster(s).
     *
-    * Crash window: a crash between the sem republish and the battery
-    * re-pin leaves the battery pinned to a generation that no longer
-    * exists — [[healBatterySemPin]] (run at the top of every
-    * [[processDelivery]]) detects exactly that and re-commits the pin,
-    * so the window is self-healing on the next delivery. */
+    * Crash window: a crash between the sem commit and the battery
+    * re-pin leaves the battery pinned to the previous sem generation,
+    * which is still complete — gates keep working on it, and
+    * [[healBatterySemPin]] (run at the top of every [[processDelivery]])
+    * re-pins to the refit. */
   def rebuildBatterySemIndex(spark: SparkSession, indexPath: String,
                              k: Option[Int] = None,
                              iters: Int = Similarity.KmeansIters): Unit = {
     import graft.core.DeltaIndex
-    graft.core.Artifacts.recover(spark, indexPath)
     val m = DeltaIndex.latest(spark, indexPath)
     val semRoot = s"$indexPath/sem"
     val semK = k.getOrElse(DeltaIndex.latest(spark, semRoot).params("k").toInt)
-    Similarity.rebuildSemRefIndex(spark, semRoot, semK, iters)
-    val fresh = DeltaIndex.latest(spark, semRoot).gen
+    val fresh = Similarity.rebuildSemRefIndex(spark, semRoot, semK, iters)
     DeltaIndex.commit(spark, indexPath, DeltaIndex.Manifest(m.gen + 1,
       m.params + ("semGen" -> fresh.toString), m.parts))
+    DeltaIndex.vacuum(spark, indexPath, keepGenerations = 1)
   }
 
-  /** Writer-side heal for [[rebuildBatterySemIndex]]'s crash window: if
-    * the battery's pinned `semGen` no longer exists at `sem/` (the sem
-    * republish landed, the re-pin commit did not), re-commit the pin to
-    * the sub-index's latest generation. A no-op on a healthy battery
-    * (one manifest read each side, no data files). */
+  /** Writer-side heal for [[rebuildBatterySemIndex]]'s crash window:
+    * the sem rebuild committed, the battery re-pin did not. A refit
+    * moves no vector in or out, so that sem generation holds exactly
+    * the pinned generation's ids — which [[appendToAcceptanceIndex]]'s
+    * sem-ahead branch would refuse as foreign. Re-pin to it. A sem
+    * generation ahead with any other id set is the append window,
+    * which the append itself heals or refuses. A no-op on a healthy
+    * battery (one manifest read each side, no data files). */
   private def healBatterySemPin(spark: SparkSession, indexPath: String): Unit = {
     import graft.core.DeltaIndex
-    graft.core.Artifacts.recover(spark, indexPath)
     val m = DeltaIndex.latest(spark, indexPath)
     val semRoot = s"$indexPath/sem"
-    val pinned = m.params("semGen").toLong
-    if (DeltaIndex.atOpt(spark, semRoot, pinned).isEmpty)
+    val semLatest = DeltaIndex.latest(spark, semRoot)
+    val pinned = DeltaIndex.at(spark, semRoot, m.params("semGen").toLong)
+    def ids(g: DeltaIndex.Manifest) =
+      DeltaIndex.read(spark, semRoot, g, "ids").select(col("ref_id"))
+    if (semLatest.gen != pinned.gen &&
+        ids(semLatest).exceptAll(ids(pinned)).limit(1).count() == 0L &&
+        ids(pinned).exceptAll(ids(semLatest)).limit(1).count() == 0L)
       DeltaIndex.commit(spark, indexPath, DeltaIndex.Manifest(m.gen + 1,
-        m.params +
-          ("semGen" -> DeltaIndex.latest(spark, semRoot).gen.toString),
-        m.parts))
+        m.params + ("semGen" -> semLatest.gen.toString), m.parts))
   }
 
   /** THE CURATION LOOP, composed end-to-end from the proven pieces —
@@ -1029,14 +985,14 @@ object Dedup {
     *     (recall-recovery spec-asserted);
     *   - after the append, [[maybeCompactCrossProbeIndex]] compacts
     *     once any part holds `compactAfter` generation dirs (probe
-    *     results identical, spec-asserted; generation numbering
-    *     restarts at 0).
+    *     results identical, spec-asserted; the compaction commits the
+    *     next battery generation).
     *
     * Ordering discipline: the report is persisted to the ledger BEFORE
-    * any maintenance that swaps index roots (a rebuild tears lazy
-    * plans still pointed at the old root), and the returned `report` /
-    * `drift` frames are re-read from the ledger / localized — both
-    * safe to consume after any policy fired.
+    * any maintenance that vacuums index generations (a rebuild or a
+    * compaction reclaims files lazy plans may still read), and the
+    * returned `report` / `drift` frames are re-read from the ledger /
+    * localized — both safe to consume after any policy fired.
     *
     * Each step is individually oracle- or spec-gated; this composition
     * is spec-gated as a three-delivery scenario (double-submission
@@ -1056,14 +1012,13 @@ object Dedup {
       : DeliveryOutcome = {
     import graft.core.DeltaIndex
     val spark = delivery.sparkSession
-    // heal a crashed drift-rebuild's dangling sem pin before anything
-    // resolves the battery manifest (writer-side job — see
-    // rebuildBatterySemIndex)
+    // re-pin a crashed drift-rebuild's refit before the append can
+    // refuse it as foreign (writer-side job — see rebuildBatterySemIndex)
     healBatterySemPin(spark, indexPath)
     val vecs = delivery.select(col("doc_id").as("vec_id"), col("embedding"))
     // the drift verdict is consumed NOW (k rows — bounded by the
-    // codebook) and the frame localized: its plan reads the sem root a
-    // triggered rebuild would swap away
+    // codebook) and the frame localized: its plan reads sem files a
+    // triggered rebuild would vacuum
     val driftRows = Similarity.semIndexDriftCheck(vecs, s"$indexPath/sem",
       driftThreshold)
     val rows = driftRows.collect()
@@ -1080,7 +1035,7 @@ object Dedup {
       val admittedIds = report.filter(col("verdict") === "admit")
         .select(col("cand_id").as("doc_id"))
       (delivery.join(admittedIds, Seq("doc_id"), "left_semi").count(),
-        // the report lands on disk before any root-swapping maintenance
+        // the report lands on disk before any vacuuming maintenance
         appendAcceptanceLedger(report, ledgerPath))
     } finally report.unpersist()
     val reportStored = spark.read.parquet(
@@ -1491,17 +1446,17 @@ object Dedup {
                         maxDf: Int = 20, minInter: Int = 2,
                         jaccardThreshold: Double = 0.5,
                         hashGrams: Boolean = false): Unit =
-    graft.core.Artifacts.publishAtomic(docs.sparkSession, path) { tmp =>
+    graft.core.DeltaIndex.publish(docs.sparkSession, path) { dir =>
       verifiedNearDupPairs(docs, n, maxDf, minInter, jaccardThreshold, hashGrams)
         .select(col("d1"), col("d2"),
           col("inter").cast("long").as("inter"), col("uni").cast("long").as("uni"))
-        .write.mode("overwrite").parquet(tmp)
+        .write.mode("overwrite").parquet(dir)
     }
 
   /** The persisted x46 accept set, ready for [[contaminationFromPairs]]
     * or any other pair-level consumer. */
   def loadVerifiedPairs(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.parquet(graft.core.DeltaIndex.current(spark, path))
 
   // ----------------------------- prefix-filtered similarity join (x76)
 
@@ -1767,8 +1722,8 @@ object Dedup {
     * the held-out corpus — the same persistence discipline as the BM25
     * postings, the MinHash bucket index, and the IVF codebook. The
     * sketch is built FROM the written grams, so the two files cannot
-    * drift; the pair publishes ATOMICALLY (staging dir + rename,
-    * [[graft.core.Artifacts.publishAtomic]]) so a failed save can never
+    * drift; the pair publishes as ONE generation
+    * ([[graft.core.DeltaIndex.publish]]) so a failed save can never
     * leave new grams under a stale bloom — the one mix that would let
     * the prefilter produce false negatives. Caller contract: load with
     * the same (k, hashGrams) used to save. */
@@ -1776,12 +1731,12 @@ object Dedup {
                         hashGrams: Boolean = false,
                         expectedItems: Long = 1L << 20,
                         fpp: Double = 0.03): Unit =
-    graft.core.Artifacts.publishAtomic(reference.sparkSession, path) { tmp =>
+    graft.core.DeltaIndex.publish(reference.sparkSession, path) { dir =>
       referenceGrams(reference, k, hashGrams)
-        .write.mode("overwrite").parquet(s"$tmp/grams")
-      val written = reference.sparkSession.read.parquet(s"$tmp/grams")
+        .write.mode("overwrite").parquet(s"$dir/grams")
+      val written = reference.sparkSession.read.parquet(s"$dir/grams")
       bloomOf(written, expectedItems, fpp)
-        .write.mode("overwrite").parquet(s"$tmp/bloom")
+        .write.mode("overwrite").parquet(s"$dir/bloom")
     }
 
   /** [[decontaminateBloom]] against a persisted index: row-identical to
@@ -1790,9 +1745,10 @@ object Dedup {
   def decontaminateWithIndex(candidates: DataFrame, path: String, k: Int = 4,
                              hashGrams: Boolean = false): DataFrame = {
     val spark = candidates.sparkSession
+    val root = graft.core.DeltaIndex.current(spark, path)
     decontaminateAgainst(candidates,
-      spark.read.parquet(s"$path/grams"),
-      spark.read.parquet(s"$path/bloom"), k, hashGrams)
+      spark.read.parquet(s"$root/grams"),
+      spark.read.parquet(s"$root/bloom"), k, hashGrams)
   }
 
   /** x55: bloom-gated decontamination — same inputs, same report, same
@@ -1878,14 +1834,14 @@ object Dedup {
     * 20-byte-key discipline) and be bucketed by it, making the batch
     * join a hash-key equi-join against a layout-aligned relation. */
   def saveDedupIndex(docs: DataFrame, path: String): Unit =
-    graft.core.Artifacts.publishAtomic(docs.sparkSession, path) { tmp =>
+    graft.core.DeltaIndex.publish(docs.sparkSession, path) { dir =>
       docs.groupBy(col("text")).agg(min(col("doc_id")).as("keep_id"))
-        .write.mode("overwrite").parquet(s"$tmp/keys")
+        .write.mode("overwrite").parquet(s"$dir/keys")
     }
 
-  /** Read-only load (crash-window bridged like every artifact reader). */
+  /** Load the current generation ([[graft.core.DeltaIndex.current]]). */
   def loadDedupIndex(spark: SparkSession, path: String): DataFrame = {
-    val root = graft.core.Artifacts.readablePath(spark, path)
+    val root = graft.core.DeltaIndex.current(spark, path)
     spark.read.parquet(s"$root/keys")
   }
 
@@ -2567,16 +2523,16 @@ object Dedup {
   def saveLineIndex(docs: DataFrame, path: String,
                     lineTokens: Int = LineTokens,
                     dupMin: Long = LineDupMin): Unit =
-    graft.core.Artifacts.publishAtomic(docs.sparkSession, path) { tmp =>
+    graft.core.DeltaIndex.publish(docs.sparkSession, path) { dir =>
       docs.select(explode(lineChunks(col("text"), lineTokens)).as("line"))
         .groupBy(col("line")).agg(count(lit(1)).as("c"))
         .filter(col("c") >= dupMin)
         .select(col("line"))
-        .write.mode("overwrite").parquet(s"$tmp/lines")
+        .write.mode("overwrite").parquet(s"$dir/lines")
     }
 
   def loadLineIndex(spark: SparkSession, path: String): DataFrame = {
-    val root = graft.core.Artifacts.readablePath(spark, path)
+    val root = graft.core.DeltaIndex.current(spark, path)
     spark.read.parquet(s"$root/lines")
   }
 
@@ -2789,11 +2745,11 @@ object Dedup {
     * construction: the index is the repeated TAIL of the span
     * distribution, not the corpus. Published atomically. */
   def saveDupSpanIndex(docs: DataFrame, path: String, k: Int = 4): Unit =
-    graft.core.Artifacts.publishAtomic(docs.sparkSession, path) { tmp =>
+    graft.core.DeltaIndex.publish(docs.sparkSession, path) { dir =>
       positionalGrams(docs.filter(col("text").isNotNull), k,
           hashGrams = false)
         .groupBy(col("gram")).agg(count(lit(1)).as("cnt"))
         .filter(col("cnt") >= 2).select("gram")
-        .write.mode("overwrite").parquet(s"$tmp/grams")
+        .write.mode("overwrite").parquet(s"$dir/grams")
     }
 }

@@ -1301,11 +1301,11 @@ object Sampling {
     * face up to xxhash64 collisions (~n²/2⁶⁵ expected — zero at any
     * realistic gram count; round-trip equality spec-asserted). */
   def saveLeakageIndex(docs: DataFrame, path: String, n: Int = LeakGramN): Unit =
-    graft.core.Artifacts.publishAtomic(docs.sparkSession, path) { tmp =>
+    graft.core.DeltaIndex.publish(docs.sparkSession, path) { dir =>
       distinctSplitGrams(docs, n)
         .select(col("split"), xxhash64(col("gram")).as("gram"))
         .distinct()
-        .write.mode("overwrite").parquet(s"$tmp/grams")
+        .write.mode("overwrite").parquet(s"$dir/grams")
     }
 
   /** x149 against a persisted [[saveLeakageIndex]] artifact: the same
@@ -1313,7 +1313,7 @@ object Sampling {
     * parquet (spec-gated: no documents scan). The audit a release
     * pipeline re-runs after every split re-cut. */
   def leakageFromIndex(spark: SparkSession, path: String): DataFrame = {
-    val root = graft.core.Artifacts.readablePath(spark, path)
+    val root = graft.core.DeltaIndex.current(spark, path)
     leakageGrid(spark.read.parquet(s"$root/grams"))
   }
 
@@ -1515,12 +1515,12 @@ object Sampling {
     * they cannot occur. */
   def saveDsirModel(raw: DataFrame, target: DataFrame, path: String,
                     buckets: Int = DsirBuckets): Unit =
-    graft.core.Artifacts.publishAtomic(raw.sparkSession, path) { tmp =>
+    graft.core.DeltaIndex.publish(raw.sparkSession, path) { dir =>
       dsirLambda(
           tokenBuckets(raw, buckets).groupBy(col("b"))
             .agg(count(lit(1)).as("rc")),
           target, buckets)
-        .write.mode("overwrite").parquet(s"$tmp/lambda")
+        .write.mode("overwrite").parquet(s"$dir/lambda")
     }
 
   /** Score documents against a frozen λ table (the body both the

@@ -499,8 +499,8 @@ object Similarity {
     * (vec_id, embedding) posting lists partitioned ON DISK by
     * centroid_id — following the persisted-index discipline of
     * [[TextSearch.saveIndex]] (bucketed postings) and
-    * [[Dedup.saveDecontamIndex]] (grams+bloom). The pair publishes
-    * atomically ([[graft.core.Artifacts.publishAtomic]]) so codebook
+    * [[Dedup.saveDecontamIndex]] (grams+bloom). The pair publishes as
+    * one generation ([[graft.core.DeltaIndex.publish]]) so codebook
     * and lists can never drift. The partition layout is the scale
     * lever: a probe reads ONLY the probed centroids' list partitions
     * (static partition pruning, spec-asserted), so query cost is
@@ -510,9 +510,9 @@ object Similarity {
   def saveIvfIndex(vectors: DataFrame, path: String, nCentroids: Int,
                    lloydIters: Int = 3): Unit = {
     val spark = vectors.sparkSession
-    graft.core.Artifacts.publishAtomic(spark, path) { tmp =>
+    graft.core.DeltaIndex.publish(spark, path) { dir =>
       val index = ivfIndex(vectors, nCentroids, lloydIters)
-      saveCodebook(index.centroids, s"$tmp/codebook", spark)
+      saveCodebook(index.centroids, s"$dir/codebook", spark)
       index.assigned
         // co-locate each list before the write: hash-repartitioning on
         // centroid_id puts ALL of a centroid's rows in one task (two
@@ -522,21 +522,18 @@ object Similarity {
         // dir), not tasks x centroids small files
         .repartition(nCentroids, col("centroid_id"))
         .write.mode("overwrite").partitionBy("centroid_id")
-        .parquet(s"$tmp/lists")
+        .parquet(s"$dir/lists")
     }
   }
 
   /** A [[saveIvfIndex]] artifact reloaded: codebook back on the driver
     * (KBs), lists as the partition-pruned parquet relation. [[ivfTopK]]
     * over it is result-identical to the inline index (spec-asserted).
-    * READ-ONLY: the crash/publish window (index momentarily at
-    * `<path>.old`) is bridged by [[graft.core.Artifacts.readablePath]]
-    * — resolved ONCE so codebook and lists come from the same snapshot
-    * — rather than by mutating recover(), which raced an in-flight
-    * publishAtomic (ADVICE r10). Healing the window is the next
-    * publish's (or an explicit Artifacts.recover caller's) job. */
+    * The generation dir is resolved ONCE
+    * ([[graft.core.DeltaIndex.current]]) so codebook and lists come
+    * from the same publish. */
   def loadIvfIndex(spark: SparkSession, path: String): IvfIndex = {
-    val root = graft.core.Artifacts.readablePath(spark, path)
+    val root = graft.core.DeltaIndex.current(spark, path)
     IvfIndex(loadCodebook(spark, s"$root/codebook"),
       spark.read.parquet(s"$root/lists")
         .select(col("vec_id"), col("centroid_id").cast("int").as("centroid_id"),
@@ -554,7 +551,7 @@ object Similarity {
     * could never match an unprobed list anyway. */
   def ivfTopKIndexed(spark: SparkSession, path: String, queries: DataFrame,
                      k: Int, nProbe: Int): DataFrame = {
-    val root = graft.core.Artifacts.readablePath(spark, path)
+    val root = graft.core.DeltaIndex.current(spark, path)
     ivfTopKPruned(spark, s"$root/lists", loadCodebook(spark, s"$root/codebook"),
       queries, k, nProbe)
   }
@@ -686,7 +683,7 @@ object Similarity {
     * disk). Results are bit-identical by the fit's determinism; only
     * plans whose every leaf is a file-backed relation are keyed (the
     * key carries the exact input-file inventory, so a rewritten
-    * staging dir or a new index generation can never alias a stale
+    * input dir or a new index generation can never alias a stale
     * codebook; in-memory test frames carry no immutability contract
     * and always recompute). */
   private val fitMemo = scala.collection.concurrent.TrieMap
@@ -1390,9 +1387,9 @@ object Similarity {
     val rows =
       v1.toIndexedSeq.zipWithIndex.map { case (x, i) => (1, i, x.doubleValue) } ++
       v2.toIndexedSeq.zipWithIndex.map { case (x, i) => (2, i, x.doubleValue) }
-    graft.core.Artifacts.publishAtomic(spark, path) { tmp =>
+    graft.core.DeltaIndex.publish(spark, path) { dir =>
       rows.toDF("axis", "i", "x").coalesce(1)
-        .write.mode("overwrite").parquet(s"$tmp/axes")
+        .write.mode("overwrite").parquet(s"$dir/axes")
     }
   }
 
@@ -1520,32 +1517,35 @@ object Similarity {
     *     double-ingest guard and the drift check read so maintenance
     *     never opens an embedding list file.
     *
-    * The build publishes the whole root atomically
-    * ([[graft.core.Artifacts.publishAtomic]]); appends commit new
-    * generations by one manifest rename. */
+    * A build over an existing index commits the next generation and
+    * keeps the one it supersedes (a composite artifact — the
+    * acceptance battery — may still pin it until its own commit
+    * lands); appends commit new generations by one manifest rename.
+    * Returns the committed generation number. */
   def saveSemRefIndex(reference: DataFrame, path: String,
-                      k: Int = KmeansK, iters: Int = KmeansIters): Unit = {
+                      k: Int = KmeansK, iters: Int = KmeansIters): Long = {
     import graft.core.DeltaIndex
     val spark = reference.sparkSession
     val (refEmb, cents) = kmeansFit(reference, k, iters)
-    graft.core.Artifacts.publishAtomic(spark, path) { tmp =>
-      val cbDir = writeSemCodebook(spark, tmp, cents)
-      val (listsDir, idsDir) = writeSemDelta(spark, tmp,
-        DeltaIndex.partDir("lists", 0L), DeltaIndex.partDir("ids", 0L),
-        kmeansAssigned(refEmb, cents)
-          .select(col("cluster"), col("vec_id").as("ref_id"), col("embedding")),
-        cents.length)
-      DeltaIndex.commit(spark, tmp, DeltaIndex.Manifest(0L,
-        Map("k" -> k.toString),
-        Map("codebook" -> Vector(cbDir), "lists" -> Vector(listsDir),
-          "ids" -> Vector(idsDir))))
-    }
+    val gen = DeltaIndex.latestOpt(spark, path).fold(0L)(_.gen + 1)
+    val cbDir = writeSemCodebook(spark, path, gen, cents)
+    val (listsDir, idsDir) = writeSemDelta(spark, path,
+      DeltaIndex.deltaDir("lists", gen), DeltaIndex.deltaDir("ids", gen),
+      kmeansAssigned(refEmb, cents)
+        .select(col("cluster"), col("vec_id").as("ref_id"), col("embedding")),
+      cents.length)
+    DeltaIndex.commit(spark, path, DeltaIndex.Manifest(gen,
+      Map("k" -> k.toString),
+      Map("codebook" -> Vector(cbDir), "lists" -> Vector(listsDir),
+        "ids" -> Vector(idsDir))))
+    DeltaIndex.vacuum(spark, path, keepGenerations = 2)
+    gen
   }
 
-  private def writeSemCodebook(spark: SparkSession, root: String,
+  private def writeSemCodebook(spark: SparkSession, root: String, gen: Long,
                                cents: Array[(Long, Array[Double])]): String = {
     import spark.implicits._
-    val dir = graft.core.DeltaIndex.partDir("codebook", 0L)
+    val dir = graft.core.DeltaIndex.deltaDir("codebook", gen)
     cents.toIndexedSeq.map { case (cid, cv) => (cid, cv.toSeq: Seq[Double]) }
       .toDF("cid", "cv").coalesce(1)
       .write.mode("overwrite").parquet(s"$root/$dir")
@@ -1556,11 +1556,9 @@ object Similarity {
     * vectors cluster-partitioned (one file per NON-EMPTY cluster, not
     * tasks x clusters), and the (cluster, ref_id) metadata derived by
     * re-reading the just-written delta files — the input is scanned
-    * once, and only THIS generation's files are touched. Callers pick
-    * the dir names: the build uses deterministic generation-0 names
-    * (inside a publishAtomic tmp root no racer can reach); appends use
-    * unique per-attempt names ([[graft.core.DeltaIndex.deltaDir]]) so
-    * a lost commit race never touches a committed dir. */
+    * once, and only THIS generation's files are touched. The dir names
+    * are unique per attempt ([[graft.core.DeltaIndex.deltaDir]]), so a
+    * lost commit race never touches a committed dir. */
   private def writeSemDelta(spark: SparkSession, root: String,
                             listsDir: String, idsDir: String,
                             assigned: DataFrame, k: Int): (String, String) = {
@@ -1600,9 +1598,6 @@ object Similarity {
   def appendToSemRefIndex(admitted: DataFrame, indexPath: String): Long = {
     import graft.core.DeltaIndex
     val spark = admitted.sparkSession
-    // writer-side crash-window heal BEFORE resolving the manifest — see
-    // appendToCrossProbeIndex (a reader never renames; a writer must)
-    graft.core.Artifacts.recover(spark, indexPath)
     val m = DeltaIndex.latest(spark, indexPath)
     val cents = semCodebook(spark, indexPath, m)
     val delta = kmeansAssigned(
@@ -1648,9 +1643,8 @@ object Similarity {
   def semProbeAgainst(candidates: DataFrame, indexPath: String,
                       tau: Double = SemDedupTau): DataFrame = {
     val spark = candidates.sparkSession
-    val root = graft.core.Artifacts.readablePath(spark, indexPath)
-    semProbePinned(candidates, root, graft.core.DeltaIndex.latest(spark, root),
-      tau)
+    semProbePinned(candidates, indexPath,
+      graft.core.DeltaIndex.latest(spark, indexPath), tau)
   }
 
   /** [[semProbeAgainst]] at a PINNED generation — the acceptance
@@ -1779,9 +1773,8 @@ object Similarity {
     * ([[graft.streaming.StreamingOps.semDriftStream]]). */
   def semRecentCounts(recent: DataFrame, indexPath: String): DataFrame = {
     val spark = recent.sparkSession
-    val root = graft.core.Artifacts.readablePath(spark, indexPath)
-    recentCounts(recent,
-      semCodebook(spark, root, graft.core.DeltaIndex.latest(spark, root)))
+    recentCounts(recent, semCodebook(spark, indexPath,
+      graft.core.DeltaIndex.latest(spark, indexPath)))
   }
 
   /** [[semDriftAgainst]] over a [[saveSemRefIndex]] artifact — the
@@ -1793,11 +1786,11 @@ object Similarity {
                          threshold: Double = SemDriftThreshold): DataFrame = {
     import graft.core.DeltaIndex
     val spark = recent.sparkSession
-    val root = graft.core.Artifacts.readablePath(spark, indexPath)
-    val m = DeltaIndex.latest(spark, root)
-    val refCounts = DeltaIndex.read(spark, root, m, "ids")
+    val m = DeltaIndex.latest(spark, indexPath)
+    val refCounts = DeltaIndex.read(spark, indexPath, m, "ids")
       .groupBy(col("cluster")).agg(count(lit(1)).as("n_ref"))
-    semDriftAgainst(recent, semCodebook(spark, root, m), refCounts, threshold)
+    semDriftAgainst(recent, semCodebook(spark, indexPath, m), refCounts,
+      threshold)
   }
 
   /** The x178 queries() face: the x170 split — even vec_ids are the
@@ -1819,32 +1812,24 @@ object Similarity {
     * verdict triggers: refit the codebook over everything the index
     * now holds (original reference + every appended delivery, read
     * from the index's own lists — the source corpora are gone) and
-    * republish atomically as a fresh generation-0 artifact. Reading
+    * build the next generation from it ([[saveSemRefIndex]]). Reading
     * the full lists once is the DECLARED cost of a rebuild; `k` may be
     * raised when the drift means new mass needs its own cluster(s).
+    * The old lists stay on disk until the new generation has
+    * committed, so the lazy reads feeding the refit never lose their
+    * files. Returns the committed generation number.
     *
     * Why this matters: appends freeze the codebook, so a new data
     * direction piles into whichever old cluster is least wrong —
     * rank-1 probes then miss paraphrases across that crowded boundary
-    * (spec plants exactly this and shows the rebuild recovers it).
-    *
-    * The vectors are staged to a sibling dir before the republish: the
-    * save's atomic swap renames the live root, which would tear the
-    * lazy file reads of a plan still pointed at it. */
+    * (spec plants exactly this and shows the rebuild recovers it). */
   def rebuildSemRefIndex(spark: SparkSession, indexPath: String,
-                         k: Int = KmeansK, iters: Int = KmeansIters): Unit = {
-    import graft.core.{Artifacts, DeltaIndex}
-    Artifacts.recover(spark, indexPath)
+                         k: Int = KmeansK, iters: Int = KmeansIters): Long = {
+    import graft.core.DeltaIndex
     val m = DeltaIndex.latest(spark, indexPath)
-    val stage = s"$indexPath.rebuild"
-    DeltaIndex.read(spark, indexPath, m, "lists")
-      .select(col("ref_id").as("vec_id"), col("embedding"))
-      .write.mode("overwrite").parquet(stage)
-    try saveSemRefIndex(spark.read.parquet(stage), indexPath, k, iters)
-    finally {
-      val p = new org.apache.hadoop.fs.Path(stage)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
+    saveSemRefIndex(DeltaIndex.read(spark, indexPath, m, "lists")
+        .select(col("ref_id").as("vec_id"), col("embedding")),
+      indexPath, k, iters)
   }
 
   // ------------- budgeted multi-cluster semantic probe (x180) --------
@@ -1909,11 +1894,10 @@ object Similarity {
                      tau: Double = SemDedupTau): DataFrame = {
     require(nProbe >= 1, s"semProbeBudget: nProbe=$nProbe")
     val spark = candidates.sparkSession
-    val root = graft.core.Artifacts.readablePath(spark, indexPath)
-    val m = graft.core.DeltaIndex.latest(spark, root)
-    val cents = semCodebook(spark, root, m)
+    val m = graft.core.DeltaIndex.latest(spark, indexPath)
+    val cents = semCodebook(spark, indexPath, m)
     val candM = assignCandidatesMulti(candidates, cents, nProbe)
-    val lists = graft.core.DeltaIndex.read(spark, root, m, "lists")
+    val lists = graft.core.DeltaIndex.read(spark, indexPath, m, "lists")
     semVerdictMulti(candM, prunedLists(candidates, candM, lists), tau)
   }
 

@@ -810,7 +810,7 @@ object TextAnalysis {
     * vocabulary sized, an artifact not a broadcast); published
     * atomically. */
   def saveLmModel(docs: DataFrame, path: String): Unit =
-    graft.core.Artifacts.publishAtomic(docs.sparkSession, path) { tmp =>
+    graft.core.DeltaIndex.publish(docs.sparkSession, path) { dir =>
       val bg = docs
         .select(explode(graft.functions.expressions.NativeExpressions
           .wordShinglesAll(wsTokens(col("text")), 2)).as("bg"))
@@ -826,7 +826,7 @@ object TextAnalysis {
           round(log((col("c12") + lit(1L)).cast("double") /
             (col("c1") + col("v")).cast("double")), 6)
             .cast("decimal(18,6)").as("lp"))
-        .write.mode("overwrite").parquet(s"$tmp/lp")
+        .write.mode("overwrite").parquet(s"$dir/lp")
     }
 
   /** Score documents against a frozen bigram-LM table (the body the
@@ -1095,15 +1095,15 @@ object TextAnalysis {
     * buckets / IVF lists. At scale, store hashed gram keys
     * ([[graft.operators.Dedup.gramKey]]) to shuffle 8-byte longs. */
   def saveGramIndex(docs: DataFrame, path: String, n: Int = 3): Unit =
-    graft.core.Artifacts.publishAtomic(docs.sparkSession, path) { tmp =>
+    graft.core.DeltaIndex.publish(docs.sparkSession, path) { dir =>
       docs.select(explode(Dedup.wordShingles(col("text"), n)).as("gram"))
         .distinct()
-        .write.mode("overwrite").parquet(s"$tmp/grams")
+        .write.mode("overwrite").parquet(s"$dir/grams")
     }
 
-  /** Read-only load (crash-window bridged like every artifact reader). */
+  /** Load the current generation ([[graft.core.DeltaIndex.current]]). */
   def loadGramIndex(spark: SparkSession, path: String): DataFrame = {
-    val root = graft.core.Artifacts.readablePath(spark, path)
+    val root = graft.core.DeltaIndex.current(spark, path)
     spark.read.parquet(s"$root/grams")
   }
 
@@ -1962,7 +1962,7 @@ object TextAnalysis {
     * [[nbQualityClassifier]]'s verbatim — one body, two faces. */
   def saveNbModel(docs: DataFrame, positive: Column, path: String,
                   buckets: Int = NbBuckets): Unit =
-    graft.core.Artifacts.publishAtomic(docs.sparkSession, path) { tmp =>
+    graft.core.DeltaIndex.publish(docs.sparkSession, path) { dir =>
       val b = lit(buckets.toLong)
       val labeled = docs.select(col("doc_id"),
         when(positive, 1L).otherwise(0L).as("y"), col("text"))
@@ -1980,12 +1980,12 @@ object TextAnalysis {
             - round(log((col("nc") + lit(1L)).cast("double") /
               (col("nt") + b).cast("double")), 6).cast("decimal(18,6)"))
             .as("wb"))
-        .write.mode("overwrite").parquet(s"$tmp/weights")
+        .write.mode("overwrite").parquet(s"$dir/weights")
       labeled.agg(
           round(log((coalesce(sum(col("y")), lit(0L)) + lit(1L)).cast("double") /
             (count(lit(1)) - coalesce(sum(col("y")), lit(0L)) + lit(1L))
               .cast("double")), 6).cast("decimal(18,6)").as("w0"))
-        .write.mode("overwrite").parquet(s"$tmp/prior")
+        .write.mode("overwrite").parquet(s"$dir/prior")
     }
 
   /** Score documents against a frozen NB model (the body the

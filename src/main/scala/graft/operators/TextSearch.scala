@@ -111,9 +111,12 @@ object TextSearch {
         (tf + lit(k1) * (lit(1) - lit(b) + lit(b) * dl / avgdl)),
       6).cast("decimal(18,6)")
 
-  /** Build the FULL inverted index once and persist it: `path/postings`
+  /** Build the FULL inverted index once and persist it: `postings`
     * holds (doc_id, term, tf, dl, df) partitioned by a term hash bucket,
-    * `path/stats` the one-row corpus stats. The build is the x23 plan
+    * `stats` the one-row corpus stats. The pair publishes as one
+    * generation ([[graft.core.DeltaIndex.publish]]): a failure between
+    * the two writes leaves the previous index current, never new
+    * postings scored against stale `n_docs`/`avgdl`. The build is the x23 plan
     * without the query-term filter (df precomputed, so query time never
     * windows); the bucket layout is the scale lever — a query touches
     * only the partitions its terms hash into (static partition pruning,
@@ -133,13 +136,15 @@ object TextSearch {
       .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
       .withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
       .withColumn("term_bucket", termBucket(col("term"), nBuckets))
-    postings
-      // co-locate each bucket before the write: one writer task per
-      // bucket -> nBuckets files, not tasks x buckets small files
-      .repartition(nBuckets, col("term_bucket"))
-      .write.mode("overwrite").partitionBy("term_bucket")
-      .parquet(path + "/postings")
-    stats.write.mode("overwrite").parquet(path + "/stats")
+    graft.core.DeltaIndex.publish(docs.sparkSession, path) { dir =>
+      postings
+        // co-locate each bucket before the write: one writer task per
+        // bucket -> nBuckets files, not tasks x buckets small files
+        .repartition(nBuckets, col("term_bucket"))
+        .write.mode("overwrite").partitionBy("term_bucket")
+        .parquet(s"$dir/postings")
+      stats.write.mode("overwrite").parquet(s"$dir/stats")
+    }
   }
 
   /** Top-k per query over a [[saveIndex]]-built index. Result-identical
@@ -166,11 +171,12 @@ object TextSearch {
           org.apache.spark.unsafe.types.UTF8String.fromString(t), 42L)
       ((h % nBuckets) + nBuckets) % nBuckets
     }.distinct
-    val postings = spark.read.parquet(path + "/postings")
+    val root = graft.core.DeltaIndex.current(spark, path)
+    val postings = spark.read.parquet(s"$root/postings")
       // static partition pruning: term_bucket is a literal IN list the
       // scan resolves against directory names before reading any data
       .filter(col("term_bucket").isin(buckets: _*))
-    val stats = spark.read.parquet(path + "/stats")
+    val stats = spark.read.parquet(s"$root/stats")
     val contrib = postings
       .filter(col("term").isin(termSet: _*))
       .join(broadcast(qterms), Seq("term"))

@@ -197,6 +197,15 @@ object StreamingOps {
 
   // ------------------------- streaming decontamination (x16's face) --
 
+  /** The static side of a stream-static join, computed once on the
+    * driver into a local relation: Spark re-executes the static
+    * sub-plan every micro-batch, and a local relation makes that free
+    * without a cache that outlives the query. For static sides small
+    * enough to hold on the driver, as any broadcast side must be. */
+  private def frozenStatic(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(df.collect(): _*), df.schema)
+
   /** Streaming face of [[graft.operators.Dedup.decontaminate]]: score
     * each arriving training-candidate document against a STATIC held-out
     * reference corpus, via the stream-static equi-join + one streaming
@@ -207,13 +216,13 @@ object StreamingOps {
     * [[graft.operators.Dedup]] helpers the batch face uses, so the two
     * faces cannot drift.
     *
-    * The static side is persist()ed here: Spark re-executes a
-    * stream-static join's static sub-plan EVERY micro-batch, so without
-    * the cache the reference corpus would be re-read, re-exploded, and
-    * re-deduped per trigger. The cache lives as long as the query plan
-    * references it and is reclaimed by the context cleaner afterwards;
-    * the broadcast build itself still runs per batch (that is the
-    * stream-static contract), but over the cached distinct grams.
+    * The static side is computed ONCE into a local relation
+    * ([[frozenStatic]]): Spark re-executes a stream-static join's
+    * static sub-plan EVERY micro-batch, so without it the reference
+    * corpus would be re-read, re-exploded, and re-deduped per trigger.
+    * The broadcast build itself still runs per batch (that is the
+    * stream-static contract), but over the collected distinct grams,
+    * and nothing stays cached after the query stops.
     *
     * Run in UPDATE output mode. A document's grams all travel in the one
     * micro-batch that carries the document row, so each doc_id emits its
@@ -224,9 +233,8 @@ object StreamingOps {
   def decontaminateStream(docs: DataFrame, reference: DataFrame,
                           k: Int = 4, hashGrams: Boolean = false): DataFrame = {
     import graft.operators.Dedup
-    val refGrams = Dedup.referenceGrams(reference, k, hashGrams)
-      .withColumn("_hit", lit(1L))
-      .persist()
+    val refGrams = frozenStatic(Dedup.referenceGrams(reference, k, hashGrams)
+      .withColumn("_hit", lit(1L)))
     // explode_outer keeps zero-gram docs (shorter than k tokens) in the
     // report with n_hit_spans 0, matching the batch operator's left join
     val exploded = docs.select(
@@ -669,16 +677,17 @@ object StreamingOps {
     * broadcast left join, collapse in ONE streaming aggregate whose
     * grouping key carries n_tokens. Run in UPDATE mode; each doc emits
     * its final counts in its arrival batch. The static vocabulary is
-    * persist()ed — the stream-static join re-executes its static
-    * sub-plan per micro-batch. */
+    * computed once into a local relation ([[frozenStatic]]) — the
+    * stream-static join re-executes its static sub-plan per
+    * micro-batch. */
   def oovStream(docs: DataFrame, vocab: DataFrame): DataFrame = {
     import graft.operators.TextAnalysis.wsTokens
     // distinct() before the _hit marker: the batch gate's left_semi join
     // is set-semantics, but this face COUNTS hits — a vocabulary frame
     // with duplicate term rows ("any external vocab" is the contract)
     // would double-count _n_iv and could drive n_oov negative
-    val v = vocab.select(col("term")).distinct()
-      .withColumn("_hit", lit(1L)).persist()
+    val v = frozenStatic(vocab.select(col("term")).distinct()
+      .withColumn("_hit", lit(1L)))
     docs.select(col("doc_id"),
         size(wsTokens(col("text"))).cast("long").as("n_tokens"),
         explode_outer(wsTokens(col("text"))).as("term"))
@@ -698,10 +707,10 @@ object StreamingOps {
     * [[graft.operators.IntervalJoin.pointInIntervalCount]] (shared
     * constant `binDays` contract), so stream and batch agree row-for-row
     * on replay (spec-asserted). The static side explodes to its bin
-    * buckets ONCE and persists — the stream-static join re-executes the
-    * static sub-plan every micro-batch, and without the cache the
-    * explode would re-run per trigger (the decontaminateStream
-    * discipline). Stateless: no watermark, no store — the stream side
+    * buckets ONCE into a local relation ([[frozenStatic]]) — the
+    * stream-static join re-executes the static sub-plan every
+    * micro-batch, and without it the explode would re-run per trigger
+    * (the decontaminateStream discipline). Stateless: no watermark, no store — the stream side
     * just equi-joins its one bucket and residual-filters, so the gate
     * adds no backpressure at any scale. Inner join: unmatched points
     * drop (the attribution contract); use the batch face for
@@ -711,9 +720,8 @@ object StreamingOps {
     require(binDays > 0, s"intervalMatchStream: binDays=$binDays")
     def bin(d: org.apache.spark.sql.Column) =
       floor(unix_date(d).cast("long").cast("double") / binDays).cast("long")
-    val binnedIv = intervals
-      .withColumn("_bin", explode(sequence(bin(col("d0")), bin(col("d1")))))
-      .persist()
+    val binnedIv = frozenStatic(intervals
+      .withColumn("_bin", explode(sequence(bin(col("d0")), bin(col("d1"))))))
     points.withColumn("_bin", bin(col("d")))
       .join(binnedIv, Seq("_bin"))
       .filter(col("d").between(col("d0"), col("d1")))
@@ -1037,7 +1045,8 @@ object StreamingOps {
   def exciseStream(docs: DataFrame, indexPath: String, k: Int = 4): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val grams = spark.read.parquet(s"$indexPath/grams")
+    val grams = spark.read.parquet(
+      s"${graft.core.DeltaIndex.current(spark, indexPath)}/grams")
     // null-text documents are dropped EXPLICITLY, matching the batch
     // face's filter (Dedup.exciseContamination) — before this filter the
     // live face silently emitted nothing for them while the batch face
@@ -1158,7 +1167,7 @@ object StreamingOps {
     * (spec-asserted). */
   def leakageProbeStream(docs: DataFrame, indexPath: String): DataFrame = {
     val spark = docs.sparkSession
-    val root = graft.core.Artifacts.readablePath(spark, indexPath)
+    val root = graft.core.DeltaIndex.current(spark, indexPath)
     graft.operators.Sampling.leakageProbe(docs,
       spark.read.parquet(s"$root/grams"))
   }
@@ -1189,7 +1198,7 @@ object StreamingOps {
     * batch x162's (proj1, proj2) (spec-asserted). */
   def pcaProjectionStream(emb: DataFrame, axesPath: String): DataFrame = {
     val spark = emb.sparkSession
-    val root = graft.core.Artifacts.readablePath(spark, axesPath)
+    val root = graft.core.DeltaIndex.current(spark, axesPath)
     graft.operators.Similarity.pcaProjectAgainst(emb,
       spark.read.parquet(s"$root/axes"))
   }
@@ -1209,7 +1218,7 @@ object StreamingOps {
   def dsirStream(docs: DataFrame, modelPath: String,
                  buckets: Int = graft.operators.Sampling.DsirBuckets): DataFrame = {
     val spark = docs.sparkSession
-    val root = graft.core.Artifacts.readablePath(spark, modelPath)
+    val root = graft.core.DeltaIndex.current(spark, modelPath)
     graft.operators.Sampling.dsirScoreAgainst(docs,
       spark.read.parquet(s"$root/lambda"), buckets)
   }
@@ -1231,7 +1240,7 @@ object StreamingOps {
                    buckets: Int = graft.operators.TextAnalysis.NbBuckets)
       : DataFrame = {
     val spark = docs.sparkSession
-    val root = graft.core.Artifacts.readablePath(spark, modelPath)
+    val root = graft.core.DeltaIndex.current(spark, modelPath)
     graft.operators.TextAnalysis.nbScoreAgainst(docs,
       spark.read.parquet(s"$root/weights"),
       spark.read.parquet(s"$root/prior"), buckets)
@@ -1254,7 +1263,7 @@ object StreamingOps {
   def lmGateStream(docs: DataFrame, modelPath: String,
                    edges: DataFrame): DataFrame = {
     val spark = docs.sparkSession
-    val root = graft.core.Artifacts.readablePath(spark, modelPath)
+    val root = graft.core.DeltaIndex.current(spark, modelPath)
     val scored = graft.operators.TextAnalysis.lmScoreAgainst(docs,
       spark.read.parquet(s"$root/lp"))
     val es = edges.select(col("bucket").cast("long"), col("lo").cast("double"))
@@ -1892,8 +1901,8 @@ object StreamingOps {
     * `writeStream.foreachBatch` body: each micro-batch of (query_id,
     * qvec) rows runs the SAME pruned probe as the batch path
     * ([[graft.operators.Similarity.ivfTopKPruned]]) — rank the
-    * driver-resident KB-scale codebook (reloaded whenever the snapshot
-    * SIGNATURE changes — see below), collect the batch's probed centroid ids (bounded
+    * driver-resident KB-scale codebook (reloaded whenever a new
+    * generation is published — see below), collect the batch's probed centroid ids (bounded
     * by batchSize×nProbe and by nCentroids), and read ONLY those list
     * partitions before the exact-cosine top-k. The result lands in
     * `emit(resultDf, batchId)`.
@@ -1919,44 +1928,25 @@ object StreamingOps {
     * cell-for-cell (spec-asserted): identical centroid-ranking kernel,
     * identical tie order (higher sim, then lower id).
     *
-    * Snapshot handling: the artifact root is re-resolved through
-    * [[graft.core.Artifacts.readablePath]] at EVERY batch (one
-    * existence check), so a stream started inside the crash window
-    * (root at `<path>.old`) heals the moment the next publish lands
-    * instead of reading the by-then-deleted aside forever; the cached
-    * codebook is keyed on [[graft.core.Artifacts.snapshotSig]] (which
-    * changes on EVERY publish, even when the resolved root does not),
-    * so a republish mid-stream switches codebook and lists TOGETHER at
-    * a batch boundary (they can never drift within one batch). */
+    * Snapshot handling: the current generation dir is re-resolved at
+    * EVERY batch ([[graft.core.DeltaIndex.current]], one manifest
+    * listing), and the cached codebook is keyed on that dir, which is
+    * unique per publish — so a republish mid-stream switches codebook
+    * and lists TOGETHER at a batch boundary (they can never drift
+    * within one batch). */
   def annProbeBatch(indexPath: String, k: Int, nProbe: Int)
                    (emit: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
     require(k > 0 && nProbe > 0, s"annProbeBatch: k=$k nProbe=$nProbe")
-    // The readable root is re-resolved EVERY batch (one FS existence
-    // check): a stream started inside the crash window (root at
-    // <path>.old) heals when the next publish restores <path>, instead
-    // of reading the by-then-deleted aside forever. The KB-scale
-    // codebook cache is keyed on the SNAPSHOT SIGNATURE (file listing
-    // of the codebook dir), NOT the root path: a normal mid-stream
-    // republish leaves the root unchanged (readablePath returns `path`
-    // whenever it exists), so a path-keyed cache would rank with stale
-    // centroids against freshly re-read new lists — codebook/lists
-    // drift. Every publishAtomic writes new codebook files, so the
-    // signature changes on every publish and the reload fires exactly
-    // when it must; codebook and lists still switch together at a
-    // batch boundary.
     var loaded: (String, Array[(Int, Array[Float])]) = null
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val root = graft.core.Artifacts.readablePath(spark, indexPath)
-      val sig = graft.core.Artifacts.snapshotSig(spark, s"$root/codebook")
-      if (loaded == null || loaded._1 != sig) {
-        loaded = (sig,
+      val root = graft.core.DeltaIndex.current(spark, indexPath)
+      if (loaded == null || loaded._1 != root) {
+        loaded = (root,
           graft.operators.Similarity.loadCodebook(spark, s"$root/codebook"))
       }
-      val cents = loaded._2
-      val listsPath = s"$root/lists"
       emit(graft.operators.Similarity.ivfTopKPruned(
-        spark, listsPath, cents, batch, k, nProbe), batchId)
+        spark, s"$root/lists", loaded._2, batch, k, nProbe), batchId)
     }
   }
 
@@ -1993,7 +1983,7 @@ object StreamingOps {
     * (spec-asserted). */
   def btUpsetStream(comparisons: DataFrame, strengthsPath: String): DataFrame = {
     val spark = comparisons.sparkSession
-    val root = graft.core.Artifacts.readablePath(spark, strengthsPath)
+    val root = graft.core.DeltaIndex.current(spark, strengthsPath)
     graft.operators.Analytics.btUpsetsAgainst(comparisons,
       spark.read.parquet(s"$root/strengths"))
   }
@@ -2004,7 +1994,7 @@ object StreamingOps {
     * [[graft.operators.Dedup.acceptanceGateIndexed]] (x176): each
     * arriving document (doc_id, lang, text, embedding) is judged
     * against the FROZEN acceptance index
-    * ([[graft.operators.Dedup.saveAcceptanceIndex]]'s one-publish
+    * ([[graft.operators.Dedup.saveAcceptanceIndex]]'s one-manifest
     * battery: exact texts + gram postings + semantic lists) and emits
     * the same (exact_ref, n_surface, n_sem, verdict) row batch x176
     * produces — the complete "do we already have this" gate at the
@@ -2017,10 +2007,9 @@ object StreamingOps {
     * query; and because every verdict is a pure per-document function
     * of (doc, frozen index), per-batch evaluation IS batch semantics
     * — no cross-batch state exists to lose. Replay over any chunking
-    * equals batch x176 row-for-row (spec-asserted). The index root is
-    * re-resolved per batch (readablePath inside
-    * acceptanceGateIndexed), so a stream started inside a publish
-    * crash window heals at the next batch. */
+    * equals batch x176 row-for-row (spec-asserted). The battery
+    * manifest is re-resolved per batch (inside acceptanceGateIndexed),
+    * so a maintenance commit reaches the gate at the next batch. */
   def acceptanceGateBatch(indexPath: String, maxDf: Int = 20,
                           tau: Double = graft.operators.Similarity.SemDedupTau)
                          (emit: (DataFrame, Long) => Unit)

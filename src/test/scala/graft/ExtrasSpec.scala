@@ -730,7 +730,8 @@ class ExtrasSpec extends SparkSpec {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    val allLists = new java.io.File(root + "/lists").listFiles()
+    val allLists = new java.io.File(
+        graft.core.DeltaIndex.current(spark, root) + "/lists").listFiles()
       .count(_.getName.startsWith("centroid_id="))
     val df = Similarity.ivfTopKIndexed(spark, root, queries, k = 5, nProbe = 1)
     df.collect()
@@ -746,28 +747,34 @@ class ExtrasSpec extends SparkSpec {
       .map(_.metrics("numFiles").value).sum
     assert(read > 0 && read <= 5 && read < allLists,
       s"scanned $read list files; expected <= 5 probed centroids of $allLists total")
-    // crash-window recovery: a publish that died between the two renames
-    // leaves <path>.old complete and <path> missing. Readers bridge the
-    // window READ-ONLY (no rename — a mutating read raced an in-flight
-    // publish, ADVICE r10); the writer-side recover() heals the layout.
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(root),
-      new org.apache.hadoop.fs.Path(root + ".old")))
+    // crash window: a republish that dies between the codebook and the
+    // lists write leaves the previous generation current — readers keep
+    // answering from it, and nothing lands beside the root
+    val before = graft.core.DeltaIndex.current(spark, root)
+    intercept[IllegalStateException] {
+      graft.core.DeltaIndex.publish(spark, root) { dir =>
+        Similarity.saveCodebook(loaded.centroids, s"$dir/codebook", spark)
+        throw new IllegalStateException("crash between codebook and lists")
+      }
+    }
+    assert(graft.core.DeltaIndex.current(spark, root) == before)
     val bridged = Similarity.loadIvfIndex(spark, root)
     assert(rows(Similarity.ivfTopK(bridged, queries, k = 5, nProbe = 1)) == viaLoaded,
       "read through the crash window drifted")
-    // the read-only bridge must NOT have mutated the layout
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(root)) &&
-      fs.exists(new org.apache.hadoop.fs.Path(root + ".old")),
-      "reader mutated the crash-window layout")
-    // explicit writer-side heal restores <path> and clears the aside
-    assert(graft.core.Artifacts.recover(spark, root))
+    val parent = new java.io.File(root).getParentFile
+    assert(parent.list().toSeq == Seq("ivf"), parent.list().toSeq)
+    // the next publish heals: it lands as the new generation, and its
+    // vacuum reaps the crashed attempt's dir with the superseded one
+    Similarity.saveIvfIndex(emb, root, nCentroids = 16)
+    val healedDir = graft.core.DeltaIndex.current(spark, root)
+    assert(healedDir != before)
+    assert(new java.io.File(root, "data").list().toSeq ==
+      Seq(new java.io.File(healedDir).getName))
     val healed = Similarity.loadIvfIndex(spark, root)
-    assert(rows(Similarity.ivfTopK(healed, queries, k = 5, nProbe = 1)) == viaLoaded,
-      "recovered index drifted")
-    assert(fs.exists(new org.apache.hadoop.fs.Path(root)) &&
-      !fs.exists(new org.apache.hadoop.fs.Path(root + ".old")))
+    assert(rows(Similarity.ivfTopK(healed, queries, k = 5, nProbe = 1)) ==
+      rows(Similarity.ivfTopK(Similarity.assignWithCodebook(emb, healed.centroids),
+        queries, k = 5, nProbe = 1)), "republished index drifted")
+    assert(parent.list().toSeq == Seq("ivf"), parent.list().toSeq)
   }
 
   test("Lloyd-trained IVF codebook bounds list imbalance on a skew-clustered corpus") {
@@ -2091,6 +2098,18 @@ class ExtrasSpec extends SparkSpec {
       "w=2 emitted a non-adjacent pair")
   }
 
+  /** The root paths of every file relation `df` reads, subqueries
+    * included (the plan string truncates long paths). */
+  private def scanRoots(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    df.queryExecution.optimizedPlan.collectWithSubqueries {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => h.location.rootPaths.map(_.toUri.getPath)
+        case _ => Nil
+      }
+    }.flatten
+  }
+
   test("x55: persisted decontamination index round-trips and gates batches with zero rebuild") {
     val tmp = java.nio.file.Files.createTempDirectory("decontam_idx").toString
     val all = Tables.load(spark, sf("sf0.001"), "documents")
@@ -2102,10 +2121,10 @@ class ExtrasSpec extends SparkSpec {
     assert(viaIndex == direct, "index-gated report drifted from the direct form")
     // and the per-batch plan touches the PARQUET index, never the
     // reference corpus's gram pipeline (no explode of reference text)
-    val plan = Dedup.decontaminateWithIndex(all.filter(!isRef), tmp)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains(s"$tmp/grams") && plan.contains(s"$tmp/bloom"),
-      s"expected the persisted index in the plan:\n$plan")
+    val gated = Dedup.decontaminateWithIndex(all.filter(!isRef), tmp)
+    val root = graft.core.DeltaIndex.current(spark, tmp)
+    assert(Seq("grams", "bloom").forall(p => scanRoots(gated).contains(s"$root/$p")),
+      s"expected the persisted index in the plan:\n${gated.queryExecution.executedPlan}")
   }
 
   test("x46/x52: persisted verified-pairs artifact round-trips; matrix from pairs equals inline") {
@@ -3364,9 +3383,9 @@ class ExtrasSpec extends SparkSpec {
     // no-rescan gate: the from-index plan reads ONLY the parquet
     // artifact — the corpus never appears (that is the artifact's point:
     // release-over-release audits at index cost, not corpus cost)
-    val plan = Sampling.leakageFromIndex(spark, tmp)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains(s"$tmp/grams"),
+    val audit = Sampling.leakageFromIndex(spark, tmp)
+    val plan = audit.queryExecution.executedPlan.toString
+    assert(scanRoots(audit).contains(s"${graft.core.DeltaIndex.current(spark, tmp)}/grams"),
       s"expected the persisted index in the plan:\n$plan")
     assert(!plan.contains("documents"),
       s"from-index audit still scans the corpus:\n$plan")
@@ -4201,7 +4220,7 @@ class ExtrasSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("bt_ladder").toString
     Analytics.saveBtStrengths(cmp.select($"winner", $"loser"), s"$dir/l")
     val viaIdx = Analytics.btUpsetsAgainst(cmp,
-        spark.read.parquet(graft.core.Artifacts.readablePath(spark, s"$dir/l")
+        spark.read.parquet(graft.core.DeltaIndex.current(spark, s"$dir/l")
           + "/strengths"))
       .as[(Long, Long, Long, Double, Long)].collect().toSet
     assert(viaIdx == out.toSet, "frozen-ladder scoring drifted from in-run")
@@ -4253,7 +4272,7 @@ class ExtrasSpec extends SparkSpec {
     Dedup.saveCrossProbeIndex(grown, s"$dirB/idx")
     for (part <- Seq("grams", "df", "sizes")) {
       def read(d: String) = {
-        val root = graft.core.Artifacts.readablePath(spark, s"$d/idx")
+        val root = s"$d/idx"
         val raw = graft.core.DeltaIndex.read(spark, root,
           graft.core.DeltaIndex.latest(spark, root), part)
         // df is appendable since round 20: per-generation partial counts
@@ -4269,7 +4288,7 @@ class ExtrasSpec extends SparkSpec {
     // O(index) rewrite would have replaced them)
     val mA = graft.core.DeltaIndex.latest(spark, s"$dirA/idx")
     assert(mA.gen == 1L, s"expected one appended generation, got ${mA.gen}")
-    assert(mA.parts("grams").head == "grams/g" + "0" * 19 &&
+    assert(mA.parts("grams").head.startsWith("grams/g" + "0" * 19 + "-") &&
       mA.parts("grams").length == 2 &&
       mA.parts("grams")(1).startsWith("grams/g" + "0" * 18 + "1-"),
       s"grams dirs: ${mA.parts("grams")}")
@@ -4283,7 +4302,7 @@ class ExtrasSpec extends SparkSpec {
     // double-ingest guard: replaying the same delivery must fail fast
     // BEFORE the commit, leaving the index untouched
     def sizesNow() = {
-      val root = graft.core.Artifacts.readablePath(spark, s"$dirA/idx")
+      val root = s"$dirA/idx"
       graft.core.DeltaIndex.read(spark, root,
         graft.core.DeltaIndex.latest(spark, root), "sizes")
         .collect().map(_.toSeq).toSet
@@ -4368,7 +4387,7 @@ class ExtrasSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     Similarity.saveSemRefIndex(ref, s"$dir/idx", k = 2, iters = 1)
     def codebook() = {
-      val root = graft.core.Artifacts.readablePath(spark, s"$dir/idx")
+      val root = s"$dir/idx"
       graft.core.DeltaIndex.read(spark, root,
         graft.core.DeltaIndex.latest(spark, root), "codebook")
         .collect().map(_.toSeq).toSet
@@ -4395,25 +4414,26 @@ class ExtrasSpec extends SparkSpec {
       "a refused append changed the probe verdict")
   }
 
-  test("x175 append heals the publish crash window before writing (writer-side recover)") {
+  test("x175 a crashed append stays invisible and its retry lands") {
     def blk(tag: String) = (1 to 12).map(i => s"$tag$i").mkString(" ")
     val dir = java.nio.file.Files.createTempDirectory("xappend_crash").toString
     val ref = Seq((100L, "en", blk("one")), (101L, "en", blk("two")))
       .toDF("doc_id", "lang", "text")
     Dedup.saveCrossProbeIndex(ref, s"$dir/idx")
-    // simulate the crash-between-renames window: the live dir is aside
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(s"$dir/idx"),
-      java.nio.file.Paths.get(s"$dir/idx.old"))
+    // simulate an append that crashed after its delta write, before its
+    // commit: the delta dirs exist and no manifest names them
+    val m0 = graft.core.DeltaIndex.latest(spark, s"$dir/idx")
     val d1 = Seq((1L, "en", blk("three"))).toDF("doc_id", "lang", "text")
-    Dedup.appendToCrossProbeIndex(d1, s"$dir/idx")
-    val healedRoot = graft.core.Artifacts.readablePath(spark, s"$dir/idx")
-    val sizes = graft.core.DeltaIndex.read(spark, healedRoot,
-        graft.core.DeltaIndex.latest(spark, healedRoot), "sizes")
+    Dedup.writeCrossDelta(d1, s"$dir/idx", m0, m0.gen + 1, 3, hashGrams = false)
+    def sizes() = graft.core.DeltaIndex.read(spark, s"$dir/idx",
+        graft.core.DeltaIndex.latest(spark, s"$dir/idx"), "sizes")
       .select($"doc_id").as[Long].collect().toSet
-    assert(sizes == Set(100L, 101L, 1L), s"got $sizes")
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$dir/idx.old")), "aside copy left behind")
+    assert(sizes() == Set(100L, 101L), "a reader saw the uncommitted append")
+    // the retry writes its own attempt dirs and commits them
+    Dedup.appendToCrossProbeIndex(d1, s"$dir/idx")
+    assert(sizes() == Set(100L, 101L, 1L), s"got ${sizes()}")
+    assert(new java.io.File(dir).list().toSeq == Seq("idx"),
+      "something was written beside the root")
   }
 
   test("x176 per-doc rarity is the deliberate boundary vs x174: a delivery-flooded gram still gates") {
@@ -4558,8 +4578,8 @@ class ExtrasSpec extends SparkSpec {
     assert(fit() == first)
     assert(Similarity.fitComputes.get() == before + 1,
       "a memo hit re-ran the Lloyd jobs")
-    // the SAME path rewritten with different data (the rebuild staging
-    // shape) must recompute — the key carries the file inventory
+    // the SAME path rewritten with different data must recompute — the
+    // key carries the file inventory
     Seq(0L -> Array(0.6f, 0.8f), 1L -> Array(0.8f, 0.6f))
       .toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/v")
@@ -4610,8 +4630,10 @@ class ExtrasSpec extends SparkSpec {
     Similarity.rebuildSemRefIndex(spark, s"$dir/idx", k = 3, iters = 2)
     assert(probe() == Seq((100L, 3L, 0L)),
       s"post-rebuild the paraphrases must co-cluster: ${probe()}")
-    assert(graft.core.DeltaIndex.latest(spark, s"$dir/idx").gen == 0L,
-      "a rebuild publishes a fresh generation-0 artifact")
+    assert(graft.core.DeltaIndex.latest(spark, s"$dir/idx").gen == 2L,
+      "a rebuild commits the next generation (build 0, append 1, rebuild 2)")
+    assert(new java.io.File(dir).list().toSeq == Seq("idx"),
+      "the rebuild wrote beside the root")
   }
 
   test("processDelivery composes the loop: gate, drift, O(delta) ingest, ledger — over three deliveries") {
@@ -4906,7 +4928,7 @@ class ExtrasSpec extends SparkSpec {
     val dB = cand.filter($"doc_id" % 2 =!= 0)
     val dir = java.nio.file.Files.createTempDirectory("xrace").toString
     Dedup.saveCrossProbeIndex(ref, s"$dir/idx")
-    val root = graft.core.Artifacts.readablePath(spark, s"$dir/idx")
+    val root = s"$dir/idx"
     // both writers resolve the SAME base manifest...
     val m0 = graft.core.DeltaIndex.latest(spark, root)
     // ...writer A wins: full append commits generation 1
@@ -5215,9 +5237,10 @@ class ExtrasSpec extends SparkSpec {
       .as[(Long, Long, String)].collect().toSeq
     assert(vOn == Seq((100L, 12L, "review")),
       s"post-rebuild the paraphrase must be caught against all 12: $vOn")
-    // the battery pins the refit generation (a rebuild restarts the sem
-    // numbering at 0 and the re-pin commit records it)
-    assert(graft.core.DeltaIndex.latest(spark, idxOn).params("semGen") == "0",
+    // the battery pins the refit generation: sem build 0, delivery-1
+    // append 1, the refit 2 (numbering never restarts); delivery 2's
+    // paraphrase is reviewed, not admitted, so nothing appends after it
+    assert(graft.core.DeltaIndex.latest(spark, idxOn).params("semGen") == "2",
       "the rebuild must re-pin semGen to the refit lineage")
     // control: the same loop with the policy off misses the paraphrase
     val (without, _) = run(rebuildOnDrift = false)
@@ -5270,8 +5293,8 @@ class ExtrasSpec extends SparkSpec {
     assert(!outs(0).compacted && outs(0).batteryGen == Some(1L), s"${outs(0)}")
     // delivery 2's append brings grams/sizes/texts to 3 dirs -> fires
     assert(outs(1).compacted, s"delivery 2 should have compacted: ${outs(1)}")
-    assert(outs(1).batteryGen == Some(0L),
-      s"compaction restarts the generation numbering: ${outs(1)}")
+    assert(outs(1).batteryGen == Some(3L),
+      s"compaction commits the next generation (append 2, compaction 3): ${outs(1)}")
     val m = graft.core.DeltaIndex.latest(spark, idx)
     assert(m.parts.values.forall(_.length == 1),
       s"compacted parts must be single dirs: ${m.parts}")
@@ -5283,7 +5306,7 @@ class ExtrasSpec extends SparkSpec {
       s"the re-delivered admit must reject across the compaction: ${verdicts(2)}")
   }
 
-  test("a crashed drift-rebuild's dangling sem pin heals on the next delivery") {
+  test("a crashed drift-rebuild's refit is re-pinned on the next delivery") {
     def blk(tag: String) = (1 to 12).map(i => s"$tag$i").mkString(" ")
     val dir = java.nio.file.Files.createTempDirectory("heal_pin").toString
     val (idx, led) = (s"$dir/idx", s"$dir/led")
@@ -5299,20 +5322,34 @@ class ExtrasSpec extends SparkSpec {
         .toDF("doc_id", "lang", "text", "embedding"),
       idx, led, maxDf = 100, tau = 0.9)
     assert(graft.core.DeltaIndex.latest(spark, idx).params("semGen") == "1")
-    // simulate the crash window: the sem republish landed (numbering
-    // restarted at 0), the battery re-pin commit did not
-    graft.operators.Similarity.rebuildSemRefIndex(spark, s"$idx/sem", k = 2,
-      iters = 1)
-    assert(graft.core.DeltaIndex.latest(spark, s"$idx/sem").gen == 0L)
+    // simulate the crash window: the sem refit committed generation 2
+    // (same vectors, new codebook), the battery re-pin commit did not
+    assert(graft.operators.Similarity.rebuildSemRefIndex(spark, s"$idx/sem",
+      k = 2, iters = 1) == 2L)
     assert(graft.core.DeltaIndex.latest(spark, idx).params("semGen") == "1",
-      "precondition: the pin dangles")
-    // the next delivery heals the pin up front and completes normally
-    val o = Dedup.processDelivery(
-      Seq((21L, "en", blk("epsilon"), Array(-0.7f, 0.7f)))
-        .toDF("doc_id", "lang", "text", "embedding"),
-      idx, led, maxDf = 100, tau = 0.9)
+      "precondition: the battery still pins the pre-refit generation")
+    // the pinned generation is still complete: the gate keeps working
+    val gate = Dedup.acceptanceGateIndexed(
+        Seq((30L, "en", blk("gamma"), Array(0.7f, 0.71f)))
+          .toDF("doc_id", "lang", "text", "embedding"), idx, maxDf = 100, tau = 0.9)
+      .select($"cand_id", $"verdict").as[(Long, String)].collect().toSeq
+    assert(gate == Seq((30L, "reject")), s"$gate")
+    // without the heal the append's sem-ahead branch refuses the refit
+    // as a foreign generation (same ids as the pin, not this delivery's)
+    val d = Seq((21L, "en", blk("epsilon"), Array(-0.7f, 0.7f)))
+      .toDF("doc_id", "lang", "text", "embedding")
+    intercept[IllegalArgumentException] {
+      Dedup.appendToAcceptanceIndex(d.drop("embedding"),
+        d.select($"doc_id".as("vec_id"), $"embedding"), idx)
+    }
+    // the next delivery re-pins up front and completes normally
+    val o = Dedup.processDelivery(d, idx, led, maxDf = 100, tau = 0.9)
     assert(o.admitted == 1L, s"$o")
-    assert(graft.core.DeltaIndex.latest(spark, idx).params("semGen") == "1",
-      "heal re-pinned to sem latest, then the append advanced it")
+    val m = graft.core.DeltaIndex.latest(spark, idx)
+    assert(m.params("semGen") == "3" &&
+      graft.core.DeltaIndex.latest(spark, s"$idx/sem").gen == 3L,
+      s"heal re-pinned to the refit (2), then the append advanced it: $m")
+    assert(new java.io.File(dir).list().toSeq.sorted == Seq("idx", "led"),
+      "something was written beside the roots")
   }
 }

@@ -40,7 +40,6 @@ class SharingSpec extends SparkSpec {
   test("connectedComponents, pageRank and bpeMergeTable leave nothing cached or persisted") {
     import graft.operators.{Dedup, Graph, TextAnalysis}
     import spark.implicits._
-    spark.catalog.clearCache()
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     val nodes = (1L to 12L).toDF("id")
@@ -73,7 +72,6 @@ class SharingSpec extends SparkSpec {
     * with a noop write, asserting after every action that nothing was
     * left cached and that no face's plan reads a cache. */
   private def runUncached(faces: Seq[String]): Unit = {
-    spark.catalog.clearCache()
     for (f <- faces) {
       val df = SparkEntry.queries(f)(spark, sf("sf0.001"))
       df.write.format("noop").mode("overwrite").save()
@@ -94,5 +92,29 @@ class SharingSpec extends SparkSpec {
       "x123_link_degrees", "x114_link_graph")
     runUncached(floor)
     runUncached(floor.reverse)
+  }
+
+  test("the stream-static gates leave nothing cached once their queries stop") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.streaming.StreamingOps
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def day(n: Int) = java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(9000L + n))
+    val docs = MemoryStream[(Long, String)]
+    docs.addData((1L, "alpha beta gamma delta epsilon zeta"))
+    val pts = MemoryStream[(Long, java.sql.Date)]
+    pts.addData((1L, day(3)))
+    val gates: Seq[(() => DataFrame, String)] = Seq(
+      (() => StreamingOps.decontaminateStream(docs.toDF().toDF("doc_id", "text"),
+        Seq((7L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")), "update"),
+      (() => StreamingOps.oovStream(docs.toDF().toDF("doc_id", "text"),
+        Seq("alpha", "beta").toDF("term")), "update"),
+      (() => StreamingOps.intervalMatchStream(pts.toDF().toDF("pid", "d"),
+        Seq((10L, day(0), day(9))).toDF("id", "d0", "d1"), binDays = 7), "append"))
+    for ((gate, mode) <- gates) {
+      val q = gate().writeStream.outputMode(mode).format("noop").start()
+      try q.processAllAvailable() finally q.stop()
+      assert(cacheEmpty, s"a $mode gate left its static side cached")
+    }
   }
 }

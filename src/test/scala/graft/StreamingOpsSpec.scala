@@ -377,7 +377,8 @@ class StreamingOpsSpec extends SparkSpec {
       .as[(Long, Long, Int)].collect().toSet
     assert(batch.nonEmpty, "vacuous: batch probe returned nothing")
 
-    val allLists = new java.io.File(root + "/lists").listFiles()
+    val allLists = new java.io.File(
+        graft.core.DeltaIndex.current(spark, root) + "/lists").listFiles()
       .count(_.getName.startsWith("centroid_id="))
     // per-batch evidence: result rows + how many list files the pruned
     // scan actually read (the batch IVF gate's numFiles discipline)
@@ -437,12 +438,11 @@ class StreamingOpsSpec extends SparkSpec {
   test("streaming ANN probe reloads the codebook after a mid-stream republish at an UNCHANGED root") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Similarity
-    // the r11 ADVICE failure mode: a normal republish leaves the
-    // resolved root unchanged (readablePath returns `path` whenever it
-    // exists), so a cache keyed on the PATH would keep ranking with the
-    // old codebook's centroids against the freshly re-read NEW lists —
-    // silent codebook/lists drift. The cache is keyed on the snapshot
-    // signature instead; this pins the reload.
+    // the r11 ADVICE failure mode: a republish leaves the artifact root
+    // unchanged, so a cache keyed on the ROOT would keep ranking with
+    // the old codebook's centroids against the freshly re-read NEW
+    // lists — silent codebook/lists drift. The cache is keyed on the
+    // current generation dir, unique per publish; this pins the reload.
     val emb = graft.core.Tables.load(spark, sf("sf0.001"), "embeddings")
     val root = java.nio.file.Files.createTempDirectory("ivf-republish").toString + "/ivf"
     Similarity.saveIvfIndex(emb, root, nCentroids = 16)
@@ -1461,7 +1461,7 @@ class StreamingOpsSpec extends SparkSpec {
     val base = graft.core.Tables.load(spark, sf("sf0.001"), "documents")
     Sampling.saveLeakageIndex(base, s"$dir/idx")
     val index = spark.read.parquet(
-      graft.core.Artifacts.readablePath(spark, s"$dir/idx") + "/grams")
+      graft.core.DeltaIndex.current(spark, s"$dir/idx") + "/grams")
     val batch = Sampling.leakageProbe(
         base.select($"doc_id", $"text"), index)
       .as[(Long, String, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
@@ -2013,7 +2013,7 @@ class StreamingOpsSpec extends SparkSpec {
     val cmp = Analytics.plantedComparisons(spark, sf("sf0.001"))
     Analytics.saveBtStrengths(cmp.select($"winner", $"loser"), s"$dir/l")
     val batch = Analytics.btUpsetsAgainst(cmp,
-        spark.read.parquet(graft.core.Artifacts.readablePath(spark, s"$dir/l")
+        spark.read.parquet(graft.core.DeltaIndex.current(spark, s"$dir/l")
           + "/strengths"))
       .as[(Long, Long, Long, Double, Long)].collect().toSet
     assert(batch.exists(_._5 == 1L) && batch.exists(_._5 == 0L))

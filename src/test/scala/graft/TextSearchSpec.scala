@@ -76,7 +76,8 @@ class TextSearchSpec extends SparkSpec {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    val allBuckets = new java.io.File(dir + "/postings").listFiles()
+    val allBuckets = new java.io.File(
+        graft.core.DeltaIndex.current(spark, dir) + "/postings").listFiles()
       .count(_.getName.startsWith("term_bucket="))
     val nTerms = TextSearch.demoQueries
       .flatMap(_._2.split(" ").filter(_.nonEmpty)).distinct.size
@@ -97,5 +98,30 @@ class TextSearchSpec extends SparkSpec {
     assert(read > 0 && read <= nTerms && read < allBuckets,
       s"scanned $read postings files; expected <= $nTerms query-term buckets " +
         s"of $allBuckets total")
+  }
+
+  test("a save that dies after the postings land leaves the previous index scoring identically") {
+    val docs = graft.core.Tables.load(spark, sf("sf0.001"), "documents")
+    val dir = java.nio.file.Files.createTempDirectory("bm25torn").toString + "/idx"
+    TextSearch.saveIndex(docs, dir)
+    def answer() = TextSearch.bm25TopKIndexed(spark, dir, TextSearch.demoQueries)
+      .orderBy($"query_id", $"rank").collect().toSeq
+    val before = answer()
+    // half the corpus: new postings AND new n_docs/avgdl
+    val half = docs.filter($"doc_id" % 2 === 0)
+    CrashFs.crashing(spark)((step, p) => step == CrashFs.Create &&
+        p.toUri.getPath.startsWith(s"$dir/") && p.toUri.getPath.contains("/stats/") &&
+        p.getName.startsWith("part-")) {
+      TextSearch.saveIndex(half, dir)
+    }
+    // the crash landed after the new postings were complete on disk
+    val attempts = new java.io.File(dir, "data").listFiles()
+    assert(attempts.exists(g => new java.io.File(g, "postings/_SUCCESS").exists() &&
+      g.getPath != graft.core.DeltaIndex.current(spark, dir)),
+      "the crash fired before the new postings landed")
+    assert(answer() == before, "new postings were scored against the old stats")
+    // non-vacuous: the completed save does change the answer
+    TextSearch.saveIndex(half, dir)
+    assert(answer() != before)
   }
 }
