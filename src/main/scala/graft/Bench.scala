@@ -180,12 +180,6 @@ object Bench {
     if (elapsedSec <= 0 || cores <= 0) 0.0
     else math.max(0.0, (machineBusyDelta - selfDelta) / (elapsedSec * cores * hz))
 
-  /** Retry decision for the external-CPU signal (complements
-    * [[shouldRetry]]'s probe-sandwich signal).
-    */
-  def shouldRetryExt(ext: Double, attempt: Int): Boolean =
-    ext > ExternalShareMax && attempt < MaxAttempts
-
   /** Fraction of a timed region's wall clock spent in this JVM's GC
     * pauses (gcMillisDelta is cumulative GarbageCollectorMXBean pause
     * time). Clamped at 0; -1 propagates when either input is missing.
@@ -201,13 +195,6 @@ object Bench {
                   cores: Int, hz: Double = 100.0): Double =
     if (iowaitDelta < 0 || elapsedSec <= 0 || cores <= 0) -1.0
     else math.max(0.0, iowaitDelta / (elapsedSec * cores * hz))
-
-  /** Retry decision for the non-CPU signals (GC pressure / disk stall).
-    * Either share over its budget poisons the attempt — these are the
-    * faces the r6 driver's inflated x39 slipped through.
-    */
-  def shouldRetryGcIo(gc: Double, io: Double, attempt: Int): Boolean =
-    (gc > GcShareMax || io > IowaitShareMax) && attempt < MaxAttempts
 
   /** Cumulative GC pause milliseconds across this JVM's collectors; -1
     * when the platform reports none.
@@ -232,11 +219,28 @@ object Bench {
     try parseLoadAvg(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("/proc/loadavg"))))
     catch { case _: Throwable => -1.0 }
 
-  /** Retry decision: attempt `n` (1-based) ran with calibration `calib`
-    * against `baseline`; retry while poisoned and attempts remain.
+  /** Was a timed region disturbed? Any one of FOUR independent signals
+    * poisons it:
+    *  - calibration SANDWICH: the worse probe side over `baseline` ×
+    *    [[ContendedFactor]] (contention alive at either edge — ADVICE r4);
+    *  - external-CPU share over [[ExternalShareMax]] (a hog that starts
+    *    and stops strictly inside the region — the r5 x02 blind spot);
+    *  - GC-pause share over [[GcShareMax]] or machine iowait share over
+    *    [[IowaitShareMax]]: the NON-CPU blind spot (r6's x39=15.7s vs a
+    *    real ~4.4s passed both CPU signals — memory pressure or
+    *    page-cache eviction stretches wall time without external CPU).
+    * A -1 (unreadable) share never trips its signal.
     */
-  def shouldRetry(calib: Double, baseline: Double, attempt: Int): Boolean =
-    calib > baseline * ContendedFactor && attempt < MaxAttempts
+  def contended(calib: Double, ext: Double, gc: Double, io: Double,
+                baseline: Double): Boolean =
+    calib > baseline * ContendedFactor || ext > ExternalShareMax ||
+      gc > GcShareMax || io > IowaitShareMax
+
+  /** Retry decision: attempt `n` (1-based) measured `p` against
+    * `baseline`; retry while disturbed and attempts remain.
+    */
+  def shouldRetry(p: Probe, baseline: Double, attempt: Int): Boolean =
+    attempt < MaxAttempts && contended(p.calib, p.ext, p.gc, p.io, baseline)
 
   /** Contention-deflated estimate of a query's quiet-machine time. The
     * calibration probe is FIXED work, so the ratio of a query's own
@@ -316,21 +320,60 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** What [[timed]] measured around one body: wall seconds, the
+    * calibration probe on each side, and the external-CPU, GC-pause and
+    * iowait shares of the region (each -1 when its counters are
+    * unreadable). */
+  final case class Probe(elapsed: Double, calibPre: Double, calibPost: Double,
+                         ext: Double, gc: Double, io: Double) {
+    /** The worse side of the sandwich: contention alive at either edge. */
+    def calib: Double = math.max(calibPre, calibPost)
+  }
+
+  // machine-wide shares must divide by the MACHINE's cores (what the
+  // aggregate /proc/stat line integrates over), not the cgroup view
+  private lazy val machineCores: Int = {
+    val m = scala.util.Try(parseMachineCores(
+      new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get("/proc/stat"))))).getOrElse(0)
+    if (m > 0) m else Runtime.getRuntime.availableProcessors()
+  }
+
+  /** Runs `body` inside the calibration sandwich: a [[calibrate]] probe
+    * just before and just after it, and the GC-pause and /proc jiffy
+    * counters read around the timed region itself, so the shares
+    * integrate over the WHOLE body while the probes sample its edges.
+    */
+  def timed[T](spark: SparkSession)(body: => T): (T, Probe) = {
+    val calibPre = calibrate(spark)
+    val gc0 = readGcMillis()
+    val (mb0, sj0, io0) = readCpuJiffies()
+    val t0 = System.nanoTime()
+    val out = body
+    val elapsed = (System.nanoTime() - t0) / 1e9
+    val (mb1, sj1, io1) = readCpuJiffies()
+    val gc1 = readGcMillis()
+    val calibPost = calibrate(spark)
+    val ext =
+      if (mb0 >= 0 && sj0 >= 0 && mb1 >= 0 && sj1 >= 0)
+        externalShare(mb1 - mb0, sj1 - sj0, elapsed, machineCores)
+      else -1.0
+    val gcs = if (gc0 >= 0 && gc1 >= 0) gcShare(gc1 - gc0, elapsed) else -1.0
+    val ios =
+      if (io0 >= 0 && io1 >= 0) iowaitShare(io1 - io0, elapsed, machineCores)
+      else -1.0
+    (out, Probe(elapsed, calibPre, calibPost, ext, gcs, ios))
+  }
+
   private def jsonMap(entries: Seq[(String, String)]): String =
     entries.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
 
-  // Locale.ROOT: the f"" interpolator is locale-sensitive, and a
-  // comma decimal separator (de_DE etc.) would corrupt the JSON line.
-  private def fmt(d: Double): String =
-    if (d == d) String.format(java.util.Locale.ROOT, "%.4f", Double.box(d)) else "-1"
-
-  /** Compact-line value format: N SIGNIFICANT digits ("0.773", "1.23",
-    * "99.1" — ms resolution where it matters, short everywhere) so the
-    * line stays inside the driver's 2 KB tail as the query count grows;
-    * the full-precision record is the line above. %g's exponent form
-    * ("1.23e-05") is still a valid JSON number. */
-  private def fmtSig(d: Double, sig: Int): String =
-    if (d == d) String.format(java.util.Locale.ROOT, s"%.${sig}g", Double.box(d)) else "-1"
+  /** The number format of every JSON record line: `pattern` under
+    * Locale.ROOT (the f"" interpolator is locale-sensitive, and a comma
+    * decimal separator — de_DE etc. — would corrupt the line), and NaN,
+    * which is not a JSON number, as -1. */
+  private[graft] def fmt(d: Double, pattern: String = "%.4f"): String =
+    if (d == d) String.format(java.util.Locale.ROOT, pattern, Double.box(d)) else "-1"
 
   /** Byte budget for the compact line: the driver tails 2000 bytes of
     * stdout, and sbt appends a "[success] Total time: ..." trailer
@@ -366,13 +409,15 @@ object Bench {
         s""""contended":$contended,"baseline_suspect":$baselineSuspect,"sf":"$sf"}"""
     }
     def fits(l: String): Boolean = l.getBytes("UTF-8").length <= CompactLineBudget
-    // centiseconds — the floor format: bounded 4-5 chars for any sane
-    // query time, so the pathological all-values-wide case stays bounded
-    def fmtCs(d: Double): String =
-      if (d == d) String.format(java.util.Locale.ROOT, "%.2f", Double.box(d)) else "-1"
+    // Values take N SIGNIFICANT digits ("0.773", "1.23", "99.1" — ms
+    // resolution where it matters, short everywhere; %g's exponent form
+    // "1.23e-05" is still a JSON number), the floor tier centiseconds:
+    // bounded 4-5 chars for any sane query time, so the pathological
+    // all-values-wide case stays bounded
+    def fmtCs(d: Double): String = fmt(d, "%.2f")
     val tiers: Seq[(Double => String, Int)] = Seq(
-      (fmtSig(_, 3), Int.MaxValue), (fmtSig(_, 2), Int.MaxValue),
-      (fmtSig(_, 2), 3), (fmtCs _, 3))
+      (fmt(_, "%.3g"), Int.MaxValue), (fmt(_, "%.2g"), Int.MaxValue),
+      (fmt(_, "%.2g"), 3), (fmtCs _, 3))
     tiers.iterator.map { case (f, mc) => render(f, mc, queries, 0) }
       .find(fits)
       .getOrElse {
@@ -435,14 +480,6 @@ object Bench {
         load: (Double, Double), // loadavg at query start / end
         contended: Boolean)
 
-    // machine-wide shares must divide by the MACHINE's cores (what the
-    // aggregate /proc/stat line integrates over), not the cgroup view
-    val cores = {
-      val m = scala.util.Try(parseMachineCores(
-        new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/stat"))))).getOrElse(0)
-      if (m > 0) m else Runtime.getRuntime.availableProcessors()
-    }
     // Optional local-iteration filter: SPARK_GRAFT_ONLY=x59_interval_join
     // times just the named queries. The driver never sets it; the full
     // suite remains the default.
@@ -463,50 +500,18 @@ object Bench {
         var retry = true
         while (retry) {
           attempt += 1
-          // FOUR independent contention signals per attempt:
-          //  - calibration SANDWICH: probe before and after the timed
-          //    runs; the worse side is the attempt's calibration (catches
-          //    contention alive at either edge — ADVICE r4);
-          //  - external-CPU attribution: /proc jiffies integrated over
-          //    the WHOLE timed region (catches a hog that starts and
-          //    stops strictly inside the query — the r5 x02 blind spot);
-          //  - GC-pause share and machine iowait share: the NON-CPU
-          //    blind spot (r6's x39=15.7s vs a real ~4.4s passed both
-          //    CPU signals — memory pressure / page-cache eviction
-          //    stretches wall time without external CPU burn).
-          val calibPre = calibrate(spark)
-          val gc0 = readGcMillis()
-          val (mb0, sj0, io0) = readCpuJiffies()
-          val tq0 = System.nanoTime()
-          val cold = run(fn)
-          val warm = run(fn)
-          val elapsed = (System.nanoTime() - tq0) / 1e9
-          val (mb1, sj1, io1) = readCpuJiffies()
-          val gc1 = readGcMillis()
-          val calib = math.max(calibPre, calibrate(spark))
-          val ext =
-            if (mb0 >= 0 && sj0 >= 0 && mb1 >= 0 && sj1 >= 0)
-              externalShare(mb1 - mb0, sj1 - sj0, elapsed, cores)
-            else -1.0
-          val gcs =
-            if (gc0 >= 0 && gc1 >= 0) gcShare(gc1 - gc0, elapsed) else -1.0
-          val ios =
-            if (io0 >= 0 && io1 >= 0) iowaitShare(io1 - io0, elapsed, cores)
-            else -1.0
+          val ((cold, warm), p) = timed(spark)((run(fn), run(fn)))
           if (firstCold < 0) firstCold = cold
           if (math.min(cold, warm) < bestTime) {
-            bestTime = math.min(cold, warm); bestExt = ext; bestGc = gcs; bestIo = ios
+            bestTime = math.min(cold, warm); bestExt = p.ext; bestGc = p.gc; bestIo = p.io
           }
-          bestCalib = math.min(bestCalib, calib)
-          retry = shouldRetry(calib, baseline, attempt) ||
-            shouldRetryExt(ext, attempt) || shouldRetryGcIo(gcs, ios, attempt)
+          bestCalib = math.min(bestCalib, p.calib)
+          retry = shouldRetry(p, baseline, attempt)
           if (retry) Thread.sleep(3000) // let a transient spike pass
         }
         QueryResult(name, bestTime, firstCold, bestCalib, bestExt, bestGc, bestIo,
           attempt, (l0, readLoadAvg()),
-          contended = bestCalib > baseline * ContendedFactor ||
-            bestExt > ExternalShareMax ||
-            bestGc > GcShareMax || bestIo > IowaitShareMax)
+          contended = contended(bestCalib, bestExt, bestGc, bestIo, baseline))
       } catch {
         // Failures are reported as -1 so the driver can tell them from a
         // fast success.
@@ -559,21 +564,29 @@ object Bench {
     // drift shows up in the committed record like a wall-time regression
     // would (the specs assert recall once at fixed fixtures; this tracks
     // it at the bench SF). Pairs compare as (query_id, neighbor_id) sets.
-    val annRecalls: Seq[(String, Double)] =
+    def pairs(df: DataFrame): Set[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // An empty exact answer (possible at a tiny bench SF) would make
+    // every recall 0/0 = NaN — which is not valid JSON and breaks
+    // downstream artifact parsing; both blocks are skipped instead,
+    // matching the catch arms' "absent, not garbage" contract.
+    val exact: Set[(Long, Long)] =
       try {
-        val exact = SparkEntry.queries("x05_cosine_knn")(spark, sfDir)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        // An empty exact answer (possible at a tiny bench SF) would make
-        // every recall 0/0 = NaN — which is not valid JSON and breaks
-        // downstream artifact parsing; skip the block instead, matching
-        // the catch arm's "absent, not garbage" contract.
-        if (exact.isEmpty) {
-          System.err.println("[bench] ann recall skipped: exact x05 empty")
-          Seq.empty
-        } else Seq("x06_ann_ivf", "x06_ann_lsh", "x17_quant_knn", "x140_jl_knn").map { name =>
-          val approx = SparkEntry.queries(name)(spark, sfDir)
-            .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-          name -> (exact intersect approx).size.toDouble / exact.size
+        val e = pairs(SparkEntry.queries("x05_cosine_knn")(spark, sfDir))
+        if (e.isEmpty) System.err.println("[bench] ann recall skipped: exact x05 empty")
+        e
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] exact x05 failed: $e")
+          Set.empty
+      }
+    def recall(approx: Set[(Long, Long)]): Double =
+      (exact intersect approx).size.toDouble / exact.size
+    val annRecalls: Seq[(String, Double)] =
+      if (exact.isEmpty) Seq.empty
+      else try {
+        Seq("x06_ann_ivf", "x06_ann_lsh", "x17_quant_knn", "x140_jl_knn").map { name =>
+          name -> recall(pairs(SparkEntry.queries(name)(spark, sfDir)))
         }
       } catch {
         case e: Throwable =>
@@ -585,16 +598,13 @@ object Bench {
     // nProbe 1/2/4 against the same exact answer — the per-budget
     // recall curve a deployment reads to pick its probe budget.
     val ivfSweep: Seq[(Int, Double, Double)] =
-      try {
-        val exact = SparkEntry.queries("x05_cosine_knn")(spark, sfDir)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        if (exact.isEmpty) Seq.empty
-        else Seq(1, 2, 4).map { np =>
+      if (exact.isEmpty) Seq.empty
+      else try {
+        Seq(1, 2, 4).map { np =>
           val t0 = System.nanoTime()
-          val approx = graft.operators.Similarity.ivfQueryN(spark, sfDir, np)
-            .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+          val approx = pairs(graft.operators.Similarity.ivfQueryN(spark, sfDir, np))
           val sec = (System.nanoTime() - t0) / 1e9
-          (np, (exact intersect approx).size.toDouble / exact.size, sec)
+          (np, recall(approx), sec)
         }
       } catch {
         case e: Throwable =>
@@ -645,9 +655,9 @@ object Bench {
     }
     val streamExtra = stream.toSeq.flatMap { r =>
       Seq(
-        "stream_rows_per_sec" -> fmtSig(r.rowsPerSec, 5),
-        "stream_rows_per_sec_attested" -> fmtSig(r.rowsPerSecAttested, 5),
-        "stream_attest_factor" -> fmtSig(r.attestFactor, 3),
+        "stream_rows_per_sec" -> fmt(r.rowsPerSec, "%.5g"),
+        "stream_rows_per_sec_attested" -> fmt(r.rowsPerSecAttested, "%.5g"),
+        "stream_attest_factor" -> fmt(r.attestFactor, "%.3g"),
         "stream_batches" -> r.batches.toString,
         "stream_ok" -> r.ok.toString)
     } ++ annRecalls.map { case (name, rec) =>
@@ -656,15 +666,10 @@ object Bench {
       s"recall_ivf_np$np" -> fmt(rec)
     } ++ deliveryLoop.toSeq.flatMap { r =>
       Seq(
-        "dlv_sec" -> r.perSec.map(s => fmtSig(s, 3)).mkString("[", ",", "]"),
-        "dlv_flat_sec" -> fmtSig(
-          if (r.perSec.length < 4) -1.0
-          else (r.perSec.takeRight(2).sum / 2.0) /
-            math.max(r.perSec.take(2).sum / 2.0, 1e-9), 3),
-        "dlv_flat_bytes" -> fmtSig(
-          if (r.perBytes.length < 4) -1.0
-          else (r.perBytes.takeRight(2).sum / 2.0) /
-            math.max(r.perBytes.take(2).sum / 2.0, 1e-9), 3),
+        "dlv_sec" -> r.perSec.map(fmt(_, "%.3g")).mkString("[", ",", "]"),
+        "dlv_flat_sec" -> fmt(DeliveryBench.flatRatio(r.perSec), "%.3g"),
+        "dlv_flat_bytes" ->
+          fmt(DeliveryBench.flatRatio(r.perBytes.map(_.toDouble)), "%.3g"),
         "dlv_ok" -> r.ok.toString)
     }
     println(compactLine(total, attestedTotal, results.map(r => r.name -> r.warm),

@@ -93,31 +93,23 @@ object DeliveryBench {
     }
   }
 
-  // Locale.ROOT: a comma decimal separator would corrupt the JSON line.
-  private def d2(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+  /** Mean of the last two points over the mean of the first two — ~1
+    * is the O(delta) signature; growth with index size reads directly
+    * as > 1. -1 with fewer than 4 points. */
+  def flatRatio(xs: Seq[Double]): Double =
+    if (xs.length < 4) -1.0
+    else (xs.takeRight(2).sum / 2.0) / math.max(xs.take(2).sum / 2.0, 1e-9)
 
-  /** The full JSON record line. `flat_ratio` = mean of the last two
-    * deliveries over the mean of the first two — ~1 is the O(delta)
-    * signature; growth with index size reads directly as > 1. */
+  /** The full JSON record line. */
   def record(r: Result): String = {
-    def ratio(xs: Seq[Double]): Double =
-      if (xs.length < 4) -1.0
-      else (xs.takeRight(2).sum / 2.0) / math.max(xs.take(2).sum / 2.0, 1e-9)
+    def d2(v: Double) = Bench.fmt(v, "%.2f")
     s"""{"metric":"delivery_loop","deliveries":${r.deliveries},""" +
       s""""build_sec":${d2(r.buildSec)},""" +
       s""""per_delivery_sec":[${r.perSec.map(d2).mkString(",")}],""" +
       s""""per_delivery_bytes":[${r.perBytes.mkString(",")}],""" +
       s""""per_delivery_admitted":[${r.perAdmitted.mkString(",")}],""" +
-      s""""flat_ratio_sec":${d2(ratio(r.perSec))},""" +
-      s""""flat_ratio_bytes":${d2(ratio(r.perBytes.map(_.toDouble)))},""" +
+      s""""flat_ratio_sec":${d2(flatRatio(r.perSec))},""" +
+      s""""flat_ratio_bytes":${d2(flatRatio(r.perBytes.map(_.toDouble)))},""" +
       s""""drift_flags":${r.driftFlags},"ok":${r.ok}}"""
-  }
-
-  /** Standalone entry for local iteration. */
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.core.GraftSession.getOrCreate("graft-deliverybench")
-    try println(record(run(spark, sfDir))) finally spark.stop()
   }
 }

@@ -73,142 +73,115 @@ object StreamBench {
   private[graft] def expectedRows(n: Int): Long = (n - n / DupEvery).toLong
 
   /** `attestRef`: the session's best observed calibration-probe time
-    * (Bench passes its run-wide [[Bench.attestRef]]; standalone runs
-    * fall back to the better of this run's own sandwich probes). The
-    * timed region is SANDWICHED by the same fixed CPU probe the query
-    * bench uses, and the record carries both the raw rows/s and the
-    * contention-adjusted [[Bench.attestedRate]] — so a round-over-round
-    * throughput drop is adjudicable from the committed record alone
-    * (the r17 gap this closes). */
+    * (Bench passes its run-wide [[Bench.attestRef]]; without one the
+    * better of this run's own sandwich probes is the reference). The
+    * timed region runs inside the query bench's probe
+    * ([[Bench.timed]]), and the record carries both the raw rows/s and
+    * the contention-adjusted [[Bench.attestedRate]] — so a
+    * round-over-round throughput drop is adjudicable from the committed
+    * record alone (the r17 gap this closes). */
   def run(spark: SparkSession, lines: Int = Lines,
           linesPerTrigger: Long = LinesPerTrigger,
           attestRef: Double = -1.0): Result = {
     val base = java.nio.file.Files.createTempDirectory("graft-streambench").toString
-    val inDir = s"$base/in"; val store = s"$base/store"; val ckpt = s"$base/ckpt"
-    new java.io.File(inDir).mkdirs()
+    try {
+      val inDir = s"$base/in"; val store = s"$base/store"; val ckpt = s"$base/ckpt"
+      new java.io.File(inDir).mkdirs()
 
-    val dim = graft.pipeline.SensorPipeline.loadDim(spark, Fixtures.sensorDim)
-    val ids = dim.select("sensor_id").collect().map(_.getInt(0)).sorted.toIndexedSeq
+      val dim = graft.pipeline.SensorPipeline.loadDim(spark, Fixtures.sensorDim)
+      val ids = dim.select("sensor_id").collect().map(_.getInt(0)).sorted.toIndexedSeq
 
-    // 4 immutable segment files (the log-segment lifecycle the source
-    // contracts on). Generation is outside the timed region.
-    val perSeg = (lines + 3) / 4
-    genLines(lines, ids).grouped(perSeg).zipWithIndex.foreach { case (seg, i) =>
-      val w = java.nio.file.Files.newBufferedWriter(
-        java.nio.file.Paths.get(f"$inDir%s/seg-$i%03d.ndjson"))
-      try { seg.foreach { l => w.write(l); w.newLine() } } finally w.close()
+      // 4 immutable segment files (the log-segment lifecycle the source
+      // contracts on). Generation is outside the timed region.
+      val perSeg = (lines + 3) / 4
+      genLines(lines, ids).grouped(perSeg).zipWithIndex.foreach { case (seg, i) =>
+        val w = java.nio.file.Files.newBufferedWriter(
+          java.nio.file.Paths.get(f"$inDir%s/seg-$i%03d.ndjson"))
+        try { seg.foreach { l => w.write(l); w.newLine() } } finally w.close()
+      }
+
+      val nBatches = new java.util.concurrent.atomic.AtomicLong(0L)
+      val batchMs = new java.util.concurrent.atomic.AtomicLong(0L)
+      def startQuery() = {
+        val upsert = graft.streaming.SensorStream.upsertBatch(spark, store) _
+        graft.streaming.SensorStream.transform(
+            spark.readStream.format(graft.sources.LineStreamSource.format)
+              .option("maxLinesPerTrigger", linesPerTrigger.toString)
+              .load(inDir),
+            dim)
+          .writeStream
+          .option("checkpointLocation", ckpt)
+          .outputMode("append")
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+            val t0 = System.nanoTime()
+            upsert(b, id)
+            batchMs.addAndGet((System.nanoTime() - t0) / 1000000)
+            nBatches.incrementAndGet()
+            ()
+          }
+          .start()
+      }
+
+      // the probe's shares integrate over the ENTIRE timed region — its
+      // sandwich only samples the edges, and a 35 s stream leaves a lot
+      // of middle
+      val (phase1Batches, p) = Bench.timed(spark) {
+        // phase 1: stop mid-run, strictly before the log drains. stop()
+        // can interrupt an in-flight upsert — that is the point (the
+        // crash-safe store recovers and the checkpoint replays the
+        // batch in phase 2).
+        val q1 = startQuery()
+        val deadline = System.nanoTime() + 300L * 1000 * 1000 * 1000
+        while (nBatches.get() < RestartAfterBatches && q1.isActive &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+        scala.util.Try { q1.stop(); q1.awaitTermination() }
+        val phase1 = nBatches.get()
+        // phase 2: resume from the checkpoint, drain the rest
+        val q2 = startQuery()
+        q2.processAllAvailable()
+        q2.stop(); q2.awaitTermination()
+        phase1
+      }
+      // the worse sandwich side is the run's calibration; the reference
+      // is the best probe known — the session-wide one when Bench drives
+      // this run
+      val ref = (Seq(attestRef, p.calibPre, p.calibPost).filter(_ > 0) :+ p.calib).min
+
+      val stored = spark.read.parquet(store).count()
+      val expected = expectedRows(lines)
+      // the mid-run restart only counts if phase 1 really stopped early
+      val restartedMidRun = phase1Batches > 0 &&
+        phase1Batches * linesPerTrigger < lines.toLong
+      val rate = if (p.elapsed > 0) lines / p.elapsed else -1.0
+      Result(
+        ok = stored == expected && restartedMidRun,
+        rows = stored,
+        batches = nBatches.get(),
+        elapsedSec = p.elapsed,
+        rowsPerSec = rate,
+        batchMsAvg = if (nBatches.get() > 0) batchMs.get().toDouble / nBatches.get() else -1.0,
+        restartedMidRun = restartedMidRun,
+        calibSec = p.calib,
+        rowsPerSecAttested = Bench.attestedRate(rate, p.calib, ref),
+        attestFactor = Bench.rateAttestFactor(p.calib, ref),
+        extShare = p.ext, gcShare = p.gc, ioShare = p.io)
+    } finally {
+      val dir = new org.apache.hadoop.fs.Path(base)
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
     }
-
-    val nBatches = new java.util.concurrent.atomic.AtomicLong(0L)
-    val batchMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    def startQuery() = {
-      val upsert = graft.streaming.SensorStream.upsertBatch(spark, store) _
-      graft.streaming.SensorStream.transform(
-          spark.readStream.format(graft.sources.LineStreamSource.format)
-            .option("maxLinesPerTrigger", linesPerTrigger.toString)
-            .load(inDir),
-          dim)
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          val t0 = System.nanoTime()
-          upsert(b, id)
-          batchMs.addAndGet((System.nanoTime() - t0) / 1000000)
-          nBatches.incrementAndGet()
-          ()
-        }
-        .start()
-    }
-
-    val calibPre = Bench.calibrate(spark)
-    // whole-region contention signals (the query bench's third/fourth
-    // eyes): external-CPU, GC-pause, and iowait shares integrated over
-    // the ENTIRE timed region — the probe sandwich only samples the
-    // edges, and a 35 s stream leaves a lot of middle
-    val gc0 = Bench.readGcMillis()
-    val (mb0, sj0, io0) = Bench.readCpuJiffies()
-    val t0 = System.nanoTime()
-    // phase 1: stop mid-run, strictly before the log drains. stop() can
-    // interrupt an in-flight upsert — that is the point (the crash-safe
-    // store recovers and the checkpoint replays the batch in phase 2).
-    val q1 = startQuery()
-    val deadline = System.nanoTime() + 300L * 1000 * 1000 * 1000
-    while (nBatches.get() < RestartAfterBatches && q1.isActive &&
-      System.nanoTime() < deadline) Thread.sleep(20)
-    scala.util.Try { q1.stop(); q1.awaitTermination() }
-    val phase1Batches = nBatches.get()
-    // phase 2: resume from the checkpoint, drain the rest
-    val q2 = startQuery()
-    q2.processAllAvailable()
-    q2.stop(); q2.awaitTermination()
-    val elapsed = (System.nanoTime() - t0) / 1e9
-    val (mb1, sj1, io1) = Bench.readCpuJiffies()
-    val gc1 = Bench.readGcMillis()
-    // calibration sandwich: the worse side is the run's calibration
-    // (contention alive at either edge); the reference is the best
-    // probe known — the session-wide one when Bench drives this run
-    val calibPost = Bench.calibrate(spark)
-    val calib = math.max(calibPre, calibPost)
-    val ref = (Seq(attestRef, calibPre, calibPost).filter(_ > 0) :+ calib).min
-    val cores = {
-      val m = scala.util.Try(Bench.parseMachineCores(
-        new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/stat"))))).getOrElse(0)
-      if (m > 0) m else Runtime.getRuntime.availableProcessors()
-    }
-    val ext =
-      if (mb0 >= 0 && sj0 >= 0 && mb1 >= 0 && sj1 >= 0)
-        Bench.externalShare(mb1 - mb0, sj1 - sj0, elapsed, cores)
-      else -1.0
-    val gcs = if (gc0 >= 0 && gc1 >= 0) Bench.gcShare(gc1 - gc0, elapsed) else -1.0
-    val ios =
-      if (io0 >= 0 && io1 >= 0) Bench.iowaitShare(io1 - io0, elapsed, cores)
-      else -1.0
-
-    val stored = spark.read.parquet(store).count()
-    val expected = expectedRows(lines)
-    // the mid-run restart only counts if phase 1 really stopped early
-    val restartedMidRun = phase1Batches > 0 &&
-      phase1Batches * linesPerTrigger < lines.toLong
-    val rate = if (elapsed > 0) lines / elapsed else -1.0
-    Result(
-      ok = stored == expected && restartedMidRun,
-      rows = stored,
-      batches = nBatches.get(),
-      elapsedSec = elapsed,
-      rowsPerSec = rate,
-      batchMsAvg = if (nBatches.get() > 0) batchMs.get().toDouble / nBatches.get() else -1.0,
-      restartedMidRun = restartedMidRun,
-      calibSec = calib,
-      rowsPerSecAttested = Bench.attestedRate(rate, calib, ref),
-      attestFactor = Bench.rateAttestFactor(calib, ref),
-      extShare = ext, gcShare = gcs, ioShare = ios)
   }
 
-  /** Standalone entry for local iteration: prints the same JSON record
-    * Bench embeds. */
-  def main(args: Array[String]): Unit = {
-    val spark = graft.core.GraftSession.getOrCreate("graft-streambench")
-    try println(record(run(spark))) finally spark.stop()
-  }
-
-  // Locale.ROOT: a comma decimal separator would corrupt the JSON line.
-  private def d1(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-
-  private def d4(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
-
-  def record(r: Result): String =
-    s"""{"metric":"stream_rows_per_sec","value":${d1(r.rowsPerSec)},""" +
-      s""""value_attested":${d1(r.rowsPerSecAttested)},""" +
-      s""""attest_factor":${d4(r.attestFactor)},""" +
-      s""""calib_sec":${d4(r.calibSec)},""" +
-      s""""ext_share":${d4(r.extShare)},"gc_share":${d4(r.gcShare)},""" +
-      s""""iowait_share":${d4(r.ioShare)},""" +
+  def record(r: Result): String = {
+    import Bench.fmt
+    s"""{"metric":"stream_rows_per_sec","value":${fmt(r.rowsPerSec, "%.1f")},""" +
+      s""""value_attested":${fmt(r.rowsPerSecAttested, "%.1f")},""" +
+      s""""attest_factor":${fmt(r.attestFactor)},""" +
+      s""""calib_sec":${fmt(r.calibSec)},""" +
+      s""""ext_share":${fmt(r.extShare)},"gc_share":${fmt(r.gcShare)},""" +
+      s""""iowait_share":${fmt(r.ioShare)},""" +
       s""""unit":"rows/sec","ok":${r.ok},"rows":${r.rows},""" +
-      s""""batches":${r.batches},"elapsed_sec":${d1(r.elapsedSec)},""" +
-      s""""batch_ms_avg":${d1(r.batchMsAvg)},""" +
+      s""""batches":${r.batches},"elapsed_sec":${fmt(r.elapsedSec, "%.1f")},""" +
+      s""""batch_ms_avg":${fmt(r.batchMsAvg, "%.1f")},""" +
       s""""restarted_mid_run":${r.restartedMidRun}}"""
+  }
 }

@@ -16,7 +16,8 @@ import graft.core.Tables
   * Scale shapes: scd2Build is one shuffle on the entity key with both
   * windows sharing a single sort (the change filter preserves the
   * (ts, tiebreak) order, so Catalyst plans lag-filter-lead-row_number
-  * into one exchange + one sort — PLANS.md x27). Percentile rollup is a
+  * into one exchange + one sort, asserted by AnalyticsSpec's "scd2
+  * plan" test). Percentile rollup is a
   * two-phase hash agg whose buffer holds per-group value multisets —
   * exact percentiles cannot stream, so at 100 TB either group cardinality
   * bounds the buffer (typical: thousands of groups) or swap in

@@ -419,7 +419,7 @@ class AnalyticsSpec extends SparkSpec {
       (4L, 2L, "a", t("2024-01-01 10:00:00")),
       (5L, 2L, "a", t("2024-01-01 11:00:00")))
       .toDF("event_id", "user_id", "event_type", "ts")
-    val dir = java.nio.file.Files.createTempDirectory("x75-sf").toString
+    val dir = tempDir("x75-sf").toString
     events.write.parquet(s"$dir/events.parquet")
     val out = Analytics.transitionQuery(spark, dir)
       .as[(String, String, Long, Long)].collect().toSeq

@@ -8,6 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BenchSpec extends AnyFunSuite with SparkSpec {
 
+  /** One measured attempt: both calibration sides at `calib`, the given
+    * region shares. */
+  private def attempt(calib: Double = 0.1, ext: Double = 0.0, gc: Double = 0.0,
+                      io: Double = 0.0): Bench.Probe =
+    Bench.Probe(elapsed = 10.0, calibPre = calib, calibPost = calib, ext, gc, io)
+
   test("parseLoadAvg reads the 1-minute field of /proc/loadavg content") {
     assert(Bench.parseLoadAvg("0.52 0.58 0.59 1/1262 41733\n") == 0.52)
     assert(Bench.parseLoadAvg("17.25 12.00 8.50 5/999 1") == 17.25)
@@ -23,15 +29,21 @@ class BenchSpec extends AnyFunSuite with SparkSpec {
   test("shouldRetry fires only on poisoned calibrations with attempts left") {
     val baseline = 0.1
     // Clean attempt: never retry.
-    assert(!Bench.shouldRetry(calib = 0.15, baseline, attempt = 1))
+    assert(!Bench.shouldRetry(attempt(calib = 0.15), baseline, attempt = 1))
     // Poisoned (>3x baseline) with attempts left: retry.
-    assert(Bench.shouldRetry(calib = 0.5, baseline, attempt = 1))
-    assert(Bench.shouldRetry(calib = 0.5, baseline, attempt = Bench.MaxAttempts - 1))
+    assert(Bench.shouldRetry(attempt(calib = 0.5), baseline, attempt = 1))
+    assert(Bench.shouldRetry(attempt(calib = 0.5), baseline, attempt = Bench.MaxAttempts - 1))
     // Poisoned but attempts exhausted: stop (the result gets flagged
     // contended instead).
-    assert(!Bench.shouldRetry(calib = 0.5, baseline, attempt = Bench.MaxAttempts))
+    assert(!Bench.shouldRetry(attempt(calib = 0.5), baseline, attempt = Bench.MaxAttempts))
+    assert(Bench.contended(0.5, 0.0, 0.0, 0.0, baseline))
     // Exactly at the threshold is not poisoned.
-    assert(!Bench.shouldRetry(calib = baseline * Bench.ContendedFactor, baseline, attempt = 1))
+    assert(!Bench.shouldRetry(attempt(calib = baseline * Bench.ContendedFactor), baseline,
+      attempt = 1))
+    assert(!Bench.contended(baseline * Bench.ContendedFactor, 0.0, 0.0, 0.0, baseline))
+    // The attempt's calibration is the WORSE sandwich side: a poisoned
+    // post-probe alone poisons the attempt.
+    assert(Bench.shouldRetry(attempt().copy(calibPost = 0.5), baseline, attempt = 1))
   }
 
   test("a mid-query CPU hog invisible to the probe sandwich is flagged by external share") {
@@ -43,12 +55,15 @@ class BenchSpec extends AnyFunSuite with SparkSpec {
       machineBusyDelta = 28000, selfDelta = 20000, elapsedSec = 10.0, cores = 32)
     assert(math.abs(ext - 0.25) < 1e-9)
     assert(ext > Bench.ExternalShareMax)
-    assert(Bench.shouldRetryExt(ext, attempt = 1), "poisoned middle run must retry")
-    assert(!Bench.shouldRetryExt(ext, attempt = Bench.MaxAttempts),
+    assert(Bench.shouldRetry(attempt(ext = ext), 0.1, attempt = 1),
+      "poisoned middle run must retry")
+    assert(!Bench.shouldRetry(attempt(ext = ext), 0.1, attempt = Bench.MaxAttempts),
       "attempts exhausted: stop and flag contended instead")
+    assert(Bench.contended(0.1, ext, 0.0, 0.0, baseline = 0.1))
     // A quiet run (all busy jiffies are ours) is not flagged.
     val quiet = Bench.externalShare(20100, 20000, 10.0, 32)
-    assert(quiet < Bench.ExternalShareMax && !Bench.shouldRetryExt(quiet, 1))
+    assert(quiet < Bench.ExternalShareMax && !Bench.shouldRetry(attempt(ext = quiet), 0.1, 1))
+    assert(!Bench.contended(0.1, quiet, 0.0, 0.0, baseline = 0.1))
     // Sampling skew never yields a negative share.
     assert(Bench.externalShare(19900, 20000, 10.0, 32) == 0.0)
   }
@@ -85,26 +100,55 @@ class BenchSpec extends AnyFunSuite with SparkSpec {
     // 10s elapsed, 4s of GC pauses → 40% gc share, over budget.
     val gc = Bench.gcShare(gcMillisDelta = 4000, elapsedSec = 10.0)
     assert(math.abs(gc - 0.4) < 1e-9 && gc > Bench.GcShareMax)
-    assert(Bench.shouldRetryGcIo(gc, 0.0, attempt = 1), "gc-poisoned attempt must retry")
-    assert(!Bench.shouldRetryGcIo(gc, 0.0, attempt = Bench.MaxAttempts),
+    assert(Bench.shouldRetry(attempt(gc = gc), 0.1, attempt = 1),
+      "gc-poisoned attempt must retry")
+    assert(!Bench.shouldRetry(attempt(gc = gc), 0.1, attempt = Bench.MaxAttempts),
       "attempts exhausted: stop and flag contended instead")
+    assert(Bench.contended(0.1, 0.0, gc, 0.0, baseline = 0.1))
     // Disk-stall face: 10s on 32 cores = 32,000 jiffies capacity, 8,000
     // of them iowait → 25% of the machine waiting on disk.
     val io = Bench.iowaitShare(iowaitDelta = 8000, elapsedSec = 10.0, cores = 32)
     assert(math.abs(io - 0.25) < 1e-9 && io > Bench.IowaitShareMax)
-    assert(Bench.shouldRetryGcIo(0.0, io, attempt = 1), "io-poisoned attempt must retry")
+    assert(Bench.shouldRetry(attempt(io = io), 0.1, attempt = 1),
+      "io-poisoned attempt must retry")
+    assert(Bench.contended(0.1, 0.0, 0.0, io, baseline = 0.1))
     // A healthy attempt (3% GC, 1% iowait) is not flagged.
-    assert(!Bench.shouldRetryGcIo(Bench.gcShare(300, 10.0),
-      Bench.iowaitShare(320, 10.0, 32), attempt = 1))
+    val healthy = attempt(gc = Bench.gcShare(300, 10.0), io = Bench.iowaitShare(320, 10.0, 32))
+    assert(!Bench.shouldRetry(healthy, 0.1, attempt = 1))
+    assert(!Bench.contended(0.1, 0.0, healthy.gc, healthy.io, baseline = 0.1))
     // Missing inputs propagate -1, never a spurious flag.
     assert(Bench.gcShare(-1, 10.0) == -1.0)
     assert(Bench.iowaitShare(-1, 10.0, 32) == -1.0)
-    assert(!Bench.shouldRetryGcIo(-1.0, -1.0, attempt = 1))
+    assert(!Bench.shouldRetry(attempt(ext = -1.0, gc = -1.0, io = -1.0), 0.1, attempt = 1))
+    assert(!Bench.contended(0.1, -1.0, -1.0, -1.0, baseline = 0.1))
   }
 
   test("calibration probe runs on a live session and reports elapsed seconds") {
     val secs = Bench.calibrate(spark)
     assert(secs > 0.0 && secs < 60.0)
+    // the timed-region probe around a 50 ms body: the body's own value
+    // comes back, both sandwich sides ran, and every share is a
+    // fraction or the -1 "unreadable" sentinel
+    val (out, p) = Bench.timed(spark) { Thread.sleep(50); "body" }
+    assert(out == "body")
+    assert(p.elapsed >= 0.05, p)
+    assert(p.calibPre > 0.0 && p.calibPost > 0.0, p)
+    assert(p.calib == math.max(p.calibPre, p.calibPost), p)
+    for (share <- Seq(p.ext, p.gc, p.io))
+      assert(share == -1.0 || (share >= 0.0 && share <= 1.0), p)
+  }
+
+  test("delivery flat ratio: mean of the last two points over the mean of the first two") {
+    assert(DeliveryBench.flatRatio(Nil) == -1.0)
+    assert(DeliveryBench.flatRatio(Seq(1.0, 2.0, 3.0)) == -1.0, "fewer than 4 points")
+    assert(DeliveryBench.flatRatio(Seq(1.0, 1.0, 1.0, 1.0)) == 1.0)
+    // (5 + 7) / 2 over (2 + 4) / 2: the middle points do not count
+    assert(DeliveryBench.flatRatio(Seq(2.0, 4.0, 50.0, 0.5, 5.0, 7.0)) == 2.0)
+    // the record prints it at two decimals, -1 when undefined
+    val rec = DeliveryBench.record(DeliveryBench.Result(deliveries = 4,
+      buildSec = 1.0, perSec = Seq(2.0, 4.0, 5.0, 7.0), perBytes = Seq(10L, 20L, 30L),
+      perAdmitted = Seq(1L, 1L, 1L, 1L), driftFlags = 0, ok = true))
+    assert(rec.contains("\"flat_ratio_sec\":2.00,\"flat_ratio_bytes\":-1.00,"), rec)
   }
 
   test("compact final line fits the driver's 2KB tail at the real query count") {
@@ -300,7 +344,12 @@ class BenchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("stream bench end-to-end at toy scale: exactly-once through a mid-run restart") {
+    def benchDirs(): Set[String] = graft.core.Fs
+      .listOrThrow(new java.io.File(System.getProperty("java.io.tmpdir")))
+      .map(_.getName).filter(_.startsWith("graft-streambench")).toSet
+    val before = benchDirs()
     val r = StreamBench.run(spark, lines = 2000, linesPerTrigger = 150L)
+    assert((benchDirs() -- before).isEmpty, "the run left its temp dir behind")
     assert(r.restartedMidRun, "phase 1 drained the whole log before the restart")
     assert(r.rows == StreamBench.expectedRows(2000),
       s"store rows ${r.rows} != expected ${StreamBench.expectedRows(2000)}")
@@ -313,6 +362,6 @@ class BenchSpec extends AnyFunSuite with SparkSpec {
     // flagged for retry.
     val clamped = math.min(12.0, Bench.BaselineCeiling)
     assert(clamped == Bench.BaselineCeiling)
-    assert(Bench.shouldRetry(calib = 12.0, baseline = clamped, attempt = 1))
+    assert(Bench.shouldRetry(attempt(calib = 12.0), baseline = clamped, attempt = 1))
   }
 }

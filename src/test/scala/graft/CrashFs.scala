@@ -49,7 +49,11 @@ object CrashFs {
   /** Run `body` with `file:` paths served by CrashFs and the crash
     * armed at the first (step, path) `crashWhen` matches. Asserts the
     * crash fired and that `body` failed because of it. The filesystem
-    * cache is off for the block, so every lookup gets a CrashFs. */
+    * cache is off for the block, so every lookup gets a CrashFs. The
+    * swap is made on the shared session's Hadoop conf, so it reaches
+    * every `file:` access in the JVM while the block runs; that is safe
+    * because suites run one after another (see [[SparkSpec]]), provided
+    * the calling test leaves no streaming query of its own running. */
   def crashing(spark: SparkSession)(crashWhen: (Step, Path) => Boolean)
               (body: => Unit): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration

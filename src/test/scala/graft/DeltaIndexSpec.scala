@@ -34,7 +34,7 @@ class DeltaIndexSpec extends SparkSpec {
   }
 
   test("committing an already-committed generation fails instead of clobbering") {
-    val dir = java.nio.file.Files.createTempDirectory("dix_commit").toString
+    val dir = tempDir("dix_commit").toString
     val m0 = DeltaIndex.Manifest(0L, Map.empty, Map("p" -> Vector("p/g" + "0" * 19)))
     DeltaIndex.commit(spark, dir, m0)
     intercept[java.io.IOException] { DeltaIndex.commit(spark, dir, m0) }
@@ -44,7 +44,7 @@ class DeltaIndexSpec extends SparkSpec {
   }
 
   test("vacuum drops superseded df generations, crashed-append orphans, and old manifests — probes unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("dix_vacuum").toString
+    val dir = tempDir("dix_vacuum").toString
     val idx = s"$dir/idx"
     val ref = Seq((100L, "en", blk("one")), (101L, "en", blk("two")))
       .toDF("doc_id", "lang", "text")
@@ -88,7 +88,7 @@ class DeltaIndexSpec extends SparkSpec {
   }
 
   test("compaction folds many append generations into one — probe results identical, params preserved") {
-    val dir = java.nio.file.Files.createTempDirectory("dix_compact").toString
+    val dir = tempDir("dix_compact").toString
     val idx = s"$dir/idx"
     Dedup.saveCrossProbeIndex(
       Seq((100L, "en", blk("one"))).toDF("doc_id", "lang", "text"), idx)
@@ -122,7 +122,7 @@ class DeltaIndexSpec extends SparkSpec {
   }
 
   test("compacting a battery root keeps every tier: texts, params, nested sem — the gate still routes") {
-    val dir = java.nio.file.Files.createTempDirectory("dix_compact_bat").toString
+    val dir = tempDir("dix_compact_bat").toString
     val idx = s"$dir/idx"
     Dedup.saveAcceptanceIndex(
       Seq((100L, "en", blk("alpha"))).toDF("doc_id", "lang", "text"),
@@ -157,7 +157,7 @@ class DeltaIndexSpec extends SparkSpec {
   }
 
   test("vacuum recurses into nested artifacts (the battery's sem sub-index)") {
-    val dir = java.nio.file.Files.createTempDirectory("dix_vac_nested").toString
+    val dir = tempDir("dix_vac_nested").toString
     val idx = s"$dir/idx"
     val ref = Seq((100L, "en", blk("alpha"))).toDF("doc_id", "lang", "text")
     val refVecs = Seq(100L -> Array(1f, 0f), 101L -> Array(0f, 1f))
@@ -219,7 +219,7 @@ class DeltaIndexSpec extends SparkSpec {
     * whole answer equals one of them exactly), nothing exists beside
     * the root, and the next writer proceeds. */
   private def checkCrashPoints(w: Writer): Unit = {
-    val twin = s"${Files.createTempDirectory("dix_twin")}/idx"
+    val twin = s"${tempDir("dix_twin")}/idx"
     w.build(twin)
     val old = w.read(twin)
     w.op(twin)
@@ -236,7 +236,7 @@ class DeltaIndexSpec extends SparkSpec {
       ("after the commit, before the vacuum", true, root => (s, p) =>
         s == CrashFs.Renamed && p.getParent.toUri.getPath == root && isManifest(p)))
     for ((point, commits, crashAt) <- points) {
-      val parent = Files.createTempDirectory("dix_crash").toString
+      val parent = tempDir("dix_crash").toString
       val root = s"$parent/idx"
       w.build(root)
       CrashFs.crashing(spark)(crashAt(root))(w.op(root))
@@ -272,7 +272,7 @@ class DeltaIndexSpec extends SparkSpec {
   }
 
   test("publish: a lost commit race re-commits at the next generation and the last committer wins") {
-    val dir = Files.createTempDirectory("dix_race").toString
+    val dir = tempDir("dix_race").toString
     val root = s"$dir/a"
     def put(v: String)(d: String): Unit =
       Seq(v).toDF("v").write.mode("overwrite").parquet(s"$d/t")

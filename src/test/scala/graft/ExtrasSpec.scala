@@ -117,7 +117,7 @@ class ExtrasSpec extends SparkSpec {
     assert(out(2) == ((12L, 2L, 0L, Some(0.0))), s"${out(2)}")
     assert(out(3) == ((13L, 2L, 1L, Some(0.5))), s"${out(3)}")
     // persisted index answers identically to the inline gram set
-    val root = java.nio.file.Files.createTempDirectory("gram-idx").toString + "/idx"
+    val root = tempDir("gram-idx").toString + "/idx"
     TextAnalysis.saveGramIndex(corpus, root)
     val viaIdx = TextAnalysis.noveltyAgainst(batch, TextAnalysis.loadGramIndex(spark, root))
       .as[(Long, Long, Long, Option[Double])].collect().sortBy(_._1)
@@ -131,7 +131,7 @@ class ExtrasSpec extends SparkSpec {
     val dir = sf("sf0.001")
     val all = Tables.load(spark, dir, "documents")
     val old = all.filter($"doc_id" < TextAnalysis.NoveltySplitId)
-    val root = java.nio.file.Files.createTempDirectory("gram-idx-s").toString + "/idx"
+    val root = tempDir("gram-idx-s").toString + "/idx"
     TextAnalysis.saveGramIndex(old, root)
     val batchDocs = all.filter($"doc_id" >= TextAnalysis.NoveltySplitId)
       .select($"doc_id", $"text")
@@ -438,7 +438,7 @@ class ExtrasSpec extends SparkSpec {
   }
 
   test("x106 persisted dedup index round-trips and matches the inline frame") {
-    val dir = java.nio.file.Files.createTempDirectory("dedupidx").toString
+    val dir = tempDir("dedupidx").toString
     val corpus = docs.limit(30).select($"doc_id", $"text")
     graft.operators.Dedup.saveDedupIndex(corpus, s"$dir/idx")
     val loaded = graft.operators.Dedup.loadDedupIndex(spark, s"$dir/idx")
@@ -510,7 +510,7 @@ class ExtrasSpec extends SparkSpec {
     val corpus = all.filter($"doc_id" < 250)
     val batch = all.filter($"doc_id" >= 250)
     // round-trip the index through parquet: the persistence contract
-    val idxPath = java.nio.file.Files.createTempDirectory("mh_idx").toString
+    val idxPath = tempDir("mh_idx").toString
     Dedup.minhashBuckets(corpus).write.mode("overwrite").parquet(idxPath)
     val index = spark.read.parquet(idxPath)
     val incremental = Dedup.minhashIncrementalPairs(batch, index, corpus)
@@ -683,7 +683,7 @@ class ExtrasSpec extends SparkSpec {
   test("IVF codebook round-trips through parquet; frozen assignment composes over batches") {
     val emb = Tables.load(spark, sf("sf0.001"), "embeddings")
     val index = Similarity.ivfIndex(emb, nCentroids = 8)
-    val path = java.nio.file.Files.createTempDirectory("ivf-cb").toString + "/codebook"
+    val path = tempDir("ivf-cb").toString + "/codebook"
     Similarity.saveCodebook(index.centroids, path, spark)
     val loaded = Similarity.loadCodebook(spark, path)
     assert(loaded.map(_._1).toSeq == index.centroids.map(_._1).toSeq)
@@ -708,7 +708,7 @@ class ExtrasSpec extends SparkSpec {
 
   test("persisted IVF index: round-trips, prunes the probe to probed lists, heals the crash window") {
     val emb = Tables.load(spark, sf("sf0.001"), "embeddings")
-    val root = java.nio.file.Files.createTempDirectory("ivf-idx").toString + "/ivf"
+    val root = tempDir("ivf-idx").toString + "/ivf"
     Similarity.saveIvfIndex(emb, root, nCentroids = 16)
     val loaded = Similarity.loadIvfIndex(spark, root)
     val queries = emb.filter($"vec_id" < 5)
@@ -1402,7 +1402,8 @@ class ExtrasSpec extends SparkSpec {
   test("connected components: reliable-checkpoint mode matches local and writes files") {
     // cluster-durability path: lineage cut through Dataset.checkpoint
     // against a reliable dir (survives executor loss), same labels out
-    val dir = java.nio.file.Files.createTempDirectory("cc-reliable").toString
+    // inside one temp root, so the string-prefix twin below is in it too
+    val dir = tempDir("cc-reliable").resolve("cc-12").toString
     val nodes = Seq(1L, 2L, 3L, 4L, 5L, 9L).toDF("id")
     val edges = Seq((2L, 1L), (2L, 3L), (4L, 3L), (4L, 5L)).toDF("src", "dst")
     val local = Dedup.connectedComponents(nodes, edges)
@@ -2111,7 +2112,7 @@ class ExtrasSpec extends SparkSpec {
   }
 
   test("x55: persisted decontamination index round-trips and gates batches with zero rebuild") {
-    val tmp = java.nio.file.Files.createTempDirectory("decontam_idx").toString
+    val tmp = tempDir("decontam_idx").toString
     val all = Tables.load(spark, sf("sf0.001"), "documents")
     val isRef = col("source").isin("src0", "src1")
     Dedup.saveDecontamIndex(all.filter(isRef), tmp)
@@ -2128,7 +2129,7 @@ class ExtrasSpec extends SparkSpec {
   }
 
   test("x46/x52: persisted verified-pairs artifact round-trips; matrix from pairs equals inline") {
-    val tmp = java.nio.file.Files.createTempDirectory("vpairs").toString + "/pairs"
+    val tmp = tempDir("vpairs").toString + "/pairs"
     val corpus = Tables.load(spark, sf("sf0.001"), "documents")
     Dedup.saveVerifiedPairs(corpus, tmp)
     val inlinePairs = Dedup.verifiedNearDupPairs(corpus)
@@ -2156,7 +2157,7 @@ class ExtrasSpec extends SparkSpec {
   }
 
   test("atomic index publish: a failed save leaves the previous artifact fully intact") {
-    val base = java.nio.file.Files.createTempDirectory("atomic_idx").toString + "/idx"
+    val base = tempDir("atomic_idx").toString + "/idx"
     val all = Tables.load(spark, sf("sf0.001"), "documents")
     val isRef = col("source").isin("src0", "src1")
     Dedup.saveDecontamIndex(all.filter(isRef), base)
@@ -2281,7 +2282,7 @@ class ExtrasSpec extends SparkSpec {
       (2L, Array(0.9f, 0.1f), 0),
       (3L, Array(0.0f, 1.0f), 0),
       (4L, Array(0.5f, 0.5f), 1)).toDF("vec_id", "embedding", "label")
-    val dir = java.nio.file.Files.createTempDirectory("x73-sf").toString
+    val dir = tempDir("x73-sf").toString
     emb.write.parquet(s"$dir/embeddings.parquet")
     val out = graft.operators.Similarity.centroidOutlierQuery(spark, dir)
       .as[(Int, Long, Double, Int)].collect().toSeq
@@ -2983,7 +2984,7 @@ class ExtrasSpec extends SparkSpec {
     import graft.operators.{Similarity, TextSearch}
     val docs = Tables.load(spark, sf("sf0.001"), "documents")
     val emb = Tables.load(spark, sf("sf0.001"), "embeddings")
-    val root = java.nio.file.Files.createTempDirectory("hybrid-ivf").toString + "/ivf"
+    val root = tempDir("hybrid-ivf").toString + "/ivf"
     Similarity.saveIvfIndex(emb, root, nCentroids = 16)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"query_id", $"rank")
@@ -3370,7 +3371,7 @@ class ExtrasSpec extends SparkSpec {
 
   test("x149: persisted leakage index round-trips; audit plan never rescans the corpus") {
     import graft.operators.Sampling
-    val tmp = java.nio.file.Files.createTempDirectory("leak_idx").toString + "/idx"
+    val tmp = tempDir("leak_idx").toString + "/idx"
     val d = Tables.load(spark, sf("sf0.001"), "documents")
     Sampling.saveLeakageIndex(d, tmp)
     val direct = Sampling.splitGramLeakage(d)
@@ -4166,7 +4167,7 @@ class ExtrasSpec extends SparkSpec {
   }
 
   test("x170 probe against the persisted reference index equals the in-run fit") {
-    val dir = java.nio.file.Files.createTempDirectory("sem_ref_idx").toString
+    val dir = tempDir("sem_ref_idx").toString
     val emb = Tables.load(spark, sf("sf0.001"), "embeddings")
     val isRef = $"vec_id" % 2 === 0
     val batch = Similarity.crossSemProbe(emb.filter(!isRef), emb.filter(isRef))
@@ -4192,7 +4193,7 @@ class ExtrasSpec extends SparkSpec {
     // disk round trip on the same split
     val (cand, ref) = Dedup.plantedCrossCorpus(
       Tables.load(spark, sf("sf0.001"), "documents"))
-    val dir = java.nio.file.Files.createTempDirectory("xprobe_idx").toString
+    val dir = tempDir("xprobe_idx").toString
     Dedup.saveCrossProbeIndex(ref, s"$dir/idx")
     val viaIdx = Dedup.crossProbeIndexed(cand, s"$dir/idx", maxDf = 100)
       .as[(Long, Long, Long, Long)].collect().toSet
@@ -4217,7 +4218,7 @@ class ExtrasSpec extends SparkSpec {
       "planted model produced no mix of upsets and expected wins")
     // frozen-ladder artifact round trip
     val cmp = Analytics.plantedComparisons(spark, sf("sf0.001"))
-    val dir = java.nio.file.Files.createTempDirectory("bt_ladder").toString
+    val dir = tempDir("bt_ladder").toString
     Analytics.saveBtStrengths(cmp.select($"winner", $"loser"), s"$dir/l")
     val viaIdx = Analytics.btUpsetsAgainst(cmp,
         spark.read.parquet(graft.core.DeltaIndex.current(spark, s"$dir/l")
@@ -4264,8 +4265,8 @@ class ExtrasSpec extends SparkSpec {
       Tables.load(spark, sf("sf0.001"), "documents"))
     val d1 = cand.filter($"doc_id" % 2 === 0)
     val d2 = cand.filter($"doc_id" % 2 =!= 0)
-    val dirA = java.nio.file.Files.createTempDirectory("xappend_a").toString
-    val dirB = java.nio.file.Files.createTempDirectory("xappend_b").toString
+    val dirA = tempDir("xappend_a").toString
+    val dirB = tempDir("xappend_b").toString
     Dedup.saveCrossProbeIndex(ref, s"$dirA/idx")
     Dedup.appendToCrossProbeIndex(d1, s"$dirA/idx")
     val grown = ref.unionByName(d1)
@@ -4331,7 +4332,7 @@ class ExtrasSpec extends SparkSpec {
     }
     def blk(tag: String) = (1 to 12).map(i => s"$tag$i").mkString(" ")
     // cross-probe index: grams/g0 corrupted, append must still land
-    val dir = java.nio.file.Files.createTempDirectory("xappend_noread").toString
+    val dir = tempDir("xappend_noread").toString
     val ref = Seq((100L, "en", blk("one")), (101L, "en", blk("two")))
       .toDF("doc_id", "lang", "text")
     Dedup.saveCrossProbeIndex(ref, s"$dir/idx")
@@ -4342,7 +4343,7 @@ class ExtrasSpec extends SparkSpec {
     assert(graft.core.DeltaIndex.latest(spark, s"$dir/idx").gen == 1L)
     // semantic index: lists/g0 corrupted (embedding payloads); the
     // guard runs on the ids metadata part, assignment on the codebook
-    val semDir = java.nio.file.Files.createTempDirectory("sem_noread").toString
+    val semDir = tempDir("sem_noread").toString
     val semRef = Seq(100L -> Array(1f, 0f), 101L -> Array(0f, 1f))
       .toDF("vec_id", "embedding")
     Similarity.saveSemRefIndex(semRef, s"$semDir/idx", k = 2, iters = 1)
@@ -4360,7 +4361,7 @@ class ExtrasSpec extends SparkSpec {
 
   test("x175 params are pinned in the manifest: a mismatched append or probe fails fast") {
     def blk(tag: String) = (1 to 12).map(i => s"$tag$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("xparams").toString
+    val dir = tempDir("xparams").toString
     val ref = Seq((100L, "en", blk("one"))).toDF("doc_id", "lang", "text")
     Dedup.saveCrossProbeIndex(ref, s"$dir/idx", n = 3, hashGrams = false)
     val d1 = Seq((1L, "en", blk("two"))).toDF("doc_id", "lang", "text")
@@ -4382,7 +4383,7 @@ class ExtrasSpec extends SparkSpec {
   }
 
   test("x175 semantic append: the codebook stays frozen and a later paraphrase of an admitted doc is caught") {
-    val dir = java.nio.file.Files.createTempDirectory("sem_append").toString
+    val dir = tempDir("sem_append").toString
     val ref = Seq(100L -> Array(1f, 0f), 101L -> Array(0f, 1f))
       .toDF("vec_id", "embedding")
     Similarity.saveSemRefIndex(ref, s"$dir/idx", k = 2, iters = 1)
@@ -4416,7 +4417,7 @@ class ExtrasSpec extends SparkSpec {
 
   test("x175 a crashed append stays invisible and its retry lands") {
     def blk(tag: String) = (1 to 12).map(i => s"$tag$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("xappend_crash").toString
+    val dir = tempDir("xappend_crash").toString
     val ref = Seq((100L, "en", blk("one")), (101L, "en", blk("two")))
       .toDF("doc_id", "lang", "text")
     Dedup.saveCrossProbeIndex(ref, s"$dir/idx")
@@ -4479,7 +4480,7 @@ class ExtrasSpec extends SparkSpec {
       (4L, "en", "quarterly tax filing chatter nobody has seen before",
         Seq(-0.7f, 0.7f))
     ).toDF("doc_id", "lang", "text", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("accept_idx").toString
+    val dir = tempDir("accept_idx").toString
     Dedup.saveAcceptanceIndex(ref, refVecs, s"$dir/idx", k = 2, iters = 1)
     val out = Dedup.acceptanceGateIndexed(cand, s"$dir/idx", tau = 0.9)
       .select($"cand_id", $"exact_ref", $"n_surface", $"n_sem", $"verdict")
@@ -4496,7 +4497,7 @@ class ExtrasSpec extends SparkSpec {
     val ref = Seq((100L, "en", blk("alpha"))).toDF("doc_id", "lang", "text")
     val refVecs = Seq(100L -> Array(1f, 0f), 101L -> Array(0f, 1f))
       .toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("accept_append").toString
+    val dir = tempDir("accept_append").toString
     Dedup.saveAcceptanceIndex(ref, refVecs, s"$dir/idx", k = 2, iters = 1)
     // delivery 1: a new text + a vector matching NO reference at tau=.9
     val d1 = Seq((10L, "en", blk("gamma"))).toDF("doc_id", "lang", "text")
@@ -4535,7 +4536,7 @@ class ExtrasSpec extends SparkSpec {
     val ref = Seq((100L, "en", blk("alpha"))).toDF("doc_id", "lang", "text")
     val refVecs = Seq(100L -> Array(1f, 0f), 101L -> Array(0f, 1f))
       .toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("accept_crash").toString
+    val dir = tempDir("accept_crash").toString
     Dedup.saveAcceptanceIndex(ref, refVecs, s"$dir/idx", k = 2, iters = 1)
     val d1 = Seq((10L, "en", blk("gamma"))).toDF("doc_id", "lang", "text")
     val v1 = Seq(10L -> Array(0.70f, 0.71f)).toDF("vec_id", "embedding")
@@ -4552,7 +4553,7 @@ class ExtrasSpec extends SparkSpec {
     assert(graft.core.DeltaIndex.latest(spark, s"$dir/idx/sem").gen == 1L,
       "the heal re-appended the sem delivery (double ingest)")
     // a FOREIGN unpinned sem generation refuses instead of healing
-    val dir2 = java.nio.file.Files.createTempDirectory("accept_foreign").toString
+    val dir2 = tempDir("accept_foreign").toString
     Dedup.saveAcceptanceIndex(ref, refVecs, s"$dir2/idx", k = 2, iters = 1)
     Similarity.appendToSemRefIndex(
       Seq(77L -> Array(0.1f, 0.9f)).toDF("vec_id", "embedding"),
@@ -4564,7 +4565,7 @@ class ExtrasSpec extends SparkSpec {
 
   test("kmeans fit memo: identical file-backed inputs reuse the codebook; rewritten inputs never alias") {
     import graft.operators.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("fitmemo").toString
+    val dir = tempDir("fitmemo").toString
     Seq(0L -> Array(1f, 0f), 1L -> Array(0f, 1f), 2L -> Array(1f, 0.01f),
       3L -> Array(0.01f, 1f))
       .toDF("vec_id", "embedding")
@@ -4598,7 +4599,7 @@ class ExtrasSpec extends SparkSpec {
 
   test("x178 rebuild recovers the recall drift cost: a crowded boundary re-clusters from index files alone") {
     import graft.operators.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("sem_rebuild").toString
+    val dir = tempDir("sem_rebuild").toString
     // reference: anchors along (1,0) and (0,1); frozen k=2 codebook
     val ref = Seq(
       0L -> Array(1f, 0f), 2L -> Array(1f, 0.01f), 4L -> Array(1f, -0.01f),
@@ -4642,7 +4643,7 @@ class ExtrasSpec extends SparkSpec {
     def dlv(rows: (Long, String, Array[Float])*) =
       rows.map { case (id, t, e) => (id, "en", t, e) }
         .toDF("doc_id", "lang", "text", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("delivery_loop").toString
+    val dir = tempDir("delivery_loop").toString
     val (idx, led) = (s"$dir/idx", s"$dir/led")
     Dedup.saveAcceptanceIndex(
       Seq((100L, "en", blk("alpha")), (101L, "en", blk("beta")))
@@ -4693,7 +4694,7 @@ class ExtrasSpec extends SparkSpec {
 
   test("x180 the runner-up cluster catches the Voronoi-boundary paraphrase nProbe=1 structurally misses") {
     import graft.operators.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("sem_budget").toString
+    val dir = tempDir("sem_budget").toString
     // unit-circle geometry (degrees): cluster anchors at 40 (x2) and 52
     // (x2); reference 102 at 45.8 assigns WITH the 40-side (its pull
     // moves that centroid to ~41.9, midline ~47.0). The candidate at
@@ -4718,7 +4719,7 @@ class ExtrasSpec extends SparkSpec {
     import graft.operators.Similarity
     val emb = Tables.load(spark, sf("sf0.001"), "embeddings")
     val isRef = $"vec_id" % 2 === 0
-    val dir = java.nio.file.Files.createTempDirectory("sem_budget_idx").toString
+    val dir = tempDir("sem_budget_idx").toString
     Similarity.saveSemRefIndex(emb.filter(isRef), s"$dir/idx")
     val cands = emb.filter(!isRef)
     val one = Similarity.semProbeBudget(cands, s"$dir/idx", nProbe = 1)
@@ -4779,7 +4780,7 @@ class ExtrasSpec extends SparkSpec {
   }
 
   test("x179 persisted ledger: per-delivery generations round-trip and diff like the in-run form") {
-    val dir = java.nio.file.Files.createTempDirectory("ledger").toString
+    val dir = tempDir("ledger").toString
     def rep(ids: Seq[Long], verdicts: Seq[String]) =
       ids.zip(verdicts).map { case (id, v) =>
         (id, None: Option[Long], 0L, 0L, v) }
@@ -4817,7 +4818,7 @@ class ExtrasSpec extends SparkSpec {
     val ref = ((0 until 8).map(i => ((i * 2).toLong, Array(1f, 0.01f * i))) ++
       (0 until 8).map(i => ((i * 2 + 1).toLong, Array(0.01f * i, 1f))))
       .toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("sem_drift").toString
+    val dir = tempDir("sem_drift").toString
     Similarity.saveSemRefIndex(ref, s"$dir/idx", k = 2, iters = 2)
     // same-distribution recent sample: balanced across both clusters
     val calm = ((0 until 6).map(i => (1000L + i, Array(1f, 0.02f * i))) ++
@@ -4843,7 +4844,7 @@ class ExtrasSpec extends SparkSpec {
     import graft.operators.Similarity
     val emb = Tables.load(spark, sf("sf0.001"), "embeddings")
     val isRef = $"vec_id" % 2 === 0
-    val dir = java.nio.file.Files.createTempDirectory("sem_drift_idx").toString
+    val dir = tempDir("sem_drift_idx").toString
     Similarity.saveSemRefIndex(emb.filter(isRef), s"$dir/idx")
     val viaIdx = Similarity.semIndexDriftCheck(emb.filter(!isRef), s"$dir/idx")
       .collect().map(_.toSeq).toSet
@@ -4926,7 +4927,7 @@ class ExtrasSpec extends SparkSpec {
       Tables.load(spark, sf("sf0.001"), "documents"))
     val dA = cand.filter($"doc_id" % 2 === 0)
     val dB = cand.filter($"doc_id" % 2 =!= 0)
-    val dir = java.nio.file.Files.createTempDirectory("xrace").toString
+    val dir = tempDir("xrace").toString
     Dedup.saveCrossProbeIndex(ref, s"$dir/idx")
     val root = s"$dir/idx"
     // both writers resolve the SAME base manifest...
@@ -4971,7 +4972,7 @@ class ExtrasSpec extends SparkSpec {
     // dir (no parquet files) and crashed re-reading it schema-less;
     // reachable whenever the gate admits docs whose embeddings are null.
     def blk(tag: String) = (1 to 12).map(i => s"$tag$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("empty_sem").toString
+    val dir = tempDir("empty_sem").toString
     val (idx, led) = (s"$dir/idx", s"$dir/led")
     Dedup.saveAcceptanceIndex(
       Seq((100L, "en", blk("alpha")), (101L, "en", blk("beta")))
@@ -5002,7 +5003,7 @@ class ExtrasSpec extends SparkSpec {
 
   test("fit memo: truncated plan rendering cannot alias two different fits (lossless key)") {
     import graft.operators.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("fitmemo_trunc").toString
+    val dir = tempDir("fitmemo_trunc").toString
     Seq(0L -> Array(1f, 0f), 1L -> Array(0f, 1f), 2L -> Array(1f, 0.01f),
       3L -> Array(0.01f, 1f))
       .toDF("vec_id", "embedding")
@@ -5032,7 +5033,7 @@ class ExtrasSpec extends SparkSpec {
 
   test("fit memo: a same-name in-place file rewrite misses the memo (length/mtime in the key)") {
     import graft.operators.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("fitmemo_mtime").toString
+    val dir = tempDir("fitmemo_mtime").toString
     Seq(0L -> Array(1f, 0f), 1L -> Array(0f, 1f), 2L -> Array(1f, 0.01f),
       3L -> Array(0.01f, 1f))
       .toDF("vec_id", "embedding").coalesce(1)
@@ -5070,7 +5071,7 @@ class ExtrasSpec extends SparkSpec {
     // sem commit and the battery commit) had its PINNED sem manifest
     // vacuumed, bricking the gate and the heal path.
     def blk(tag: String) = (1 to 12).map(i => s"$tag$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("vac_pin").toString
+    val dir = tempDir("vac_pin").toString
     val idx = s"$dir/idx"
     Dedup.saveAcceptanceIndex(
       Seq((100L, "en", blk("alpha")), (101L, "en", blk("beta")))
@@ -5099,7 +5100,7 @@ class ExtrasSpec extends SparkSpec {
   }
 
   test("ledger append is retry-safe: crash leftovers never brick the retry and vacuum reaps them") {
-    val dir = java.nio.file.Files.createTempDirectory("led_retry").toString
+    val dir = tempDir("led_retry").toString
     val led = s"$dir/led"
     val report = Seq((1L, Option.empty[Long], 0L, 0L, "admit"))
       .toDF("cand_id", "exact_ref", "n_surface", "n_sem", "verdict")
@@ -5160,7 +5161,7 @@ class ExtrasSpec extends SparkSpec {
     def dlv(rows: (Long, String, Array[Float])*) =
       rows.map { case (id, t, e) => (id, "en", t, e) }
         .toDF("doc_id", "lang", "text", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("tier_shift").toString
+    val dir = tempDir("tier_shift").toString
     val (idx, led) = (s"$dir/idx", s"$dir/led")
     Dedup.saveAcceptanceIndex(
       Seq((100L, "en", blk("alpha")), (101L, "en", blk("beta")))
@@ -5201,7 +5202,7 @@ class ExtrasSpec extends SparkSpec {
       rows.map { case (id, t, e) => (id, "en", t, e) }
         .toDF("doc_id", "lang", "text", "embedding")
     def mkIdx(tag: String): (String, String) = {
-      val dir = java.nio.file.Files.createTempDirectory(tag).toString
+      val dir = tempDir(tag).toString
       Dedup.saveAcceptanceIndex(
         Seq((0L, "en", blk("ax")), (2L, "en", blk("bx")), (4L, "en", blk("cx")),
           (1L, "en", blk("dx")), (3L, "en", blk("ex")), (5L, "en", blk("fx")))
@@ -5260,8 +5261,7 @@ class ExtrasSpec extends SparkSpec {
     // final gate answer must agree exactly (probe identity), and only
     // the compacting twin's manifest collapses to single dirs.
     def run(compactAfter: Int) = {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"auto_compact_$compactAfter").toString
+      val dir = tempDir(s"auto_compact_$compactAfter").toString
       val (idx, led) = (s"$dir/idx", s"$dir/led")
       Dedup.saveAcceptanceIndex(
         Seq((100L, "en", blk("alpha")), (101L, "en", blk("beta")))
@@ -5308,7 +5308,7 @@ class ExtrasSpec extends SparkSpec {
 
   test("a crashed drift-rebuild's refit is re-pinned on the next delivery") {
     def blk(tag: String) = (1 to 12).map(i => s"$tag$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("heal_pin").toString
+    val dir = tempDir("heal_pin").toString
     val (idx, led) = (s"$dir/idx", s"$dir/led")
     Dedup.saveAcceptanceIndex(
       Seq((100L, "en", blk("alpha")), (101L, "en", blk("beta")))

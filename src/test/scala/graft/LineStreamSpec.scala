@@ -20,7 +20,7 @@ class LineStreamSpec extends SparkSpec {
       lines.mkString("\n").getBytes("UTF-8"))
 
   test("offset contract: latestOffset counts all segments, ranges slice exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("linesrc").toString
+    val dir = tempDir("linesrc").toString
     write(s"$dir/a.txt", Seq("a1", "a2", "a3"))
     write(s"$dir/b.txt", Seq("b1", "b2"))
     val stream = new LineMicroBatchStream(dir)
@@ -47,7 +47,7 @@ class LineStreamSpec extends SparkSpec {
     // R5's runtime face: admission control clamps each batch's end offset
     // to start + cap, so a backlog drains in bounded bites instead of one
     // giant first batch
-    val dir = java.nio.file.Files.createTempDirectory("linecap").toString
+    val dir = tempDir("linecap").toString
     val lines = (1 to 23).map(i => s"line-$i")
     write(s"$dir/seg-000.txt", lines.take(11))
     write(s"$dir/seg-001.txt", lines.drop(11))
@@ -83,7 +83,7 @@ class LineStreamSpec extends SparkSpec {
     // the custom-source image of the reference's consumer restart: commit
     // offsets (checkpoint), die, come back, resume from the committed
     // offset — no record lost, none duplicated.
-    val base = java.nio.file.Files.createTempDirectory("linesrc2").toString
+    val base = tempDir("linesrc2").toString
     val inDir = s"$base/in"; val store = s"$base/store"; val ckpt = s"$base/ckpt"
     new java.io.File(inDir).mkdirs()
     val lines = ndjsonLines
@@ -181,7 +181,7 @@ class LineStreamSpec extends SparkSpec {
   // ------------------------------ byte-offset line index (seek path)
 
   test("indexLines matches getLines semantics on terminator edge cases") {
-    val dir = java.nio.file.Files.createTempDirectory("lineidx")
+    val dir = tempDir("lineidx")
     def check(name: String, bytes: Array[Byte]): Unit = {
       val f = dir.resolve(name).toFile
       java.nio.file.Files.write(f.toPath, bytes)
@@ -218,7 +218,7 @@ class LineStreamSpec extends SparkSpec {
   }
 
   test("slice readers produce identical rows with and without a seek point") {
-    val dir = java.nio.file.Files.createTempDirectory("lineseek").toString
+    val dir = tempDir("lineseek").toString
     val lines = (0 until 3000).map(i => s"""{"v":$i}""")
     write(s"$dir/a.txt", lines)
     val stream = new LineMicroBatchStream(dir)

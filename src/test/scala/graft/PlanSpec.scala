@@ -126,7 +126,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val ev = graft.core.Tables.load(spark, sf("sf0.01"), "events")
       .select(col("event_id"), col("user_id"), col("value"), col("ts"))
-    val root = java.nio.file.Files.createTempDirectory("layout").toString
+    val root = tempDir("layout").toString
     // naive layout: clustered on time only — user_id/value smeared evenly
     ev.repartitionByRange(16, col("ts")).sortWithinPartitions(col("ts"))
       .write.mode("overwrite").parquet(s"$root/by_ts")
@@ -749,7 +749,7 @@ class PlanSpec extends SparkSpec {
     val p = plan("x176_acceptance_gate")
     assert(!p.contains("CartesianProduct"), s"cross join crept in:\n$p")
     // indexed form: in-memory candidates against the persisted battery
-    val dir = java.nio.file.Files.createTempDirectory("gate_accept_idx").toString
+    val dir = tempDir("gate_accept_idx").toString
     val docs = graft.core.Tables.load(spark, sf("sf0.001"), "documents")
     val (candDocs, refDocs) = graft.operators.Dedup.plantedCrossCorpus(docs)
     val emb = graft.core.Tables.load(spark, sf("sf0.001"), "embeddings")
@@ -795,7 +795,7 @@ class PlanSpec extends SparkSpec {
     import graft.operators.{Dedup, Similarity}
     import spark.implicits._
     // x170: semantic probe over the persisted centroid-partitioned lists
-    val semDir = java.nio.file.Files.createTempDirectory("gate_sem_idx").toString
+    val semDir = tempDir("gate_sem_idx").toString
     val emb = Tables.load(spark, sf("sf0.001"), "embeddings")
     val isRef = $"vec_id" % 2 === 0
     Similarity.saveSemRefIndex(emb.filter(isRef), s"$semDir/idx")
@@ -820,7 +820,7 @@ class PlanSpec extends SparkSpec {
     assert(listScans.forall(_.partitionFilters.nonEmpty),
       s"lists scan is unpruned (no partition filters):\n$semPlan")
     // x171: gram probe over the persisted grams/df/sizes artifact
-    val xDir = java.nio.file.Files.createTempDirectory("gate_xprobe_idx").toString
+    val xDir = tempDir("gate_xprobe_idx").toString
     val (cand, ref) = Dedup.plantedCrossCorpus(
       Tables.load(spark, sf("sf0.001"), "documents"))
     Dedup.saveCrossProbeIndex(ref, s"$xDir/idx")

@@ -390,7 +390,7 @@ class PropertySpec extends SparkSpec {
           .toDF("doc_id", "lang", "text")
         val batch = Dedup.crossNearDupProbe(cand, ref, maxDf = 8)
           .as[(Long, Long, Long, Long)].collect().toSet
-        val dir = java.nio.file.Files.createTempDirectory("xprop").toString
+        val dir = tempDir("xprop").toString
         Dedup.saveCrossProbeIndex(ref, s"$dir/idx")
         val incr = Dedup.crossProbeIndexed(cand, s"$dir/idx", maxDf = 8)
           .as[(Long, Long, Long, Long)].collect().toSet
@@ -427,7 +427,7 @@ class PropertySpec extends SparkSpec {
         .toDF("doc_id", "lang", "text")
       if (rows.exists(_._4 == 0) && rows.exists(_._4 == 1)) {
         val cand = side(0)
-        val dir = java.nio.file.Files.createTempDirectory("xapp_prop").toString
+        val dir = tempDir("xapp_prop").toString
         Dedup.saveCrossProbeIndex(side(1), s"$dir/idx")
         for (p <- 2 to 3 if rows.exists(_._4 == p))
           Dedup.appendToCrossProbeIndex(side(p), s"$dir/idx")
@@ -463,7 +463,7 @@ class PropertySpec extends SparkSpec {
           .toDF("vec_id", "embedding")
         val batch = Similarity.crossSemProbe(cand, ref, k = 2, iters = 1)
           .collect().map(_.toSeq).toSet
-        val dir = java.nio.file.Files.createTempDirectory("semprop").toString
+        val dir = tempDir("semprop").toString
         Similarity.saveSemRefIndex(ref, s"$dir/idx", k = 2, iters = 1)
         val viaIdx = Similarity.semProbeAgainst(cand, s"$dir/idx")
           .collect().map(_.toSeq).toSet

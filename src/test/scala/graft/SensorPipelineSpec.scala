@@ -15,7 +15,7 @@ class SensorPipelineSpec extends SparkSpec {
   }
 
   test("dim validation rejects duplicate sensor_id") {
-    val p = java.nio.file.Files.createTempFile("dim", ".csv")
+    val p = tempDir("dim").resolve("dim.csv")
     java.nio.file.Files.writeString(p, "sensor_id,group_id\n1,g1\n1,g2\n")
     val e = intercept[IllegalArgumentException](loadDim(spark, p.toString))
     assert(e.getMessage.contains("duplicate"))
@@ -101,7 +101,7 @@ class SensorPipelineSpec extends SparkSpec {
 
   test("writePartitioned lays out one directory per sensor_group") {
     val out = SensorPipeline.run(spark, Fixtures.sensorNdjson, Fixtures.sensorDim)
-    val dir = java.nio.file.Files.createTempDirectory("store").toString
+    val dir = tempDir("store").toString
     writePartitioned(out, dir)
     val groups = new java.io.File(dir).list().filter(_.startsWith("sensor_group="))
     assert(groups.toSet == Set("sensor_group=g1", "sensor_group=g2", "sensor_group=g3", "sensor_group=g4"))

@@ -186,7 +186,7 @@ class StreamingOpsSpec extends SparkSpec {
     val events = graft.core.Tables.load(spark, sf("sf0.001"), "events")
     // frozen baseline: moments of the full corpus, round-tripped through
     // parquet (the persisted-artifact contract)
-    val mPath = java.nio.file.Files.createTempDirectory("moments").toString
+    val mPath = tempDir("moments").toString
     Analytics.momentsOf(events, "event_type", "value")
       .write.mode("overwrite").parquet(mPath)
     val moments = spark.read.parquet(mPath)
@@ -223,7 +223,7 @@ class StreamingOpsSpec extends SparkSpec {
     val events = graft.core.Tables.load(spark, sf("sf0.001"), "events")
     // frozen baseline: med/mad of the full corpus, round-tripped through
     // parquet (the persisted-artifact contract)
-    val bPath = java.nio.file.Files.createTempDirectory("madbase").toString
+    val bPath = tempDir("madbase").toString
     Analytics.madBaselineOf(events, Seq("event_type"), "value")
       .write.mode("overwrite").parquet(bPath)
     val baseline = spark.read.parquet(bPath)
@@ -260,7 +260,7 @@ class StreamingOpsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Analytics
     val events = graft.core.Tables.load(spark, sf("sf0.001"), "events")
-    val bPath = java.nio.file.Files.createTempDirectory("clipbounds").toString
+    val bPath = tempDir("clipbounds").toString
     Analytics.winsorBoundsOf(events, Seq("event_type"), "value",
         Analytics.WinsorLo, Analytics.WinsorHi)
       .write.mode("overwrite").parquet(bPath)
@@ -318,7 +318,7 @@ class StreamingOpsSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().toSet
     assert(viaGate == viaQuery, "frozen-vocab gate drifted from x63")
     // a 10-term vocabulary leaves real OOV mass — the gate's live case
-    val vPath = java.nio.file.Files.createTempDirectory("vocab").toString
+    val vPath = tempDir("vocab").toString
     TextAnalysis.corpusVocab(docs, 10).write.mode("overwrite").parquet(vPath)
     val vocab = spark.read.parquet(vPath)
     val batch = TextAnalysis.oovGate(docs, vocab)
@@ -368,7 +368,7 @@ class StreamingOpsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Similarity
     val emb = graft.core.Tables.load(spark, sf("sf0.001"), "embeddings")
-    val root = java.nio.file.Files.createTempDirectory("ivf-stream").toString + "/ivf"
+    val root = tempDir("ivf-stream").toString + "/ivf"
     Similarity.saveIvfIndex(emb, root, nCentroids = 16)
     val queries = emb.filter($"vec_id" < 10)
       .select($"vec_id".as("query_id"), $"embedding".as("qvec"))
@@ -444,7 +444,7 @@ class StreamingOpsSpec extends SparkSpec {
     // lists — silent codebook/lists drift. The cache is keyed on the
     // current generation dir, unique per publish; this pins the reload.
     val emb = graft.core.Tables.load(spark, sf("sf0.001"), "embeddings")
-    val root = java.nio.file.Files.createTempDirectory("ivf-republish").toString + "/ivf"
+    val root = tempDir("ivf-republish").toString + "/ivf"
     Similarity.saveIvfIndex(emb, root, nCentroids = 16)
     val queries = emb.filter($"vec_id" < 10)
       .select($"vec_id".as("query_id"), $"embedding".as("qvec"))
@@ -531,7 +531,7 @@ class StreamingOpsSpec extends SparkSpec {
     import graft.operators.Sampling
     val docs = graft.core.Tables.load(spark, sf("sf0.001"), "documents")
       .select($"doc_id", $"source")
-    val rPath = java.nio.file.Files.createTempDirectory("temp_rates").toString
+    val rPath = tempDir("temp_rates").toString
     Sampling.temperatureRatesOf(docs).write.mode("overwrite").parquet(rPath)
     val rates = spark.read.parquet(rPath)
     val batch = Sampling.applyRates(docs, rates, $"doc_id", "temp")
@@ -1027,7 +1027,7 @@ class StreamingOpsSpec extends SparkSpec {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val dir = java.nio.file.Files.createTempDirectory("dedupstream").toString
+      val dir = tempDir("dedupstream").toString
       val corpus = graft.core.Tables.load(spark, sf("sf0.001"), "documents")
         .limit(25).select($"doc_id", $"text")
       graft.operators.Dedup.saveDedupIndex(corpus, s"$dir/idx")
@@ -1238,7 +1238,7 @@ class StreamingOpsSpec extends SparkSpec {
   test("streaming contamination excision equals batch x151 against the frozen index") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Dedup
-    val dir = java.nio.file.Files.createTempDirectory("excisestream").toString
+    val dir = tempDir("excisestream").toString
     val docs = graft.core.Tables.load(spark, sf("sf0.001"), "documents")
     val isRef = $"source".isin("src0", "src1")
     val ref = docs.filter(isRef)
@@ -1457,7 +1457,7 @@ class StreamingOpsSpec extends SparkSpec {
   test("streaming leakage probe equals batch x152 against the frozen index") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Sampling
-    val dir = java.nio.file.Files.createTempDirectory("leak_probe").toString
+    val dir = tempDir("leak_probe").toString
     val base = graft.core.Tables.load(spark, sf("sf0.001"), "documents")
     Sampling.saveLeakageIndex(base, s"$dir/idx")
     val index = spark.read.parquet(
@@ -1489,7 +1489,7 @@ class StreamingOpsSpec extends SparkSpec {
   test("streaming PCA projection equals batch x162 against the frozen axes") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("pca_axes").toString
+    val dir = tempDir("pca_axes").toString
     val base = graft.core.Tables.load(spark, sf("sf0.001"), "embeddings")
     Similarity.savePcaAxes(base, s"$dir/axes")
     val batch = Similarity.pcaProjection2(base)
@@ -1517,7 +1517,7 @@ class StreamingOpsSpec extends SparkSpec {
   test("streaming DSIR gate equals batch x153 against the frozen model") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Sampling
-    val dir = java.nio.file.Files.createTempDirectory("dsir_model").toString
+    val dir = tempDir("dsir_model").toString
     val base = graft.core.Tables.load(spark, sf("sf0.001"), "documents")
     val raw = base.filter($"source" =!= "src0").select($"doc_id", $"text")
     val target = base.filter($"source" === "src0").select($"doc_id", $"text")
@@ -1544,7 +1544,7 @@ class StreamingOpsSpec extends SparkSpec {
   test("streaming NB quality gate equals batch x155 against the frozen model") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.TextAnalysis
-    val dir = java.nio.file.Files.createTempDirectory("nb_model").toString
+    val dir = tempDir("nb_model").toString
     val base = graft.core.Tables.load(spark, sf("sf0.001"), "documents")
     val positive = $"source".isin("src0", "src1")
     TextAnalysis.saveNbModel(base, positive, s"$dir/model")
@@ -1600,7 +1600,7 @@ class StreamingOpsSpec extends SparkSpec {
   test("streaming CCNet LM gate equals batch x159 against the frozen model and edges") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.{Sampling, TextAnalysis}
-    val dir = java.nio.file.Files.createTempDirectory("lm_model").toString
+    val dir = tempDir("lm_model").toString
     val base = graft.core.Tables.load(spark, sf("sf0.001"), "documents")
       .select($"doc_id", $"text")
     TextAnalysis.saveLmModel(base, s"$dir/model")
@@ -1641,7 +1641,7 @@ class StreamingOpsSpec extends SparkSpec {
   test("frozen dup-span index gates arrivals like batch self-excision (x157 live)") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Dedup
-    val dir = java.nio.file.Files.createTempDirectory("dupspan_idx").toString
+    val dir = tempDir("dupspan_idx").toString
     // the frozen corpus repeats one span (h1..h4, docs 1 and 2) and
     // keeps doc 3's passage unique
     val corpus = Seq(
@@ -1881,7 +1881,7 @@ class StreamingOpsSpec extends SparkSpec {
   test("streaming line dedup equals batch x139 against a corpus-built line index") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("linestream").toString
+    val dir = tempDir("linestream").toString
     // plant corpus-repeated lines so the boiler set is non-empty
     val b = (1 to 10).map(i => s"bb$i").mkString(" ")
     val base = graft.core.Tables.load(spark, sf("sf0.001"), "documents")
@@ -1977,7 +1977,7 @@ class StreamingOpsSpec extends SparkSpec {
   test("streaming semantic probe equals batch x170 against the frozen reference index") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("sem_probe").toString
+    val dir = tempDir("sem_probe").toString
     val emb = graft.core.Tables.load(spark, sf("sf0.001"), "embeddings")
     val isRef = $"vec_id" % 2 === 0
     Similarity.saveSemRefIndex(emb.filter(isRef), s"$dir/idx")
@@ -2009,7 +2009,7 @@ class StreamingOpsSpec extends SparkSpec {
   test("streaming upset monitor equals batch x172 against the frozen ladder") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Analytics
-    val dir = java.nio.file.Files.createTempDirectory("bt_upsets").toString
+    val dir = tempDir("bt_upsets").toString
     val cmp = Analytics.plantedComparisons(spark, sf("sf0.001"))
     Analytics.saveBtStrengths(cmp.select($"winner", $"loser"), s"$dir/l")
     val batch = Analytics.btUpsetsAgainst(cmp,
@@ -2042,7 +2042,7 @@ class StreamingOpsSpec extends SparkSpec {
     val emb = graft.core.Tables.load(spark, sf("sf0.001"), "embeddings")
     val refIds = docs.filter($"source".isin("src0", "src1"))
       .select($"doc_id".as("vec_id"))
-    val dir = java.nio.file.Files.createTempDirectory("accept_gate").toString
+    val dir = tempDir("accept_gate").toString
     Dedup.saveAcceptanceIndex(refDocs,
       emb.join(refIds, Seq("vec_id"), "left_semi"), s"$dir/idx")
     val cands = candDocs.select($"doc_id", $"lang", $"text")
@@ -2079,7 +2079,7 @@ class StreamingOpsSpec extends SparkSpec {
     import graft.operators.Similarity
     val emb = graft.core.Tables.load(spark, sf("sf0.001"), "embeddings")
     val isRef = $"vec_id" % 2 === 0
-    val dir = java.nio.file.Files.createTempDirectory("drift_stream").toString
+    val dir = tempDir("drift_stream").toString
     Similarity.saveSemRefIndex(emb.filter(isRef), s"$dir/idx")
     val recent = emb.filter(!isRef)
     val batch = Similarity.semRecentCounts(recent, s"$dir/idx")

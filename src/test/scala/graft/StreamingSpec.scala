@@ -19,7 +19,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming upsert over MemoryStream equals batch pipeline (Q20)") {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[String]
-    val store = java.nio.file.Files.createTempDirectory("upsert").toString + "/store"
+    val store = tempDir("upsert").toString + "/store"
     val dim = SensorPipeline.loadDim(spark, Fixtures.sensorDim)
     val transformed = SensorStream.transform(stream.toDF(), dim)
     val q = transformed.writeStream
@@ -48,7 +48,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("re-running a batch converges (idempotent upsert)") {
-    val store = java.nio.file.Files.createTempDirectory("upsert2").toString + "/store"
+    val store = tempDir("upsert2").toString + "/store"
     val dim = SensorPipeline.loadDim(spark, Fixtures.sensorDim)
     val lines = spark.read.text(Fixtures.sensorNdjson)
     val batch = SensorStream.transform(lines, dim)
@@ -90,7 +90,7 @@ class StreamingSpec extends SparkSpec {
     // exactly-once claim (SURVEY §4.3): checkpointed offsets + idempotent
     // upsert. Run over files, stop, add a file, restart with the SAME
     // checkpoint — the store must equal the batch pipeline over all files.
-    val base = java.nio.file.Files.createTempDirectory("ckpt").toString
+    val base = tempDir("ckpt").toString
     val inDir = s"$base/in"; val store = s"$base/store"; val ckpt = s"$base/ckpt"
     new java.io.File(inDir).mkdirs()
     val lines = ndjsonLines
@@ -142,7 +142,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("upsert rewrites only the group partitions present in the batch") {
-    val store = java.nio.file.Files.createTempDirectory("pruned").toString + "/store"
+    val store = tempDir("pruned").toString + "/store"
     // start from a store the upsert did not write: four appends leave
     // alpha fragmented into four files
     (0 until 4).foreach { i =>
@@ -199,7 +199,7 @@ class StreamingSpec extends SparkSpec {
     // read-back and re-publish it under sensor_group=1, stranding the old
     // sensor_group=01 dir with duplicate PK rows. The explicit-schema read
     // keeps the group a STRING end-to-end.
-    val store = java.nio.file.Files.createTempDirectory("numgrp").toString + "/store"
+    val store = tempDir("numgrp").toString + "/store"
     val up = SensorStream.upsertBatch(spark, store) _
     up(Seq(rec("01", 1, "2024-01-01 00:00:00", 1)).toDF(storageCols: _*), 0L)
     up(Seq(rec("01", 1, "2024-01-01 00:00:00", 2, temp = 30)).toDF(storageCols: _*), 1L)
@@ -214,7 +214,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("upsert fails fast on null sensor_group and sweeps orphan staging dirs") {
-    val store = java.nio.file.Files.createTempDirectory("nullgrp").toString + "/store"
+    val store = tempDir("nullgrp").toString + "/store"
     val up = SensorStream.upsertBatch(spark, store) _
     val withNull = Seq(rec("alpha", 1, "2024-01-01 00:00:00", 1))
       .toDF(storageCols: _*)
@@ -233,7 +233,7 @@ class StreamingSpec extends SparkSpec {
   test("cross-batch out-of-seq delivery converges to the max-seq row") {
     // multi-partition-Kafka shape: a PK's later-seq record can land in an
     // EARLIER micro-batch; the store must still keep the max-seq payload.
-    val store = java.nio.file.Files.createTempDirectory("ooo").toString + "/store"
+    val store = tempDir("ooo").toString + "/store"
     val up = SensorStream.upsertBatch(spark, store) _
     up(Seq(rec("alpha", 1, "2024-01-01 00:00:00", 5, temp = 50)).toDF(storageCols: _*), 0L)
     up(Seq(rec("alpha", 1, "2024-01-01 00:00:00", 3, temp = 99)).toDF(storageCols: _*), 1L)
@@ -250,7 +250,7 @@ class StreamingSpec extends SparkSpec {
     // same checkpoint, and demand the final layout equal a batch
     // partitionBy of the same records — no loss, no dup, per topic.
     import graft.streaming.TopicRouter
-    val base = java.nio.file.Files.createTempDirectory("route").toString
+    val base = tempDir("route").toString
     val inDir = s"$base/in"; val outDir = s"$base/topics"; val ckpt = s"$base/ckpt"
     new java.io.File(inDir).mkdirs()
     val lines = ndjsonLines
@@ -316,7 +316,7 @@ class StreamingSpec extends SparkSpec {
   test("equivalent spellings of one store path share one lock") {
     // ADVICE r4: absolute-path keying let "/s/x" and "/s/./x" acquire
     // DIFFERENT locks — two writers could then race the staging sweep.
-    val dir = java.nio.file.Files.createTempDirectory("lockkey").toString
+    val dir = tempDir("lockkey").toString
     val store = dir + "/store"
     assert(SensorStream.storeLock(store) eq SensorStream.storeLock(dir + "/./store"),
       "dot-segment spelling got a different lock")
@@ -336,7 +336,7 @@ class StreamingSpec extends SparkSpec {
     // lock serializes writers instead (upserts are idempotent, so waiting
     // is always correct, and a second writer overlapping a trigger must
     // not kill the streaming query with an exception)
-    val store = java.nio.file.Files.createTempDirectory("lock").toString + "/store"
+    val store = tempDir("lock").toString + "/store"
     SensorStream.upsertBatch(spark, store)(
       Seq(rec("alpha", 1, "2024-01-01 00:00:00", 1)).toDF(storageCols: _*), 0L)
     val held = new java.util.concurrent.CountDownLatch(1)
@@ -377,7 +377,7 @@ class StreamingSpec extends SparkSpec {
     spark.streams.addListener(listener)
     val stream = MemoryStream[String]
     val dim = SensorPipeline.loadDim(spark, Fixtures.sensorDim)
-    val store = java.nio.file.Files.createTempDirectory("fan").toString + "/store"
+    val store = tempDir("fan").toString + "/store"
     val seen = new java.util.concurrent.atomic.AtomicLong()
     val q = SensorStream.transform(stream.toDF(), dim)
       .writeStream.outputMode("append")
@@ -401,7 +401,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.MetricsExport
     val snap = MetricsExport.snapshot(listener)
     assert(snap.get("fanout_q").contains(600L))
-    val mdir = java.nio.file.Files.createTempDirectory("metrics").toString
+    val mdir = tempDir("metrics").toString
     MetricsExport.appendSnapshot(spark, snap, s"$mdir/store", epochSec = 1000L)
     MetricsExport.appendSnapshot(spark,
       snap.map { case (k, v) => k -> (v + 50L) }, s"$mdir/store",

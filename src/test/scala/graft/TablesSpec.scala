@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -19,12 +19,6 @@ import graft.core.Tables
   * shape Tables.load can branch on.
   */
 class TablesSpec extends SparkSpec {
-
-  private def tempDir(prefix: String): Path = {
-    val d = Files.createTempDirectory(prefix)
-    d.toFile.deleteOnExit()
-    d
-  }
 
   // 2026-01-02T03:04:05.123456Z in micros since epoch.
   private val micros = 1767323045123456L

@@ -61,7 +61,7 @@ class TextSearchSpec extends SparkSpec {
 
   test("persisted index answers cell-identically to the direct scan and prunes to query buckets") {
     val docs = graft.core.Tables.load(spark, sf("sf0.001"), "documents")
-    val dir = java.nio.file.Files.createTempDirectory("bm25idx").toString
+    val dir = tempDir("bm25idx").toString
     TextSearch.saveIndex(docs, dir)
     val direct = TextSearch.bm25TopK(docs, TextSearch.demoQueries)
       .orderBy($"query_id", $"rank").collect().toSeq
@@ -102,7 +102,7 @@ class TextSearchSpec extends SparkSpec {
 
   test("a save that dies after the postings land leaves the previous index scoring identically") {
     val docs = graft.core.Tables.load(spark, sf("sf0.001"), "documents")
-    val dir = java.nio.file.Files.createTempDirectory("bm25torn").toString + "/idx"
+    val dir = tempDir("bm25torn").toString + "/idx"
     TextSearch.saveIndex(docs, dir)
     def answer() = TextSearch.bm25TopKIndexed(spark, dir, TextSearch.demoQueries)
       .orderBy($"query_id", $"rank").collect().toSeq

@@ -14,11 +14,10 @@ class VerifySpec extends SparkSpec {
   test("Verify leaves readable error markers and full status when the corpus is broken") {
     // a corpus with ONLY region.parquet: every sf-reading query fails at
     // load; q20 (committed fixtures) still passes — both paths exercised
-    val corpus = Files.createTempDirectory("verify-broken")
-    corpus.toFile.deleteOnExit()
+    val corpus = tempDir("verify-broken")
     Files.copy(Paths.get(sf("sf0.001"), "region.parquet"),
       corpus.resolve("region.parquet"))
-    val out = Files.createTempDirectory("verify-out").toString
+    val out = tempDir("verify-out").toString
 
     Verify.run(spark, corpus.toString, out)
 
