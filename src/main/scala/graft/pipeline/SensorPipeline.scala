@@ -113,7 +113,11 @@ object SensorPipeline {
     * not grow with the dimension. A streaming query therefore sees the
     * dimension as it was when its plan was built, as the reference's
     * start-up map does. In fail-fast mode an unknown sensor_id raises at
-    * execution time, like the reference; otherwise the row is dropped. */
+    * execution time, like the reference; otherwise the row is dropped.
+    * The drop is a generator over the probe's zero-or-one groups, not a
+    * filter: a filter on the probed column is pushed below the projection
+    * with the probe inlined into its condition, so each row would be
+    * probed twice (quarantine's reasoning, one stage later). */
   def enrich(readings: DataFrame, dim: DataFrame, failFast: Boolean = true): DataFrame = {
     val rows = dim.select(col("sensor_id").cast(IntegerType), col("group_id").cast(StringType))
       .collect()
@@ -121,14 +125,17 @@ object SensorPipeline {
     val groups = rows.map(r => r.getInt(0) -> r.getString(1)).toMap
     require(groups.size == rows.length, "enrich: dimension contains duplicate sensor_id")
     val shipped = readings.sparkSession.sparkContext.broadcast(groups)
-    val probe = udf((id: Int) => shipped.value.get(id).orNull)
-    val enriched = readings.withColumn("sensor_group", probe(col("id")))
-    if (failFast)
-      enriched.withColumn("sensor_group",
+    if (failFast) {
+      val probe = udf((id: Int) => shipped.value.get(id).orNull)
+      readings.withColumn("sensor_group", probe(col("id"))).withColumn("sensor_group",
         when(col("sensor_group").isNull,
           raise_error(concat(lit("unknown sensor id: "), col("id").cast("string"))))
           .otherwise(col("sensor_group")))
-    else enriched.filter(col("sensor_group").isNotNull)
+    } else {
+      // a null group drops the row, as an unknown id does
+      val probe = udf((id: Int) => shipped.value.get(id).flatMap(Option(_)).toSeq)
+      readings.select(col("*"), explode(probe(col("id"))).as("sensor_group"))
+    }
   }
 
   /** Key-rename projection in fixed storage column order (reference:

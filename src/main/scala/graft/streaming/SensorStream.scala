@@ -74,12 +74,14 @@ object SensorStream {
     *
     * Scale shape (the Cassandra-partition analogy, reference PK at
     * link_kafka_cassandra.py:45): the store is laid out one directory per
-    * `sensor_group` (the Cassandra partition key). A micro-batch only
-    * reads, merges, and rewrites the group partitions PRESENT IN THE
-    * BATCH — cost per batch is O(|touched partitions|), not O(|store|),
-    * so a long-running stream over a 100 TB store touches only the few
-    * groups currently emitting. Untouched partition directories are never
-    * opened or rewritten.
+    * `sensor_group` (the Cassandra partition key). A micro-batch reads,
+    * merges and rewrites only the group partitions PRESENT IN THE BATCH;
+    * untouched partition directories are never opened or rewritten. Each
+    * touched group is rewritten IN FULL, so a call costs O(batch + the
+    * touched groups' stored rows): when every group emits in every batch
+    * (perfbench's traffic: 4 groups, one of them hot) that is the whole
+    * store each batch, and a stream's total cost grows with the square of
+    * its length.
     *
     * Versioning: the store persists `seq` (max seen per PK) as a version
     * column, and the merge tie-breaks on (seq, arrival). Cross-batch
@@ -102,55 +104,65 @@ object SensorStream {
 
     // Cache the batch AS DELIVERED (the narrow parse→enrich→rename
     // pipeline): both passes below — group listing and the merge — read
-    // it once from memory, and a shuffle-free cached plan leaves AQE free
-    // to coalesce the merge aggregation downstream (a cached shuffle's
-    // partitioning is pinned by canChangeCachedPlanOutputPartitioning).
-    // Batch-local last-write-wins happens INSIDE the single merge
-    // aggregation below instead of as its own pre-pass. A batch the
-    // caller already persisted (fanOutBatch's shared cache) is reused
-    // as-is and must NOT be unpersisted out from under the other sinks.
+    // it once from memory. Batch-local last-write-wins happens INSIDE the
+    // single merge aggregation below instead of as its own pre-pass. A
+    // batch the caller already persisted (fanOutBatch's shared cache) is
+    // reused as-is and must NOT be unpersisted out from under the other
+    // sinks.
     val callerCached = batch.storageLevel != org.apache.spark.storage.StorageLevel.NONE
     val incoming = if (callerCached) batch else batch.persist()
     try {
       // fail fast on null groups: they would land in the Hive default
-      // partition, which the isin pruning below never reads back — a
-      // silent PK-merge hole. (The stream pipeline filters them upstream;
-      // this guards direct foreachBatch users.)
-      val groups = incoming.select("sensor_group").distinct()
-        .collect().map { r =>
-          if (r.isNullAt(0)) throw new IllegalArgumentException(
-            "upsertBatch: null sensor_group in batch — enrich/filter upstream first")
-          r.getString(0)
-        }.sorted.toSeq
+      // partition, which the touched-directory read below never reads
+      // back — a silent PK-merge hole. (The stream pipeline filters them
+      // upstream; this guards direct foreachBatch users.)
+      val groups = touchedGroups(incoming).map(_.getOrElse(throw new IllegalArgumentException(
+        "upsertBatch: null sensor_group in batch — enrich/filter upstream first")))
+        .toSeq.sorted
       if (groups.nonEmpty) {
-        val hasStore = storeRoot.exists() &&
-          graft.core.Fs.listOrEmpty(storeRoot).exists(_.getName.startsWith("sensor_group="))
-        // GROUP-ALIGNED merge exchange: the union is repartitioned by
-        // sensor_group BEFORE the last-write-wins aggregate. Hash
-        // partitioning on a SUBSET of the grouping keys satisfies the
-        // aggregate's clustered distribution, so the PK group-by plans as
-        // ONE complete hash aggregate over this exchange — same single
-        // shuffle as before (the agg's own PK-hash exchange is gone,
-        // and the planted ~10% duplicate fraction is all a map-side
-        // partial could have combined), but the output is now aligned
-        // with the store layout: each write task holds whole groups, so
-        // a batch stages exactly ONE file per touched partition instead
-        // of (reduce tasks × groups) cross-group slivers — the
-        // compaction debt the store used to accumulate per batch. The
-        // skew axis (a hot group serializes through one task) is the
-        // same one the sensor_group directory layout already has.
-        def groupAligned(df: DataFrame): DataFrame =
-          df.repartition(col("sensor_group"))
+        // GROUP-ALIGNED merge exchange: each touched group goes to one
+        // slot, its index in the sorted touched list modulo the slot
+        // count, and `repartitionById` sends slot i to reduce partition i.
+        // The slot leads the last-write-wins grouping keys, so the
+        // pass-through partitioning satisfies the aggregate's clustered
+        // distribution and the PK group-by plans over this ONE exchange.
+        // Each write task then holds whole groups and stages exactly ONE
+        // file per touched partition. Hash partitioning on sensor_group
+        // gives the same alignment but serializes the merge: hashes of
+        // few group names collide (g1, g3 and g4 share one partition at
+        // 4 and at 8 partitions), and AQE coalesces the small shuffle into
+        // the partitions that hold data, so the merge-and-write runs as
+        // one task while the other cores idle. The slot count is explicit,
+        // which AQE does not coalesce, so distinct touched groups land in
+        // distinct tasks up to the shuffle partition count. The skew left
+        // (a hot group is one task) is the one the sensor_group directory
+        // layout already has.
+        val slots = math.min(groups.size, spark.conf.get("spark.sql.shuffle.partitions").toInt)
+        val slotOf = typedLit(groups.zipWithIndex.map { case (g, i) => g -> i % slots }.toMap)
+        def groupAlignedLastWins(df: DataFrame): DataFrame =
+          SensorPipeline.dedupLastWins(
+            df.withColumn("_slot", element_at(slotOf, col("sensor_group")))
+              .repartitionById(slots, col("_slot")),
+            "_slot" +: SensorPipeline.pkCols, "_ord")
+            .drop("_slot")
+        // only the touched group directories are listed and read: the
+        // store root is never listed, so the cost does not grow with the
+        // number of groups in the store (past 32 directories Spark lists
+        // a root with a distributed job)
+        val touchedDirs = groups
+          .map(g => new java.io.File(storeRoot,
+            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+              .getPartitionPathString("sensor_group", g)))
+          .filter(_.isDirectory)
         val merged =
-          if (hasStore) {
-            // partition pruning: the isin filter on the partition column
-            // restricts the scan to the touched group directories only.
-            // Explicit schema (= the batch's own storage schema) keeps
-            // sensor_group STRING: inference would retype numeric-looking
-            // group dirs (e.g. "01" → int 1) and re-publish them under a
-            // different directory name than the live one.
-            val store = spark.read.schema(incoming.schema).parquet(storePath)
-              .filter(col("sensor_group").isin(groups: _*))
+          if (touchedDirs.nonEmpty) {
+            // basePath keeps sensor_group a partition column of the read.
+            // Explicit schema (= the batch's own storage schema) keeps it
+            // STRING: inference would retype numeric-looking group dirs
+            // (e.g. "01" → int 1) and re-publish them under a different
+            // directory name than the live one.
+            val store = spark.read.schema(incoming.schema).option("basePath", storePath)
+              .parquet(touchedDirs.map(_.getPath): _*)
             val tagged = store.withColumn("_w", lit(0L))
               .unionByName(incoming.withColumn("_w", lit(1L)))
             // winner per PK = max (seq, arrival): seq order first (ADVICE:
@@ -159,13 +171,8 @@ object SensorStream {
             // last-write-wins: within the batch `_w` is constant so the
             // max-seq row wins exactly as a separate batch pre-dedup would,
             // and one shuffle replaces the former two.
-            SensorPipeline.dedupLastWins(
-              groupAligned(tagged.withColumn("_ord", struct(col("seq"), col("_w")))),
-              SensorPipeline.pkCols, "_ord")
-              .drop("_w")
-          } else SensorPipeline.dedupLastWins(
-            groupAligned(incoming.withColumn("_ord", col("seq"))),
-            SensorPipeline.pkCols, "_ord")
+            groupAlignedLastWins(tagged.withColumn("_ord", struct(col("seq"), col("_w")))).drop("_w")
+          } else groupAlignedLastWins(incoming.withColumn("_ord", col("seq")))
 
         // ONE distributed job writes all touched partitions into staging;
         // the publish below is driver-side metadata renames only. The
@@ -188,6 +195,14 @@ object SensorStream {
       }
     } finally { if (!callerCached) incoming.unpersist() }
   }
+
+  /** The batch's distinct `sensor_group` values (None for a null), listed
+    * by ONE shuffle-free job: each partition returns its own distinct
+    * set and the driver unions them. */
+  private def touchedGroups(batch: DataFrame): Set[Option[String]] =
+    batch.select("sensor_group").rdd
+      .mapPartitions(rows => Iterator(rows.map(r => Option(r.getString(0))).toSet))
+      .collect().foldLeft(Set.empty[Option[String]])(_ ++ _)
 
   /** Crash recovery for the swap-published store, run by every upsert
     * batch before touching it: a previous invocation may have died

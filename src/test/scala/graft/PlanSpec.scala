@@ -320,6 +320,27 @@ class PlanSpec extends SparkSpec {
     assert(optimized.collect { case j: Join => j }.isEmpty, s"transform should not join:\n$p")
   }
 
+  test("SensorStream.transform probes the dimension once per row") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val lines = MemoryStream[String]
+    val dim = graft.pipeline.SensorPipeline.loadDim(spark, Fixtures.sensorDim)
+    val q = graft.streaming.SensorStream.transform(lines.toDF(), dim)
+      .writeStream.format("noop").start()
+    // the physical plan of a micro-batch as the stream ran it; the
+    // dimension probe is the transform's only UDF
+    val executed =
+      try {
+        lines.addData(scala.io.Source.fromFile(Fixtures.sensorNdjson).getLines().take(50).toSeq)
+        q.processAllAvailable()
+        q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      } finally q.stop()
+    val probes = executed.flatMap(_.expressions.flatMap(_.collect { case u: ScalaUDF => u }))
+    assert(probes.size == 1, s"the dimension probe is evaluated ${probes.size} times:\n$executed")
+  }
+
   test("x19/x20: sampling decisions never read the text column") {
     // split keys on doc_id, mix on doc_id+source — a scan that drags the
     // documents' text payload through a sampling decision is the 100 TB

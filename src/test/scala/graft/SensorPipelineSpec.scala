@@ -43,6 +43,13 @@ class SensorPipelineSpec extends SparkSpec {
     val (clean, _) = quarantine(parseStrict(spark.read.text(Fixtures.sensorDirtyNdjson)))
     assert(clean.count() == 80)
     assert(enrich(clean, dim, failFast = false).count() == 40)
+    // a sensor whose group is null is dropped too, never emitted groupless
+    import spark.implicits._
+    val known = clean.select(col("id")).distinct().orderBy("id").limit(2).collect().map(_.getInt(0))
+    val partial = Seq[(Int, String)](known(0) -> "g1", known(1) -> null).toDF("sensor_id", "group_id")
+    val kept = enrich(clean, partial, failFast = false)
+    assert(kept.filter(col("sensor_group").isNull).isEmpty)
+    assert(kept.count() == clean.filter(col("id") === known(0)).count())
   }
 
   test("enrich rejects a dimension with a duplicate or null sensor_id") {

@@ -198,19 +198,23 @@ class StreamingSpec extends SparkSpec {
     // partition type inference would retype "01" → int 1 on the store
     // read-back and re-publish it under sensor_group=1, stranding the old
     // sensor_group=01 dir with duplicate PK rows. The explicit-schema read
-    // keeps the group a STRING end-to-end.
-    val store = tempDir("numgrp").toString + "/store"
-    val up = SensorStream.upsertBatch(spark, store) _
-    up(Seq(rec("01", 1, "2024-01-01 00:00:00", 1)).toDF(storageCols: _*), 0L)
-    up(Seq(rec("01", 1, "2024-01-01 00:00:00", 2, temp = 30)).toDF(storageCols: _*), 1L)
-    val dirs = new java.io.File(store).listFiles()
-      .filter(_.getName.startsWith("sensor_group=")).map(_.getName).toSeq
-    assert(dirs == Seq("sensor_group=01"), s"partition dirs diverged: $dirs")
-    val rows = spark.read.schema(
-        Seq(rec("01", 1, "2024-01-01 00:00:00", 1)).toDF(storageCols: _*).schema)
-      .parquet(store).select("sensor_group", "temperature", "seq").collect()
-    assert(rows.length == 1, s"duplicate PK rows in store: ${rows.toSeq}")
-    assert(rows(0).getString(0) == "01" && rows(0).getInt(1) == 30)
+    // keeps the group a STRING end-to-end. A name the directory layout
+    // escapes ("a/b=c%d") must be read back from the directory it was
+    // written to, or the merge would miss the stored row.
+    for ((group, dir) <- Seq("01" -> Some("sensor_group=01"), "a/b=c%d" -> None)) {
+      val store = tempDir("numgrp").toString + "/store"
+      val up = SensorStream.upsertBatch(spark, store) _
+      up(Seq(rec(group, 1, "2024-01-01 00:00:00", 1)).toDF(storageCols: _*), 0L)
+      up(Seq(rec(group, 1, "2024-01-01 00:00:00", 2, temp = 30)).toDF(storageCols: _*), 1L)
+      val dirs = new java.io.File(store).listFiles()
+        .filter(_.getName.startsWith("sensor_group=")).map(_.getName).toSeq
+      assert(dirs.size == 1 && dir.forall(dirs == Seq(_)), s"partition dirs diverged: $dirs")
+      val rows = spark.read.schema(
+          Seq(rec(group, 1, "2024-01-01 00:00:00", 1)).toDF(storageCols: _*).schema)
+        .parquet(store).select("sensor_group", "temperature", "seq").collect()
+      assert(rows.length == 1, s"duplicate PK rows in store: ${rows.toSeq}")
+      assert(rows(0).getString(0) == group && rows(0).getInt(1) == 30)
+    }
   }
 
   test("upsert fails fast on null sensor_group and sweeps orphan staging dirs") {
@@ -241,6 +245,171 @@ class StreamingSpec extends SparkSpec {
     assert(row.length == 1)
     assert(row(0).getInt(0) == 50, "stale lower-seq record overwrote the store")
     assert(row(0).getLong(1) == 5L, "store version column must carry the max seq")
+  }
+
+  // -- what one upsert call runs: jobs, final-stage tasks, the write plan --
+  /** What Spark ran for one call: the final stage's task count of each
+    * job, in job order, and the executed plan of each write into a
+    * staging dir. */
+  private case class Ran(finalStageTasks: Seq[Int],
+                         writes: Seq[org.apache.spark.sql.execution.SparkPlan]) {
+    def jobs: Int = finalStageTasks.size
+  }
+
+  /** Runs `body` under a fresh job group and collects what it ran. The
+    * listener, like the query-execution listener bus, sits on the shared
+    * listener queue, which delivers events in posting order: once a
+    * marker job started AFTER `body` reaches the listener, every event of
+    * `body` has been delivered. */
+  private def ran(body: => Unit): Ran = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sc = spark.sparkContext
+    val tag = s"upsert-${java.util.UUID.randomUUID}"
+    val marker = s"$tag-marker"
+    val tasks = new java.util.concurrent.ConcurrentSkipListMap[Int, Int]()
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val jobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `tag` => tasks.put(e.jobId, e.stageInfos.maxBy(_.stageId).numTasks)
+          case `marker` => drained.countDown()
+          case _ => ()
+        }
+    }
+    val plans = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        nodes(qe.executedPlan).foreach {
+          case w @ DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _)
+              if c.outputPath.getName.contains("._staging_") => writes.add(w)
+          case _ => ()
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(plans)
+    sc.addSparkListener(jobs)
+    try {
+      sc.setJobGroup(tag, "upsert under test")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "listener drain marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never drained")
+    } finally {
+      sc.removeSparkListener(jobs)
+      spark.listenerManager.unregister(plans)
+    }
+    import scala.jdk.CollectionConverters._
+    Ran(tasks.values.asScala.toSeq, writes.asScala.toSeq)
+  }
+
+  /** Every node of an executed plan, through AQE stages and commands. */
+  private def nodes(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val below = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case c: org.apache.spark.sql.execution.CommandResultExec => Seq(c.commandPhysicalPlan)
+      case other => other.children
+    }
+    p +: below.flatMap(nodes)
+  }
+
+  /** Independent last-write-wins over storage records in delivery order:
+    * per PK the max seq, and among equal seqs the later one. */
+  private def lastWins(recs: Seq[(String, java.sql.Timestamp, Int, Int, Int, Int, Int, Int, Int, Int, Int, Long)])
+      : Seq[(String, Int, String, Int, Long)] =
+    recs.zipWithIndex.groupBy { case (r, _) => (r._1, r._3, r._2) }.values
+      .map(_.maxBy { case (r, i) => (r._12, i) }._1)
+      .map(r => (r._1, r._3, r._2.toString, r._5, r._12)).toSeq.sorted
+
+  private def storeRows(store: String): Seq[(String, Int, String, Int, Long)] =
+    spark.read.parquet(store)
+      .select("sensor_group", "sensor_id", "time_received", "temperature", "seq")
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getTimestamp(2).toString,
+        r.getInt(3), r.getLong(4))).sorted.toSeq
+
+  private def parquetFiles(store: String): Map[String, Int] =
+    new java.io.File(store).listFiles().filter(_.getName.startsWith("sensor_group="))
+      .map(d => d.getName -> d.listFiles().count(f => f.isFile && f.getName.endsWith(".parquet")))
+      .toMap
+
+  test("upsert merges each touched group in its own task, over one uncoalesced exchange") {
+    // g1, g3 and g4 hash to one partition at 4 (and at 8) shuffle
+    // partitions, so a hash exchange on sensor_group ran this merge as
+    // one task; the names are the point of the test
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    val store = tempDir("pergroup").toString + "/store"
+    val up = SensorStream.upsertBatch(spark, store) _
+    def batch(groups: Seq[String], seqNo: Long) = for {
+      g <- groups; id <- 0 until 12
+    } yield rec(g, id, s"2024-01-01 00:0${id % 3}:00", seqNo + id % 2, temp = id + seqNo.toInt)
+    val first = batch(Seq("g1", "g2", "g3", "g4"), 1)
+    up(first.toDF(storageCols: _*), 0L)
+    // the second batch re-emits every key (some with a stale seq) and adds new ones
+    val second = batch(Seq("g1", "g2", "g3", "g4"), 1)
+        .map(r => r.copy(_5 = 90 + r._3, _12 = if (r._3 % 3 == 0) 0L else r._12 + 1)) ++
+      batch(Seq("g4", "g2", "g3", "g1"), 2).map(r => r.copy(_3 = r._3 + 100))
+    val call = ran(up(second.toDF(storageCols: _*), 1L))
+    assert(call.finalStageTasks.last == 4,
+      s"the write's final stage ran ${call.finalStageTasks.last} tasks, not one per group: " +
+        call.finalStageTasks.mkString(","))
+    assert(call.writes.size == 1, s"expected one staging write: ${call.writes}")
+    val plan = nodes(call.writes.head)
+    val exchanges = plan.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }
+    assert(exchanges.size == 1, s"expected exactly one exchange:\n${call.writes.head}")
+    assert(exchanges.head.numPartitions == 4, s"exchange is not one slot per group:\n${call.writes.head}")
+    assert(plan.collect { case r: org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec => r }.isEmpty,
+      s"the merge exchange was coalesced:\n${call.writes.head}")
+    assert(parquetFiles(store) == Seq("g1", "g2", "g3", "g4").map(g => s"sensor_group=$g" -> 1).toMap,
+      s"one parquet file per group: ${parquetFiles(store)}")
+    assert(storeRows(store) == lastWins(first ++ second), "store is not last-write-wins")
+
+    // more touched groups than shuffle partitions: slots are shared, and
+    // each group still lands whole in one task
+    val six = Seq("g1", "g2", "g3", "g4", "g5", "g6")
+    val third = batch(six, 3).map(r => r.copy(_5 = 60 + r._3))
+    up(third.toDF(storageCols: _*), 2L)
+    assert(parquetFiles(store) == six.map(g => s"sensor_group=$g" -> 1).toMap,
+      s"one parquet file per group: ${parquetFiles(store)}")
+    assert(storeRows(store) == lastWins(first ++ second ++ third), "store is not last-write-wins")
+  }
+
+  test("an upsert into an existing store runs at most 3 jobs") {
+    // listing the batch's groups, the merge's shuffle map stage, the write
+    val store = tempDir("jobs").toString + "/store"
+    val up = SensorStream.upsertBatch(spark, store) _
+    up(Seq(rec("alpha", 1, "2024-01-01 00:00:00", 1), rec("beta", 2, "2024-01-01 00:00:00", 1))
+      .toDF(storageCols: _*), 0L)
+    val call = ran(up(Seq(rec("alpha", 1, "2024-01-01 00:00:00", 2, temp = 30),
+      rec("beta", 3, "2024-01-01 00:00:00", 1)).toDF(storageCols: _*), 1L))
+    assert(call.jobs <= 3, s"one upsert ran ${call.jobs} jobs")
+    assert(storeRows(store).map(r => (r._1, r._2, r._4)) ==
+      Seq(("alpha", 1, 30), ("beta", 2, 20), ("beta", 3, 20)))
+  }
+
+  test("an upsert's jobs do not grow with the number of groups in the store") {
+    // past 32 directories (parallelPartitionDiscovery.threshold) Spark
+    // lists a directory with a distributed job; the upsert reads only
+    // the directories of the groups it touches
+    val touched = Seq(rec("g00", 1, "2024-01-01 00:00:00", 2, temp = 31),
+      rec("g01", 1, "2024-01-01 00:00:00", 2, temp = 32))
+    def jobsInto(groups: Int): Int = {
+      val store = tempDir(s"groups$groups").toString + "/store"
+      val up = SensorStream.upsertBatch(spark, store) _
+      up((0 until groups).map(g => rec(f"g$g%02d", 1, "2024-01-01 00:00:00", 1)).toDF(storageCols: _*), 0L)
+      assert(parquetFiles(store).size == groups)
+      val jobs = ran(up(touched.toDF(storageCols: _*), 1L)).jobs
+      assert(storeRows(store).filter(r => Set("g00", "g01")(r._1)).map(_._4) == Seq(31, 32))
+      jobs
+    }
+    val small = jobsInto(2)
+    val large = jobsInto(40)
+    assert(large == small, s"2 touched groups of a 40-group store ran $large jobs, of a 2-group store $small")
   }
 
   test("dynamic topic routing: per-topic dirs equal batch partitionBy across restart") {
